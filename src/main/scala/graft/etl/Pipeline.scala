@@ -1,7 +1,7 @@
 package graft.etl
 
 import org.apache.spark.sql.SparkSession
-import graft.sinks.JdbcSink
+import graft.sinks.PgCopySink
 import graft.sources.ParquetSource
 
 /** Object-key → readable URI resolution (reference: src/s3_download.rs).
@@ -27,7 +27,7 @@ object ObjectStore {
   * re-expressed Spark-first:
   *
   *   next_batch → one multi-path parquet scan → project desired_fields
-  *   → (optional) target-type casts → validated JDBC append →
+  *   → (optional) target-type casts → validated table append →
   *   mark each item completed.
   *
   * Differences by design, for 100 TB:
@@ -53,7 +53,7 @@ object Pipeline {
       // positional originals: duplicate desired_fields are projection-
       // legal (reference parquet_ops.rs) and must resolve aliases by
       // the user's field names, not the deduplicated column labels
-      total += JdbcSink.write(cast, cfg.db.connStr, cfg.db.tableName, aliases,
+      total += PgCopySink.write(cast, cfg.db.connStr, cfg.db.tableName, aliases,
         sourceFields = Some(cfg.parquet.desiredFields))
       batch.foreach(wl.markCompleted)
       batch = wl.nextBatch()

@@ -52,7 +52,7 @@ object EtlQueries {
     * Output shapes are chosen to be driver-hashable: a raw DECIMAL
     * output column is value-equal to the oracle but representation-
     * divergent under the driver's pyarrow-vs-duckdb compare
-    * (object(Decimal) vs float64 — the round-3 etl_cast regression), so
+    * (object(Decimal) vs float64), so
     * the scale-0 column exits through the decimal→bigint arm (int64)
     * and the numeric-passthrough arm runs inside the plan but is
     * re-emitted as double for the compare. Raw DECIMAL passthrough
@@ -88,12 +88,13 @@ object EtlQueries {
       |FROM orders
       |ORDER BY o_orderkey""".stripMargin
 
-  /** Full parquet→RDBMS→read-back roundtrip through the real JDBC sink
-    * (embedded Derby standing in for Postgres): a 10% keyed slice of
-    * lineitem is loaded via JdbcSink with aliasing, read back with
-    * spark.read.jdbc, and aggregated. The oracle computes the same
-    * aggregates from the parquet directly — equality proves the sink
-    * moved every row and every value bit-intact. */
+  /** Full parquet→RDBMS→read-back roundtrip through the table sink's
+    * INSERT arm (embedded Derby standing in for a JDBC warehouse): a
+    * 10% keyed slice of lineitem is loaded via PgCopySink with
+    * aliasing, read back with spark.read.jdbc, and aggregated. The
+    * oracle computes the same aggregates from the parquet directly —
+    * equality proves the sink moved every row and every value
+    * bit-intact. */
   def jdbcRoundtrip(s: SparkSession, d: String): DataFrame = {
     // ONE fixed in-memory db per JVM, table recreated per call:
     // Derby in-memory databases live until dropped, so a unique name
@@ -109,7 +110,7 @@ object EtlQueries {
     val slice = Tables.lineitem(s, d)
       .filter(pmod(col("l_orderkey"), lit(10)) === 0)
       .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"))
-    graft.sinks.JdbcSink.write(slice, url, "rt_t", Map(
+    graft.sinks.PgCopySink.write(slice, url, "rt_t", Map(
       "l_orderkey" -> Some("order_id"), "l_quantity" -> Some("qty"),
       "l_extendedprice" -> Some("price")))
     s.read.format("jdbc").option("url", url).option("dbtable", "rt_t").load()
@@ -124,7 +125,7 @@ object EtlQueries {
        |FROM lineitem
        |WHERE l_orderkey % 10 = 0""".stripMargin
 
-  /** Live-PostgreSQL roundtrip (r11 verdict items 1+2): orders →
+  /** Live-PostgreSQL roundtrip: orders →
     * per-partition binary COPY over graft's OWN protocol-v3 wire
     * client ([[graft.sinks.PgWire]] — no pgjdbc jar anywhere) into a
     * throwaway PostgreSQL 15 instance ([[graft.sinks.PgServer]], one
@@ -218,12 +219,10 @@ object EtlQueries {
     val mid = src.agg(max(col("order_id"))).head().getLong(0) / 2
     // round 1: initial half-load; rounds 2-3: catch-up from the
     // target's own watermark (round 3 finds nothing — a no-op)
-    graft.sinks.JdbcSink.write(src.filter(col("order_id") <= mid),
-      url, "inc_t", Map.empty[String, Option[String]])
+    graft.sinks.PgCopySink.write(src.filter(col("order_id") <= mid), url, "inc_t")
     for (_ <- 1 to 2) {
       val hw = highWatermark()
-      graft.sinks.JdbcSink.write(src.filter(col("order_id") > hw),
-        url, "inc_t", Map.empty[String, Option[String]])
+      graft.sinks.PgCopySink.write(src.filter(col("order_id") > hw), url, "inc_t")
     }
     s.read.format("jdbc").option("url", url).option("dbtable", "inc_t").load()
       .agg(count(lit(1)).as("n_rows"),
@@ -279,7 +278,7 @@ object EtlQueries {
     val key = s"${d.replaceAll("[^a-zA-Z0-9]", "_")}_${mtimeKey(d, table)}"
     val tmp = new java.io.File(sys.props("java.io.tmpdir"))
     val dir = new java.io.File(tmp, s"graft_${prefix}_${key}_p${ProcessHandle.current().pid()}")
-    // Sweep criterion: STALE mtime AND DEAD owner (review r12). mtime
+    // Sweep criterion: STALE mtime AND DEAD owner. mtime
     // alone was unsound — a dir's mtime only changes when its direct
     // children change, so a live process that built its store >3 h ago
     // and is still lazily READING it (without re-invoking scratchDir)
@@ -287,7 +286,7 @@ object EtlQueries {
     // the dir name precisely so liveness is checkable: a dir whose
     // owner is still alive is NEVER swept, however old; the 3 h mtime
     // cutoff then only guards against pid reuse after a reboot. Key
-    // mismatch alone must never delete either (review r11) — a
+    // mismatch alone must never delete either — a
     // different key may be a live process on a different sf dir.
     val cutoff = System.currentTimeMillis() - 3L * 3600 * 1000
     def ownerAlive(name: String): Boolean =
@@ -570,7 +569,7 @@ object EtlQueries {
     * mtimes across the v2 commit and drive the AS OF reader. */
   def timeTravelBase(d: String): String = scratchDir("ttravel", d, "orders")
 
-  /** `etl_delta_export` — lakehouse INTEROP (r12 verdict item 1): the
+  /** `etl_delta_export` — lakehouse INTEROP: the
     * manifest MVCC store exported as a public-protocol Delta
     * transaction log (`_delta_log/%020d.json`, delta-io PROTOCOL.md),
     * then read back THROUGH THE EXPORTED LOG ONLY — the manifests are
@@ -615,7 +614,7 @@ object EtlQueries {
       .collect() // bounded: one metadata row per add/remove action
     val maxDv = acts.map(_.getLong(0)).max
     (0L to maxDv).map { dv =>
-      // ordered replay (review r13): the LAST action per path decides
+      // ordered replay: the LAST action per path decides
       // — a remove only kills adds AT OR BEFORE it, so a later re-add
       // (version revert) revives the path, matching DeltaImport's
       // line-ordered semantics instead of a kill-forever remove set
@@ -807,7 +806,7 @@ object EtlQueries {
     base
   }
 
-  /** `etl_delta_import` — the READ side of lakehouse interop (r13):
+  /** `etl_delta_import` — the READ side of lakehouse interop:
     * a foreign Delta table (non-hive layout, partition values only in
     * the log, commitInfo noise, an overwritten partition whose stale
     * files still sit on disk) is mounted AS OF each version through
@@ -919,7 +918,7 @@ object EtlQueries {
   }
 
   /** `etl_delta_checkpoint` — the long-history scale path of the
-    * exported Delta log (r13): a 12-version append-only history is
+    * exported Delta log: a 12-version append-only history is
     * exported, checkpointed at version 9
     * ([[graft.etl.DeltaCheckpoint]] — protocol checkpoint parquet +
     * `_last_checkpoint`), and then mounted twice through the generic
@@ -1097,7 +1096,7 @@ object EtlQueries {
       // The v1 manifest falls FIRST: it is the tombstone the crash-retry
       // guard above checks, so a crash mid-sweep (some dirs gone) leaves
       // a store the retry provably rebuilds instead of one whose guard
-      // still passes but whose swept paths 404 (r9 advice).
+      // still passes but whose swept paths 404.
       val liveAfter = {
         java.nio.file.Files.deleteIfExists(
           java.nio.file.Paths.get(s"$base/manifests/v1.txt"))
@@ -1288,7 +1287,7 @@ object EtlQueries {
     val cloneBase = scratchDir("clone", d, "orders")
     val srcV2 = readManifest(srcBase, 2)
     // Register each clone manifest under the SOURCE store's clones/
-    // dir too (r10 advice): a sweep of the source store consults its
+    // dir too: a sweep of the source store consults its
     // own clones/ registrations (the vacuumRefs cloneRefs discipline),
     // so a clone whose manifest lives only under its own root protects
     // nothing — the exact dangling-ref hazard shallow clones create.
@@ -1428,7 +1427,7 @@ object EtlQueries {
           // A crash AFTER the rename but BEFORE the audit _SUCCESS leaves
           // files/<name> already present on retry; the orphan is
           // overwritten (versionedSink's discipline) so the retry cannot
-          // wedge on a rename into an existing dir (r9 advice).
+          // wedge on a rename into an existing dir.
           val dest = new java.io.File(s"$base/files/$name")
           if (dest.exists()) deleteRecursively(dest)
           require(new java.io.File(s"$base/staging/$name")
@@ -1474,7 +1473,7 @@ object EtlQueries {
     *
     * 100 TB: multi-pipeline deployments commit concurrently as a fact
     * of life; last-write-wins silently DROPS a committer's partitions
-    * from the manifest (the r10 store's one production gap). The CAS
+    * from the manifest. The CAS
     * costs one link(2) regardless of table size, conflicts resolve in
     * O(manifest) for disjoint writers, and only true write-write
     * overlap pays a recompute — the same contention model Delta's
@@ -1573,8 +1572,8 @@ object EtlQueries {
   /** Concurrent-commit store base, exposed for CommitProtocolSpec. */
   def concurrentCommitBase(d: String): String = scratchDir("ccommit", d, "orders")
 
-  /** `etl_manifest_scale` — version resolution at commit-history scale
-    * (r11 verdict item 4): 1100 CAS commits drive the store across the
+  /** `etl_manifest_scale` — version resolution at commit-history
+    * scale: 1100 CAS commits drive the store across the
     * [[graft.etl.ManifestCommit.GroupSize]] gate, where the layout
     * rolls from flat `v<N>.txt` into the two-level manifest-of-
     * manifests (`g<k>/v<N>.txt`, Iceberg's shape) — so resolution
@@ -1590,7 +1589,7 @@ object EtlQueries {
     * sign; stale-manifest reads break the parity), plus the resolved
     * current version.
     *
-    * 100 TB: a long-lived table accretes 10⁵+ commits; r11's flat
+    * 100 TB: a long-lived table accretes 10⁵+ commits; a flat
     * listing paid O(versions) per resolution (and an object-store
     * LIST per 1000 keys). The grouped layout bounds the flat portion
     * at GroupSize entries forever and resolves newest-first group by
@@ -1956,12 +1955,12 @@ object EtlQueries {
   def readManifest(base: String, v: Int): Seq[(Int, String)] =
     // ONE parser definition with the commit protocol (grouped path +
     // tab format live in ManifestCommit; a second copy here already
-    // drifted once — review r12)
+    // drifted once)
     graft.etl.ManifestCommit.readManifest(base, v)
 
   private def writeManifest(base: String, v: Int, entries: Seq[(Int, String)]): Unit = {
-    // CAS-create via ManifestCommit (r11 — one commit discipline for
-    // the whole lakehouse family): the manifest's EXISTENCE is the
+    // CAS-create via ManifestCommit (one commit discipline for the
+    // whole lakehouse family): the manifest's EXISTENCE is the
     // commit marker, visibility is all-or-nothing (staged tmp + hard
     // link), and the FIRST writer owns the version. These stores'
     // versions are deterministic functions of the source state, so a
@@ -2290,7 +2289,7 @@ object EtlQueries {
     * discipline — estimates are deterministic, not approximately
     * compared). Exact row/null counts ride the same pass.
     *
-    * Adjudicated residual (r10, [[graft.KmvProfile]] decomposition at
+    * Adjudicated residual ([[graft.KmvProfile]] decomposition at
     * sf0.1, min-of-5 one JVM): count-only floor 356 ms; + the 7-column
     * decode (raw isNull sums, zero repr/sketch work) 953 ms; + repr
     * expressions 1123 ms; full query 1210 ms. The sketch machinery is
@@ -2299,7 +2298,7 @@ object EtlQueries {
     * group (10.8 MB), and parquet cannot split below a row group, so
     * no Spark plan parallelizes that scan (DuckDB reads the same row
     * group with a faster native decoder — that differential, not the
-    * sketch, is the 2.4× ratio). The r10 digest-skip cache removed the
+    * sketch, is the 2.4× ratio). The digest-skip cache removed the
     * duplicate-value md5s (1.56 → 1.23 s best-of); at any real layout
     * (multi-row-group files) the decode parallelizes and the query
     * rides the floor. */
@@ -2328,7 +2327,7 @@ object EtlQueries {
     // (column × task). The residual over the action floor is the
     // per-value Java digest+TreeSet work a TypedImperativeAggregate
     // pays outside codegen — the price of an oracle-replayable hash.
-    // null counts check the RAW column, not the repr (r10, KmvProfile
+    // null counts check the RAW column, not the repr (KmvProfile
     // finding): every repr is null-preserving (casts, floor·100,
     // date_format of a non-null date), so the two are equal — but
     // evaluating the full cast/format chain per row just for isNull
@@ -2665,9 +2664,9 @@ object EtlQueries {
     * ROUND(x*100), not FLOOR: a 2-decimal price stored as a double is
     * the nearest IEEE neighbor of k/100, which can sit a hair BELOW the
     * true rational (19.99*100 = 1998.9999…), and floor would then land
-    * on k-1 cents — off-by-one lo/hi bounds and bucket edges (advice
-    * r8). ROUND recovers the exact integer k on both engines (positive
-    * money, so half-up vs half-away never diverges).
+    * on k-1 cents — off-by-one lo/hi bounds and bucket edges. ROUND
+    * recovers the exact integer k on both engines (positive money, so
+    * half-up vs half-away never diverges).
     *
     * 100 TB: one min/max scalar broadcast into a scan-side bucket
     * projection, then a 16-group map-side-combined aggregate — the

@@ -3,8 +3,8 @@ package graft.sinks
 import java.sql.DriverManager
 import org.apache.spark.sql.DataFrame
 
-/** Set-based JDBC upsert: stage the batch with the parallel batched-
-  * insert sink, then ONE `MERGE` from staging into the target — the
+/** Set-based JDBC upsert: stage the batch with the parallel table sink
+  * ([[PgCopySink]]), then ONE `MERGE` from staging into the target — the
   * production CDC-apply pattern (idempotent per batch, no per-row
   * round trips; executors never hold write locks on the target, only
   * the single MERGE statement does).
@@ -28,9 +28,9 @@ object JdbcUpsert {
       orderCols: Seq[String] = Seq.empty): Unit = {
     require(cols.headOption.contains(key),
       s"cols must lead with the merge key '$key', got $cols")
-    // ONE materialization for both the null audit and the staged write
-    // (review r11): unpersisted, a multi-join CDC batch would execute
-    // its whole upstream twice per trigger
+    // ONE materialization for both the null audit and the staged write:
+    // unpersisted, a multi-join CDC batch would execute its whole
+    // upstream twice per trigger
     batch.persist()
     try {
       // a NULL in any order column makes the MATCHED guard UNKNOWN and
@@ -48,7 +48,7 @@ object JdbcUpsert {
       try {
         conn.createStatement().execute(s"DELETE FROM $staging")
       } finally conn.close()
-      JdbcSink.write(batch, url, staging, Map.empty[String, Option[String]])
+      PgCopySink.write(batch, url, staging)
     } finally { batch.unpersist(); () }
     val sets = cols.filterNot(_ == key)
       .map(c => s"t.$c = s.$c").mkString(", ")
@@ -58,12 +58,12 @@ object JdbcUpsert {
     // side cannot be) must not make the guard UNKNOWN and silently
     // drop the update — but "NULL anywhere ⇒ overwrite" is too eager:
     // a target with a NEWER leading column and a NULL in a lower-
-    // significance one would be clobbered by an older change (review
-    // r12). NULL loses WITHIN the lexicographic walk instead: branch i
-    // treats t.ci IS NULL as a win only after s.cj = t.cj held for all
-    // j < i (a NULL at a column the comparison never reaches is
-    // irrelevant; a NULL at the decisive column means "no version info
-    // from here on" and the incoming change wins).
+    // significance one would be clobbered by an older change. NULL
+    // loses WITHIN the lexicographic walk instead: branch i treats
+    // t.ci IS NULL as a win only after s.cj = t.cj held for all j < i
+    // (a NULL at a column the comparison never reaches is irrelevant;
+    // a NULL at the decisive column means "no version info from here
+    // on" and the incoming change wins).
     val guard =
       if (orderCols.isEmpty) ""
       else " AND (" +

@@ -1,9 +1,11 @@
 package graft.sinks
 
 import java.io.{ByteArrayOutputStream, DataOutputStream, InputStream}
-import java.sql.{Connection, DriverManager}
+import java.sql.DriverManager
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.datasources.jdbc.{JdbcOptionsInWrite, JdbcUtils}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.jdbc.JdbcDialects
 import org.apache.spark.sql.types._
 
 /** PGCOPY binary encoder — the wire format `COPY ... FROM STDIN WITH
@@ -19,9 +21,9 @@ import org.apache.spark.sql.types._
   *
   * Payloads: int2/int4/int8, float4/float8 (IEEE bits), bool (1 byte),
   * text (UTF-8), bytea (raw), date (int4 days since 2000-01-01),
-  * timestamp (int8 µs since 2000-01-01), numeric (base-10000 digit
-  * groups — completing the DECIMAL arm the reference leaves
-  * half-finished, converters.rs:84,101-114).
+  * timestamp and timestamp_ntz (int8 µs since 2000-01-01), numeric
+  * (base-10000 digit groups — completing the DECIMAL arm the reference
+  * leaves half-finished, converters.rs:84,101-114).
   */
 object PgBinaryCopy {
 
@@ -118,6 +120,15 @@ object PgBinaryCopy {
         case other => throw new IllegalArgumentException(
           s"unexpected timestamp external: ${other.getClass.getName}")
       }
+      // a TIMESTAMP_NTZ is a wall clock: its fields count as if UTC, so
+      // it lands unshifted in a PG `timestamp` column (toEpochSecond
+      // floors and getNano is non-negative, so pre-1970 is exact)
+      case TimestampNTZType => Some { v =>
+        val t = v.asInstanceOf[java.time.LocalDateTime]
+        val us = Math.addExact(Math.multiplyExact(
+          t.toEpochSecond(java.time.ZoneOffset.UTC), 1000000L), t.getNano / 1000L)
+        be(8)(_.writeLong(us - PgEpochUs))
+      }
       case _: DecimalType => Some(v =>
         encodeNumeric(v.asInstanceOf[java.math.BigDecimal]))
       case _ => None
@@ -171,146 +182,165 @@ object PgBinaryCopy {
   }
 }
 
-/** Postgres fast-path sink: per-partition binary `COPY FROM STDIN`
-  * over graft's own protocol-v3 client ([[PgWire]]) — the reference's
-  * entire loading strategy (db.rs:167-177 BinaryCopyInWriter),
-  * distributed across N executor partitions instead of one socket,
-  * and carrying NO driver-jar dependency (the r11 reflective
-  * CopyManager leg is gone; the wire client is live-accepted against
-  * PostgreSQL 15 in PgLiveSpec). Typically 2-5× a batched INSERT per
-  * connection on a real Postgres target.
+/** The one table sink — the reference's validated writer (db.rs
+  * Db::connect + BinaryCopyInWriter, db.rs:167-177) distributed across
+  * executor partitions:
   *
-  * Non-postgres URLs transparently fall back to [[JdbcSink]]'s batched
-  * INSERTs — same validation, same row-count contract (fallback
-  * exercised against Derby in PgCopySpec; the encoder itself is
-  * golden-byte, roundtrip, and live-server proven). A postgres target
-  * whose schema has a column with no PG binary mapping fails loudly:
-  * with no driver jar there is no INSERT path to fall back to, and
-  * silently skipping columns would be worse.
+  *  - connect-time validation of the parquet→db column mapping against
+  *    the live table schema: every dataframe column must land on an
+  *    existing db column, via the optional alias map (`parquet_to_db`)
+  *    or by bearing the same name; a missing table, missing column or
+  *    unknown alias is an error BEFORE any data moves.
+  *  - `jdbc:postgresql:` targets load by per-partition binary `COPY FROM
+  *    STDIN` over graft's own protocol-v3 client ([[PgWire]]), with no
+  *    driver jar. A column with no PG binary mapping fails loudly: with
+  *    no driver jar there is no INSERT path to fall back to, and
+  *    silently skipping columns would be worse.
+  *  - any other JDBC url loads through Spark's batched-INSERT partition
+  *    writer (type binding, NULLs, one transaction per partition).
+  *
+  * One Spark job per write: every partition returns the rows it loaded
+  * (the server's `COPY n`, or the rows the INSERT writer bound) and the
+  * driver sums them, so nothing is persisted and nothing is counted
+  * twice.
   */
 object PgCopySink {
+
+  private val InsertBatchSize = 10000
 
   private[graft] def isPostgres(url: String): Boolean =
     url.startsWith("jdbc:postgresql:")
 
-  /** Same contract as JdbcSink.write (validation, aliasing, returned
-    * row count); routes to binary COPY when the target is Postgres and
-    * the driver + schema support it.
+  /** Validated append of `df` to `table`; returns the rows loaded.
+    *
+    * @param sourceFields the ORIGINAL parquet field names, positional
+    *   with df's columns — pass when upstream projection renamed
+    *   duplicates (desired_fields with repeats), so aliases resolve on
+    *   the user's names, not synthesized ones. Duplicate TARGETS are an
+    *   error either way (one load cannot set a column twice).
     *
     * Semantics notes (vs the single-socket reference loader):
-    *  - at-least-once per partition: each partition COPYs in its own
-    *    autocommitted round trip, so a Spark task retry or speculative
-    *    duplicate re-sends that partition. The returned count is the
-    *    EXACT input row count (renamed.count(), same contract as
-    *    JdbcSink); when `verifyCount` is on (default), write compares
-    *    the target table's before/after COUNT(*) delta against it and
-    *    throws if a retry actually double-loaded. (An accumulator
-    *    cannot detect this: Spark discards accumulator updates from
-    *    failed and speculative attempts, so it always equals the input
-    *    count even when a half-failed attempt's COPY committed.) The
+    *  - at-least-once per partition: each partition loads in its own
+    *    committed round trip (an autocommitted COPY, or one INSERT
+    *    transaction), so a Spark task retry or speculative duplicate
+    *    re-sends that partition. The returned sum is the EXACT input row
+    *    count, because Spark keeps only the successful attempt's result;
+    *    for the same reason it cannot see a failed attempt's commit. So
+    *    write compares the target table's before/after COUNT(*) delta
+    *    against it and throws if a retry actually double-loaded. The
     *    delta check assumes this writer is the table's only concurrent
-    *    writer; disable it for huge targets where COUNT(*) is
-    *    prohibitive. Exactly-once needs a staging table + rename,
-    *    which a caller can layer on top.
+    *    writer. Exactly-once needs a staging table + rename, which a
+    *    caller can layer on top.
     *  - timestamps are encoded as the UTC instant (PG binary µs), which
     *    is correct for `timestamptz` targets or UTC server/session
     *    timezones; a PG wall-clock `timestamp` column written from a
-    *    non-UTC session observes the session shift. */
+    *    non-UTC session observes the session shift. TIMESTAMP_NTZ values
+    *    are wall clocks and land unshifted in a `timestamp` column. */
   def write(df: DataFrame, url: String, table: String,
       aliases: Map[String, Option[String]] = Map.empty,
-      batchSize: Int = 10000,
-      sourceFields: Option[Seq[String]] = None,
-      verifyCount: Boolean = true): Long = {
-    val encoders = df.schema.fields.map(f => PgBinaryCopy.fieldEncoder(f.dataType))
-    if (!isPostgres(url)) {
-      // The INSERT fallback has the same at-least-once hazard (per-
-      // partition autocommitted batches), so verifyCount applies to it
-      // too — the delta check must not silently vanish on fallback.
-      val before =
-        if (verifyCount && JdbcSink.tableColumns(url, table).nonEmpty)
-          Some(tableCount(url, table))
-        else None // missing table: let JdbcSink raise its own error
-      val n = JdbcSink.write(df, url, table, aliases, batchSize, sourceFields)
-      before.foreach { b =>
-        val landed = tableCount(url, table) - b
-        if (landed != n)
-          throw new IllegalStateException(
-            s"INSERT landed $landed rows for $n inputs — a task retry or " +
-              "speculative duplicate re-sent a partition (per-partition " +
-              "batches are at-least-once); de-duplicate the target or " +
-              "reload through a staging table")
-      }
-      return n
-    }
-
-    encoders.zip(df.schema.fields).foreach { case (e, f) =>
-      if (e.isEmpty) throw new IllegalArgumentException(
-        s"column '${f.name}': ${f.dataType.simpleString} has no PG binary " +
-          "mapping — project it away or load through a jdbc driver")
-    }
-    val target = PgWire.parse(url)
-    // connect-time validation + aliasing — identical to the INSERT path
-    // (mirrors db.rs Db::connect: fail before any data moves)
-    val dbCols = pgTableColumns(target, table)
+      sourceFields: Option[Seq[String]] = None): Long = {
+    val dbCols = tableColumns(url, table)
     if (dbCols.isEmpty)
       throw new IllegalArgumentException(s"table '$table' does not exist in connected db")
     val originals = sourceFields.getOrElse(df.columns.toSeq)
     require(originals.length == df.columns.length,
       s"sourceFields size ${originals.length} != dataframe width ${df.columns.length}")
-    val mapping = JdbcSink.resolveColumns(originals, dbCols, aliases)
-    val targets = mapping.map(_._2)
+    val targets = resolveColumns(originals, dbCols, aliases)
     require(targets.distinct.length == targets.length,
       s"duplicate target column(s): ${targets.diff(targets.distinct).distinct.mkString(", ")}")
     val renamed = df.select(df.columns.toSeq.zip(targets)
       .map { case (c, t) => col(c).as(t) }: _*)
 
-    val encs = encoders.map(_.get)
-    val colList = targets.map(t => s""""$t"""").mkString(", ")
-    val copySql = s"""COPY $table ($colList) FROM STDIN WITH (FORMAT binary)"""
-    // persist across copy+count (same rationale as JdbcSink: the exact
-    // count must not re-execute the upstream, and both passes must see
-    // the same rows)
-    renamed.persist()
-    try {
-      val before = if (verifyCount) pgTableCount(target, table) else 0L
-      renamed.foreachPartition { (rows: Iterator[Row]) =>
-        if (rows.nonEmpty) {
-          val conn = PgWire.connect(target)
-          try { conn.copyIn(copySql, new PgBinaryCopy.RowStream(rows, encs)); () }
-          finally conn.close()
-        }
-      }
-      val exact = renamed.count()
-      if (verifyCount) {
-        val landed = pgTableCount(target, table) - before
-        if (landed != exact)
-          throw new IllegalStateException(
-            s"COPY landed $landed rows for $exact inputs — a task retry " +
-              "or speculative duplicate re-sent a partition (per-" +
-              "partition COPY is at-least-once); de-duplicate the " +
-              "target or reload through a staging table")
-      }
-      exact
-    } finally renamed.unpersist()
+    val load: Iterator[Row] => Long =
+      if (isPostgres(url)) copyLoader(PgWire.parse(url), table, renamed.schema)
+      else insertLoader(url, table, renamed.schema)
+    val before = tableCount(url, table)
+    val loaded = renamed.rdd.mapPartitions(rows => Iterator(load(rows))).collect().sum
+    val landed = tableCount(url, table) - before
+    if (landed != loaded)
+      throw new IllegalStateException(
+        s"load landed $landed rows for $loaded inputs — a task retry or " +
+          "speculative duplicate re-sent a partition (per-partition loads " +
+          "are at-least-once); de-duplicate the target or reload through " +
+          "a staging table")
+    loaded
   }
 
-  /** COUNT(*) of the target table — the before/after delta is the only
-    * retry-duplication signal visible from the driver (executor-side
-    * accumulators never see failed-attempt commits). */
-  private def tableCount(url: String, table: String): Long = {
+  /** Resolve the dataframe→db column names through the alias map and
+    * fail fast on anything that doesn't land on a real column. */
+  private def resolveColumns(dfCols: Seq[String], dbCols: Seq[String],
+      aliases: Map[String, Option[String]]): Seq[String] = {
+    val dbSet = dbCols.toSet
+    dfCols.map { c =>
+      val target = aliases.get(c).flatten.getOrElse(c)
+      if (aliases.get(c).flatten.isDefined && !dbSet.contains(target.toLowerCase))
+        throw new IllegalArgumentException(
+          s"alias '$target' for parquet field '$c' is not a column of the target table")
+      if (!dbSet.contains(target.toLowerCase))
+        throw new IllegalArgumentException(
+          s"parquet field '$c' has no alias and no same-named column in the target table")
+      target
+    }
+  }
+
+  /** One partition → one binary COPY on its own connection; returns the
+    * server's `COPY n`. Empty partitions open no connection. */
+  private def copyLoader(t: PgWire.Target, table: String,
+      schema: StructType): Iterator[Row] => Long = {
+    val encs = schema.fields.map(f => PgBinaryCopy.fieldEncoder(f.dataType).getOrElse(
+      throw new IllegalArgumentException(
+        s"column '${f.name}': ${f.dataType.simpleString} has no PG binary " +
+          "mapping — project it away or load through a jdbc driver")))
+    val colList = schema.fieldNames.map(c => s""""$c"""").mkString(", ")
+    val copySql = s"COPY $table ($colList) FROM STDIN WITH (FORMAT binary)"
+    rows =>
+      if (!rows.hasNext) 0L
+      else {
+        val conn = PgWire.connect(t)
+        try conn.copyIn(copySql, new PgBinaryCopy.RowStream(rows, encs))
+        finally conn.close()
+      }
+  }
+
+  /** One partition → Spark's batched INSERTs in one transaction; returns
+    * the rows it bound. The statement names the table's own columns
+    * (Derby and others fold unquoted names to upper case, and the
+    * insert quotes what it is given). */
+  private def insertLoader(url: String, table: String,
+      schema: StructType): Iterator[Row] => Long = {
+    val opts = new JdbcOptionsInWrite(url, table, Map.empty[String, String])
+    val dialect = JdbcDialects.get(url)
+    val insert = JdbcUtils.getInsertStatement(table, schema,
+      jdbcTableSchema(url, table), false, dialect)
+    rows => {
+      var n = 0L
+      JdbcUtils.savePartition(table, rows.map { r => n += 1; r }, schema, insert,
+        InsertBatchSize, dialect, opts.isolationLevel, opts)
+      n
+    }
+  }
+
+  /** Lower-cased columns of `table` in ordinal order; empty when the
+    * table does not exist. */
+  private[graft] def tableColumns(url: String, table: String): Seq[String] =
+    if (isPostgres(url)) pgTableColumns(PgWire.parse(url), table)
+    else jdbcTableSchema(url, table).toSeq.flatMap(_.fieldNames.map(_.toLowerCase))
+
+  /** The schema of `SELECT * FROM table WHERE 1=0` — the same name
+    * resolution the INSERT itself gets, so there is no metadata search
+    * pattern to escape. */
+  private def jdbcTableSchema(url: String, table: String): Option[StructType] = {
     val conn = DriverManager.getConnection(url)
-    try {
-      val rs = conn.createStatement().executeQuery(s"SELECT COUNT(*) FROM $table")
-      rs.next(); rs.getLong(1)
-    } finally conn.close()
+    try JdbcUtils.getSchemaOption(conn,
+      new JdbcOptionsInWrite(url, table, Map.empty[String, String]))
+    finally conn.close()
   }
 
-  /** Columns of `table` in ordinal order, lower-cased, via the wire
-    * client (PG folds unquoted identifiers to lower case, so the
-    * lookup key is the lower-cased name — the JDBC-metadata analogue
-    * of [[JdbcSink.tableColumns]]). information_schema is a plain
-    * query: no metadata API, no search-pattern escaping hazard. */
-  private[graft] def pgTableColumns(t: PgWire.Target, table: String): Seq[String] = {
+  /** Columns of a Postgres `table` via the wire client (PG folds
+    * unquoted identifiers to lower case, so the lookup key is the
+    * lower-cased name). information_schema is a plain query: no
+    * metadata API, no search-pattern escaping hazard. */
+  private def pgTableColumns(t: PgWire.Target, table: String): Seq[String] = {
     // a schema-qualified target ('etl.orders') must be looked up as
     // (table_schema='etl', table_name='orders') — querying
     // table_name='etl.orders' in current_schema() finds nothing and
@@ -330,9 +360,20 @@ object PgCopySink {
     finally conn.close()
   }
 
-  private def pgTableCount(t: PgWire.Target, table: String): Long = {
-    val conn = PgWire.connect(t)
-    try conn.query(s"SELECT COUNT(*) FROM $table")._2.head(0).toLong
-    finally conn.close()
+  /** COUNT(*) of the target table — the before/after delta is the only
+    * retry-duplication signal visible from the driver. */
+  private def tableCount(url: String, table: String): Long = {
+    val sql = s"SELECT COUNT(*) FROM $table"
+    if (isPostgres(url)) {
+      val conn = PgWire.connect(PgWire.parse(url))
+      try conn.query(sql)._2.head(0).toLong
+      finally conn.close()
+    } else {
+      val conn = DriverManager.getConnection(url)
+      try {
+        val rs = conn.createStatement().executeQuery(sql)
+        rs.next(); rs.getLong(1)
+      } finally conn.close()
+    }
   }
 }

@@ -4,13 +4,13 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 import graft.etl.TypeMapping
-import graft.sinks.JdbcSink
+import graft.sinks.PgCopySink
 import graft.sources.ParquetSource
 
 /** Continuous-ingest mode of the reference's ETL loop
   * (reference: src/runner.rs:48-113): instead of draining a todo file,
   * a FileStreamSource watches the landing prefix and every micro-batch
-  * runs the same project → cast → validated-JDBC-append stages.
+  * runs the same project → cast → validated table-append stages.
   *
   * Restartability comes from the streaming checkpoint instead of the
   * todo/wip/completed work lists: source offsets (which files are
@@ -37,8 +37,8 @@ object StreamingPipeline {
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
         // sourceFields: alias resolution must see the USER's field
         // names, not selectFields' deduped '_N' labels (the
-        // Pipeline.run discipline — review r11)
-        JdbcSink.write(batch, url, table, aliases,
+        // Pipeline.run discipline)
+        PgCopySink.write(batch, url, table, aliases,
           sourceFields = Some(desiredFields))
         ()
       }

@@ -55,8 +55,7 @@ object Streams extends Serializable {
     // when the caller did not configure one.
     // capacity-gated: containers often mount /dev/shm at 64 MB, where
     // state deltas would hit ENOSPC mid-batch — require real headroom
-    // (1 GiB) before preferring RAM over the disk default (review
-    // finding r8)
+    // (1 GiB) before preferring RAM over the disk default
     val shm = new java.io.File("/dev/shm")
     val ckpt: Option[java.nio.file.Path] =
       if (shm.isDirectory && shm.canWrite &&
@@ -380,7 +379,7 @@ object Streams extends Serializable {
     * is what closed them). File-ordered replay cannot produce a
     * violation; if replay ever stops being ordered, this fails the
     * query loudly at action time instead of silently hash-diverging
-    * from the oracle (ADVICE r4). */
+    * from the oracle. */
   private def assertSessionSeparation(sessions: DataFrame, gapSec: Long): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("start"))
@@ -416,7 +415,7 @@ object Streams extends Serializable {
     import s.implicits._
     import java.nio.file.Files
     val HbUser = -999999L
-    // CHECKED, not assumed (review r11): a real event on the sentinel
+    // CHECKED, not assumed: a real event on the sentinel
     // key would merge into its session state and be silently dropped
     // with it — same scan as the heartbeat anchor, so the guard is free
     val anchor = graft.Tables.events(s, d)
@@ -474,8 +473,8 @@ object Streams extends Serializable {
       cur.foreach { c =>
         // CEILING ms: floor truncation of sub-ms lastUs could fire the
         // timeout up to 1 ms before last+gap elapses, closing a session
-        // a boundary event at exactly lastUs+gap must extend (review
-        // r11; both the state-machine arm and the oracle use > gap)
+        // a boundary event at exactly lastUs+gap must extend (both the
+        // state-machine arm and the oracle use > gap)
         val closeAtMs = (c.lastUs + 999L) / 1000L + gapSec * 1000L
         if (closeAtMs <= state.getCurrentWatermarkMs()) {
           closed ::= c // watermark already beyond last+gap: close now
@@ -567,7 +566,7 @@ object Streams extends Serializable {
     import s.implicits._
     import java.nio.file.Files
     val HbType = "heartbeat"
-    // CHECKED, not assumed (review r11): real rows of the sentinel
+    // CHECKED, not assumed: real rows of the sentinel
     // type would merge into its windows and be dropped by the
     // post-materialization filter — same scan as the anchor lookup
     val anchor = graft.Tables.events(s, d).agg(max(col("ts")),
@@ -697,15 +696,15 @@ object Streams extends Serializable {
       // discipline: without the content key, regenerating the events
       // data at the same path within one process leaves stale manifests
       // whose batch ids match, so every commit skips as
-      // "already committed" and the audit reports the OLD data (r9
-      // advice). The fingerprint folds each file's (name, length,
+      // "already committed" and the audit reports the OLD data. The
+      // fingerprint folds each file's (name, length,
       // mtime), sorted, so a regenerated source lands in a fresh store.
       val key = d.replaceAll("[^a-zA-Z0-9]", "_")
       val fp = graft.SourceKey.of(d, "events") // the shared fingerprint
       s"${sys.props("java.io.tmpdir")}/graft_vsink_${key}_${fp}_p${ProcessHandle.current().pid()}"
     }
     new java.io.File(s"$base/manifests").mkdirs()
-    // ONE manifest-naming definition (ManifestCommit) — review r11
+    // ONE manifest-naming definition (ManifestCommit)
     def manifestPath(v: Long) =
       java.nio.file.Paths.get(graft.etl.ManifestCommit.manifestPath(base, v))
     def readManifest(v: Long): Seq[String] = {
@@ -719,7 +718,7 @@ object Streams extends Serializable {
       // sound while batchId→input is stable, and without a checkpoint
       // batch ids restart at 0 with whatever batching the NEXT run
       // uses (a different maxFilesPerTrigger would then double-count
-      // under the presence-check skip — review r11). With the offsets
+      // under the presence-check skip). With the offsets
       // log pinned to the store, a re-run resumes instead of replaying,
       // which is the Delta (queryId, batchId) discipline this sink
       // cites.
@@ -733,7 +732,7 @@ object Streams extends Serializable {
           // grouped layout past the GroupSize gate needs its group dir
           manifestPath(v).toFile.getParentFile.mkdirs()
           val entries = (if (v == 1) Nil else readManifest(v - 1)) :+ rel
-          // CAS-create (ManifestCommit discipline, r11): a plain write
+          // CAS-create (ManifestCommit discipline): a plain write
           // crashed mid-stream would leave a truncated manifest whose
           // PRESENCE reads as a commit; staged-tmp + link(2) makes the
           // marker all-or-nothing, and a lost race (replayed batch,
@@ -786,7 +785,7 @@ object Streams extends Serializable {
       |FROM events""".stripMargin
 
   /** `stream_delta_sink` — the versioned streaming sink published as a
-    * Delta table (r13): the stream lands through the SAME exactly-once
+    * Delta table: the stream lands through the SAME exactly-once
     * commit discipline as stream_versioned_sink (idempotent
     * batchId-keyed manifests, CAS markers), then every commit is
     * exported as one Delta-log version
@@ -914,7 +913,7 @@ object Streams extends Serializable {
       // fail the precondition loudly: create=true silently makes an
       // EMPTY database, and the first micro-batch would then die with
       // an opaque missing-table SQLException inside foreachBatch
-      require(graft.sinks.JdbcSink.tableColumns(url, "ups_t").nonEmpty,
+      require(graft.sinks.PgCopySink.tableColumns(url, "ups_t").nonEmpty,
         s"streamUpsert(reset=false) requires an existing ups_t table in $dbName")
     }
     val cols = Seq("user_id", "last_ts", "last_event_id", "last_value")

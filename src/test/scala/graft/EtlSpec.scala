@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.etl._
-import graft.sinks.JdbcSink
+import graft.sinks.PgCopySink
 import graft.sources.{ParquetSource, SchemaDisplay}
 
 class EtlSpec extends AnyFunSuite {
@@ -404,7 +404,7 @@ class EtlSpec extends AnyFunSuite {
     assert(a1.getLong(3) == 7 && a1.getLong(4) == 1)
     assert(a1.getLong(5) < a1.getLong(0) && a1.getLong(6) < a1.getLong(1))
     // the clone is REGISTERED under the source store's clones/ dir, so
-    // a clone-aware sweep of the source consults it (r10 advice): the
+    // a clone-aware sweep of the source consults it: the
     // v1 registration carries exactly the clone's borrowed paths
     val reg = new java.io.File(
       s"$src/clones/${new java.io.File(base).getName}/manifests/v1.txt")
@@ -486,7 +486,7 @@ class EtlSpec extends AnyFunSuite {
       "retry must rewrite the orphan partition and replay the audit")
   }
 
-  /** The r9-advice crash-retry paths, SIMULATED (r10): a vacuum that
+  /** The crash-retry paths, SIMULATED: a vacuum that
     * died mid-sweep (audit absent, v1 manifest tombstoned, some swept
     * AND some live dirs gone) must rebuild the store from source and
     * produce the identical audit — the tombstone-first delete ordering
@@ -821,7 +821,7 @@ class EtlSpec extends AnyFunSuite {
   test("BOOLEAN casts preserve NULL (never coerce to 0/'false')") {
     import org.apache.spark.sql.functions._
     // reference contract: Field::Null stays NULL for every type
-    // (converters.rs:248); .otherwise(0) silently corrupted NULLs (r11)
+    // (converters.rs:248); .otherwise(0) silently corrupted NULLs
     val df = spark.range(3).select(
       when(col("id") === 0, lit(true)).when(col("id") === 1, lit(false))
         .as("b1"),
@@ -836,7 +836,7 @@ class EtlSpec extends AnyFunSuite {
       Set("true", "false", null))
   }
 
-  // ---- JdbcSink vs embedded Derby --------------------------------------
+  // ---- table sink (INSERT arm) vs embedded Derby -----------------------
 
   private def derby(db: String) = s"jdbc:derby:memory:$db;create=true"
 
@@ -858,21 +858,21 @@ class EtlSpec extends AnyFunSuite {
     exec(url, "CREATE TABLE warehouse_t (customer_id BIGINT, customer_name VARCHAR(64), balance DOUBLE)")
     val df = Tables.customer(spark, sf)
       .select("c_custkey", "c_name", "c_acctbal").limit(50)
-    val n = JdbcSink.write(df, url, "warehouse_t",
+    val n = PgCopySink.write(df, url, "warehouse_t",
       Map("c_custkey" -> Some("customer_id"), "c_name" -> Some("customer_name"),
         "c_acctbal" -> Some("balance")))
     assert(n == 50)
     assert(queryLong(url, "SELECT COUNT(*) FROM warehouse_t") == 50)
 
     // unknown alias target
-    assertThrows[IllegalArgumentException](JdbcSink.write(df, url, "warehouse_t",
+    assertThrows[IllegalArgumentException](PgCopySink.write(df, url, "warehouse_t",
       Map("c_custkey" -> Some("not_a_col"))))
     // no alias and no same-named column
     assertThrows[IllegalArgumentException](
-      JdbcSink.write(df, url, "warehouse_t", Map.empty))
+      PgCopySink.write(df, url, "warehouse_t", Map.empty))
     // nonexistent table
     assertThrows[IllegalArgumentException](
-      JdbcSink.write(df, url, "no_such_table", Map.empty))
+      PgCopySink.write(df, url, "no_such_table", Map.empty))
   }
 
   test("jdbc sink surfaces db constraint violations (reference runner semantics)") {
@@ -882,7 +882,7 @@ class EtlSpec extends AnyFunSuite {
     val df = Tables.customer(spark, sf).limit(5)
       .select(lit(null).cast("bigint").as("customer_id"),
         col("c_name").as("note"))
-    val ex = intercept[Exception](JdbcSink.write(df, url, "strict_t"))
+    val ex = intercept[Exception](PgCopySink.write(df, url, "strict_t"))
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(e => e.getMessage +: messages(e.getCause))
     assert(messages(ex).exists(m => m != null && m.toLowerCase.contains("null")),
@@ -1006,7 +1006,7 @@ class EtlSpec extends AnyFunSuite {
     assert(Files.readString(Paths.get(work, "todo")).isEmpty)
   }
 
-  /** The carried object-store gap (VERDICT r2-r4): every other ETL test
+  /** The object-store gap: every other ETL test
     * reaches the Hadoop FS API through `file://`, so the non-file branch
     * (authority parsing, scheme-qualified listing, committer renames
     * under a foreign scheme — what s3a actually exercises) never ran.
@@ -1262,7 +1262,7 @@ class EtlSpec extends AnyFunSuite {
     val df = Seq((1L, Array[Byte](1, 2, 3)), (2L, Array[Byte](-1, 0, 5)))
       .toDF("id", "payload")
     val cast = TypeMapping.castTo(df, Map("payload" -> "blob"))
-    assert(JdbcSink.write(cast, url, "bin_t") == 2)
+    assert(PgCopySink.write(cast, url, "bin_t") == 2)
     val back = spark.read.format("jdbc")
       .option("url", url).option("dbtable", "bin_t").load()
     val got = back.collect()
@@ -1278,7 +1278,7 @@ class EtlSpec extends AnyFunSuite {
       .select(org.apache.spark.sql.functions.col("l_orderkey"))
     val sel = ParquetSource.selectFields(df, Seq("l_orderkey", "l_orderkey"))
     val ex = intercept[IllegalArgumentException] {
-      JdbcSink.write(sel, url, "dup_t", Map("l_orderkey" -> Some("a")),
+      PgCopySink.write(sel, url, "dup_t", Map("l_orderkey" -> Some("a")),
         sourceFields = Some(Seq("l_orderkey", "l_orderkey")))
     }
     assert(ex.getMessage.contains("duplicate target"))
@@ -1338,7 +1338,7 @@ class EtlSpec extends AnyFunSuite {
     val got = graft.queries.EtlQueries.histogram(spark, sf).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     // ROUND, not floor: 2-decimal money as a double sits a hair off
-    // k/100 and floor lands on k-1 cents (advice r8)
+    // k/100 and floor lands on k-1 cents
     val cents = Tables.lineitem(spark, sf).select("l_extendedprice").collect()
       .map(r => math.round(r.getDouble(0) * 100))
     val (cmin, cmax) = (cents.min, cents.max)

@@ -135,6 +135,42 @@ class PgCopySpec extends AnyFunSuite {
     assert(days(dEnc(java.time.LocalDate.of(2000, 1, 1))) == 0)
   }
 
+  test("TIMESTAMP_NTZ encodes wall-clock µs since 2000-01-01 (golden bytes)") {
+    val enc = PgBinaryCopy.fieldEncoder(org.apache.spark.sql.types.TimestampNTZType).get
+    def hex(v: String) = enc(java.time.LocalDateTime.parse(v)).map("%02x".format(_)).mkString
+    assert(hex("2000-01-01T00:00:00") == "0000000000000000")
+    assert(hex("2000-01-01T00:00:00.000001") == "0000000000000001")
+    assert(hex("1999-12-31T23:59:59.999999") == "ffffffffffffffff")
+    assert(hex("2024-02-29T23:59:59.000001") == "0002b58cd3547dc1")
+    // pre-1970: floor seconds plus the non-negative µs-of-second
+    assert(hex("1969-07-20T20:17:40.123456") == "fffc96188bb04340")
+    // the same wall clock read as a UTC instant encodes identically
+    val tEnc = PgBinaryCopy.fieldEncoder(org.apache.spark.sql.types.TimestampType).get
+    assert(enc(java.time.LocalDateTime.parse("1969-07-20T20:17:40.123456")).sameElements(
+      tEnc(java.time.Instant.parse("1969-07-20T20:17:40.123456Z"))))
+  }
+
+  test("INSERT arm: a scan→project write is one Spark job with nothing persisted") {
+    val url = "jdbc:derby:memory:graft_onejob;create=true"
+    val c = java.sql.DriverManager.getConnection(url)
+    try {
+      val st = c.createStatement()
+      try st.execute("DROP TABLE onejob_t")
+      catch { case _: java.sql.SQLException => () }
+      st.execute("CREATE TABLE onejob_t (order_id BIGINT, qty DOUBLE)")
+    } finally c.close()
+    val df = Tables.lineitem(spark, sf)
+      .select(col("l_orderkey").as("order_id"), col("l_quantity").as("qty"))
+    val sc = spark.sparkContext
+    val cachedBefore = sc.getPersistentRDDs.keySet.toSet
+    val (n, jobs) = org.apache.spark.graft.JobProbe(sc)(
+      PgCopySink.write(df, url, "onejob_t"))
+    assert(n == df.count())
+    assert(jobs.count == 1, s"expected one Spark job, got ${jobs.count}")
+    assert(!jobs.touchedPersisted, "the sink must not persist the batch")
+    assert((sc.getPersistentRDDs.keySet.toSet -- cachedBefore).isEmpty)
+  }
+
   test("SCRAM-SHA-256 computation matches the RFC 7677 §3 example exchange") {
     // the published test vector: user 'user', password 'pencil'
     val clientFirstBare = "n=user,r=rOprNGfwEbeRWgbNEkqO"
