@@ -1,18 +1,22 @@
 package graft.sinks
 
-import java.io.{ByteArrayOutputStream, DataOutputStream, InputStream}
+import java.io.InputStream
+import java.math.BigInteger
 import java.sql.DriverManager
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.execution.datasources.jdbc.{JdbcOptionsInWrite, JdbcUtils}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.jdbc.JdbcDialects
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 
 /** PGCOPY binary encoder — the wire format `COPY ... FROM STDIN WITH
   * (FORMAT binary)` consumes (PostgreSQL docs, "Binary Format"; the
   * reference loads through exactly this path via BinaryCopyInWriter,
-  * src/db.rs:8,167-177). Pure functions over Spark rows, so fidelity
-  * is provable in specs without a live server:
+  * src/db.rs:8,167-177):
   *
   *   header   "PGCOPY\n\377\r\n\0" + int32 flags(0) + int32 extlen(0)
   *   tuple    int16 nfields, then per field int32 length (-1 = NULL)
@@ -24,161 +28,252 @@ import org.apache.spark.sql.types._
   * timestamp and timestamp_ntz (int8 µs since 2000-01-01), numeric
   * (base-10000 digit groups — completing the DECIMAL arm the reference
   * leaves half-finished, converters.rs:84,101-114).
+  *
+  * Each column gets one [[FieldWriter]], chosen once per schema, that
+  * copies Spark's internal value out of an `InternalRow` straight into a
+  * reusable [[CopyBuffer]]. Spark's day and µs counts are proleptic
+  * Gregorian, the calendar PG uses, so they only need the epoch shift.
+  * The `Row`-based `fieldEncoder`/`encodeRow`/[[RowStream]] are adapters
+  * over the same writers.
   */
 object PgBinaryCopy {
 
   /** Epoch shifts: PG binary day/µs counts are relative to 2000-01-01. */
-  private val PgEpochDays = 10957L
+  private val PgEpochDays = 10957
   private val PgEpochUs = 946684800000000L
 
-  val header: Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.write(Array[Byte]('P', 'G', 'C', 'O', 'P', 'Y', '\n', 0xff.toByte, '\r', '\n', 0))
-    out.writeInt(0) // flags: no OIDs
-    out.writeInt(0) // header extension length
-    bos.toByteArray
-  }
+  val header: Array[Byte] =
+    Array[Byte]('P', 'G', 'C', 'O', 'P', 'Y', '\n', 0xff.toByte, '\r', '\n', 0) ++
+      new Array[Byte](8) // int32 flags (no OIDs), int32 header extension length
 
   val trailer: Array[Byte] = Array[Byte](0xff.toByte, 0xff.toByte)
 
-  /** PG `numeric` binary body: int16 ndigits, weight, sign, dscale,
-    * then base-10000 digits most-significant first (normalized: no
-    * leading/trailing zero groups; zero itself is ndigits=0). */
-  private[graft] def encodeNumeric(d: java.math.BigDecimal): Array[Byte] = {
-    val dscale = math.max(d.scale, 0)
-    // integral representation at a scale that is a multiple of 4,
-    // so base-10000 groups align with the decimal point
-    val padScale = ((dscale + 3) / 4) * 4
-    val scaled = d.setScale(padScale).unscaledValue.abs
-    val sign = if (d.signum < 0) 0x4000 else 0x0000
-    var groups = List.empty[Int]
-    var v = scaled
-    val tenK = java.math.BigInteger.valueOf(10000)
-    while (v.signum != 0) {
-      val qr = v.divideAndRemainder(tenK)
-      groups = qr(1).intValue :: groups
-      v = qr(0)
+  /** Growable big-endian byte buffer the writers append to. */
+  private[graft] final class CopyBuffer(initial: Int) {
+    private[sinks] var bytes = new Array[Byte](initial)
+    private[sinks] var size = 0
+
+    private def ensure(n: Int): Unit =
+      if (size + n > bytes.length)
+        bytes = java.util.Arrays.copyOf(bytes, math.max(bytes.length * 2, size + n))
+
+    def reset(): Unit = size = 0
+    def toByteArray: Array[Byte] = java.util.Arrays.copyOf(bytes, size)
+
+    def shortAt(at: Int): Int = ((bytes(at) & 0xff) << 8) | (bytes(at + 1) & 0xff)
+    def putShort(at: Int, v: Int): Unit = { bytes(at) = (v >>> 8).toByte; bytes(at + 1) = v.toByte }
+    def putInt(at: Int, v: Int): Unit = { putShort(at, v >>> 16); putShort(at + 2, v) }
+
+    def writeByte(v: Int): Unit = { ensure(1); bytes(size) = v.toByte; size += 1 }
+    def writeShort(v: Int): Unit = { ensure(2); putShort(size, v); size += 2 }
+    def writeInt(v: Int): Unit = { ensure(4); putInt(size, v); size += 4 }
+    def writeLong(v: Long): Unit = {
+      ensure(8); putInt(size, (v >>> 32).toInt); putInt(size + 4, v.toInt); size += 8
     }
-    // weight of the most significant group, in 10000^k units
-    var weight = groups.length - 1 - padScale / 4
-    // normalize: strip trailing zero groups (weight unaffected), then
-    // leading zero groups (weight already excludes them by counting)
-    groups = groups.reverse.dropWhile(_ == 0).reverse
-    while (groups.headOption.contains(0)) { groups = groups.tail; weight -= 1 }
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeShort(groups.length)
-    out.writeShort(if (groups.isEmpty) 0 else weight)
-    out.writeShort(sign)
+    def write(b: Array[Byte], off: Int, len: Int): Unit = {
+      ensure(len); System.arraycopy(b, off, bytes, size, len); size += len
+    }
+    def writeUtf8(s: UTF8String): Unit = {
+      val n = s.numBytes
+      ensure(n); s.writeToMemory(bytes, Platform.BYTE_ARRAY_OFFSET + size); size += n
+    }
+
+    /** Reverses the order of the int16s in [from, until). */
+    def reverseShorts(from: Int, until: Int): Unit = {
+      var i = from
+      var j = until - 2
+      while (i < j) {
+        val v = shortAt(i); putShort(i, shortAt(j)); putShort(j, v)
+        i += 2; j -= 2
+      }
+    }
+  }
+
+  /** Appends one non-NULL field, int32 length then payload, read from
+    * `row` at `ordinal` in Spark's internal representation. */
+  private[graft] trait FieldWriter extends Serializable {
+    def write(out: CopyBuffer, row: InternalRow, ordinal: Int): Unit
+  }
+
+  /** The writer for a Spark type, or None if the type has no PG binary
+    * mapping. */
+  private[graft] def fieldWriter(dt: DataType): Option[FieldWriter] = Option(dt match {
+    case BooleanType => (o, r, i) => { o.writeInt(1); o.writeByte(if (r.getBoolean(i)) 1 else 0) }
+    case ByteType    => (o, r, i) => { o.writeInt(2); o.writeShort(r.getByte(i)) }
+    case ShortType   => (o, r, i) => { o.writeInt(2); o.writeShort(r.getShort(i)) }
+    case IntegerType => (o, r, i) => { o.writeInt(4); o.writeInt(r.getInt(i)) }
+    case LongType    => (o, r, i) => { o.writeInt(8); o.writeLong(r.getLong(i)) }
+    case FloatType   => (o, r, i) =>
+      { o.writeInt(4); o.writeInt(java.lang.Float.floatToIntBits(r.getFloat(i))) }
+    case DoubleType  => (o, r, i) =>
+      { o.writeInt(8); o.writeLong(java.lang.Double.doubleToLongBits(r.getDouble(i))) }
+    case StringType  => (o, r, i) =>
+      { val s = r.getUTF8String(i); o.writeInt(s.numBytes); o.writeUtf8(s) }
+    case BinaryType  => (o, r, i) =>
+      { val b = r.getBinary(i); o.writeInt(b.length); o.write(b, 0, b.length) }
+    case DateType    => (o, r, i) => { o.writeInt(4); o.writeInt(r.getInt(i) - PgEpochDays) }
+    // a TIMESTAMP_NTZ is a wall clock counted as if UTC, so it lands
+    // unshifted in a PG `timestamp` column
+    case TimestampType | TimestampNTZType => (o, r, i) =>
+      { o.writeInt(8); o.writeLong(r.getLong(i) - PgEpochUs) }
+    case d: DecimalType =>
+      val (p, s) = (d.precision, d.scale)
+      (o, r, i) => writeNumeric(o, r.getDecimal(i, p, s))
+    case _ => null
+  })
+
+  /** One tuple: int16 field count, then per field -1 for NULL or the
+    * column writer's length and payload. */
+  private[graft] def writeRow(out: CopyBuffer, row: InternalRow,
+      writers: Array[FieldWriter]): Unit = {
+    out.writeShort(writers.length)
+    var i = 0
+    while (i < writers.length) {
+      if (row.isNullAt(i)) out.writeInt(-1) else writers(i).write(out, row, i)
+      i += 1
+    }
+  }
+
+  private def writeNumeric(out: CopyBuffer, d: Decimal): Unit =
+    if (d.precision <= Decimal.MAX_LONG_DIGITS && d.scale >= 0) {
+      val u = d.toUnscaledLong
+      writeNumeric(out, u < 0, math.abs(u), null, d.scale)
+    } else writeNumeric(out, d.toJavaBigDecimal)
+
+  private def writeNumeric(out: CopyBuffer, d: java.math.BigDecimal): Unit =
+    writeNumeric(out, d.signum < 0, 0L, d.unscaledValue.abs, d.scale)
+
+  private val Pow10 = Array(1L, 10L, 100L, 1000L)
+  private val TenK = BigInteger.valueOf(10000)
+
+  /** `numeric` field for ±magnitude·10^-scale, the magnitude given as
+    * `mag` when `bigMag` is null (then scale ≥ 0): int32 length, int16
+    * ndigits, weight, sign, dscale, then base-10000 digits most
+    * significant first, normalised (no leading or trailing zero digit;
+    * zero has none and weight 0). The digits are those of the magnitude
+    * rescaled to `pad`, the scale rounded up to a multiple of 4, so that
+    * they align with the decimal point; they are appended least
+    * significant first and then reversed in place. */
+  private def writeNumeric(out: CopyBuffer, negative: Boolean, mag: Long,
+      bigMag: BigInteger, scale: Int): Unit = {
+    val dscale = math.max(scale, 0)
+    val pad = (dscale + 3) / 4 * 4
+    val start = out.size
+    out.writeInt(0) // length, patched below
+    out.writeInt(0) // ndigits and weight, patched below
+    out.writeShort(if (negative) 0x4000 else 0)
     out.writeShort(dscale)
-    groups.foreach(out.writeShort)
-    bos.toByteArray
+    val digits = out.size
+    if (bigMag != null) {
+      var v = bigMag.multiply(BigInteger.TEN.pow(pad - scale))
+      while (v.signum != 0) {
+        val qr = v.divideAndRemainder(TenK)
+        out.writeShort(qr(1).intValue); v = qr(0)
+      }
+    } else {
+      // the lowest group is the low 4-shift digits times 10^shift, so
+      // mag·10^shift never has to fit in a Long
+      var v = mag
+      val shift = pad - scale
+      if (shift > 0) {
+        out.writeShort(((v % Pow10(4 - shift)) * Pow10(shift)).toInt)
+        v /= Pow10(4 - shift)
+      }
+      while (v != 0) { out.writeShort((v % 10000).toInt); v /= 10000 }
+    }
+    val groups = (out.size - digits) / 2
+    out.reverseShorts(digits, out.size)
+    while (out.size > digits && out.shortAt(out.size - 2) == 0) out.size -= 2
+    val ndigits = (out.size - digits) / 2
+    out.putInt(start, out.size - start - 4)
+    out.putShort(start + 4, ndigits)
+    out.putShort(start + 6, if (ndigits == 0) 0 else groups - 1 - pad / 4)
   }
 
-  /** Per-field payload encoder for a Spark type, or None if the type
-    * has no PG binary mapping (caller falls back to the INSERT path). */
-  private[graft] def fieldEncoder(dt: DataType): Option[Any => Array[Byte]] = {
-    def be(n: Int)(f: DataOutputStream => Unit): Array[Byte] = {
-      val bos = new ByteArrayOutputStream(n)
-      val out = new DataOutputStream(bos)
-      f(out); bos.toByteArray
+  /** header → tuples → trailer as a lazily encoded stream: COPY consumes
+    * while the rows are produced, with no partition-sized buffer. A read
+    * fills the caller's buffer (tuples straddle read boundaries), so a
+    * 64 KiB read is one 64 KiB CopyData frame. */
+  private[graft] abstract class TupleStream extends InputStream {
+    /** Appends the next tuple to `out`; false once the rows are exhausted. */
+    protected def nextTuple(out: CopyBuffer): Boolean
+
+    private val buf = new CopyBuffer(1 << 12)
+    buf.write(header, 0, header.length)
+    private var pos = 0
+    private var trailed = false
+
+    /** Replaces the drained buffer with the next tuple, or the trailer;
+      * false at the end of the stream. */
+    private def refill(): Boolean = {
+      buf.reset(); pos = 0
+      nextTuple(buf) || (!trailed && { trailed = true; buf.write(trailer, 0, 2); true })
     }
-    dt match {
-      case BooleanType => Some(v => Array[Byte](if (v.asInstanceOf[Boolean]) 1 else 0))
-      case ByteType    => Some(v => be(2)(_.writeShort(v.asInstanceOf[Byte].toInt)))
-      case ShortType   => Some(v => be(2)(_.writeShort(v.asInstanceOf[Short].toInt)))
-      case IntegerType => Some(v => be(4)(_.writeInt(v.asInstanceOf[Int])))
-      case LongType    => Some(v => be(8)(_.writeLong(v.asInstanceOf[Long])))
-      case FloatType   => Some(v => be(4)(_.writeFloat(v.asInstanceOf[Float])))
-      case DoubleType  => Some(v => be(8)(_.writeDouble(v.asInstanceOf[Double])))
-      case StringType  => Some(v => v.asInstanceOf[String].getBytes("UTF-8"))
-      case BinaryType  => Some(v => v.asInstanceOf[Array[Byte]])
-      // both java.sql and java.time externals: with
-      // spark.sql.datetime.java8API.enabled=true Row.get returns
-      // LocalDate/Instant instead of java.sql.Date/Timestamp
-      case DateType => Some {
-        case d: java.sql.Date => be(4)(_.writeInt(
-          (d.toLocalDate.toEpochDay - PgEpochDays).toInt))
-        case ld: java.time.LocalDate => be(4)(_.writeInt(
-          (ld.toEpochDay - PgEpochDays).toInt))
-        case other => throw new IllegalArgumentException(
-          s"unexpected date external: ${other.getClass.getName}")
+
+    override def read(): Int =
+      if (pos == buf.size && !refill()) -1
+      else { val b = buf.bytes(pos) & 0xff; pos += 1; b }
+
+    override def read(b: Array[Byte], off: Int, len: Int): Int = {
+      var n = 0
+      while (n < len && (pos < buf.size || refill())) {
+        val k = math.min(len - n, buf.size - pos)
+        System.arraycopy(buf.bytes, pos, b, off + n, k)
+        pos += k; n += k
       }
-      case TimestampType => Some {
-        // Timestamp.getTime is FLOOR-ms of the instant (negative pre-
-        // 1970) and getNanos is the non-negative in-second component,
-        // so getTime*1000 + µs-within-ms is exact on both sides of the
-        // epoch (pre-1970 golden bytes in PgCopySpec)
-        case t: java.sql.Timestamp =>
-          val us = t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-          be(8)(_.writeLong(us - PgEpochUs))
-        case i: java.time.Instant =>
-          val us = Math.addExact(
-            Math.multiplyExact(i.getEpochSecond, 1000000L), i.getNano / 1000L)
-          be(8)(_.writeLong(us - PgEpochUs))
-        case other => throw new IllegalArgumentException(
-          s"unexpected timestamp external: ${other.getClass.getName}")
-      }
-      // a TIMESTAMP_NTZ is a wall clock: its fields count as if UTC, so
-      // it lands unshifted in a PG `timestamp` column (toEpochSecond
-      // floors and getNano is non-negative, so pre-1970 is exact)
-      case TimestampNTZType => Some { v =>
-        val t = v.asInstanceOf[java.time.LocalDateTime]
-        val us = Math.addExact(Math.multiplyExact(
-          t.toEpochSecond(java.time.ZoneOffset.UTC), 1000000L), t.getNano / 1000L)
-        be(8)(_.writeLong(us - PgEpochUs))
-      }
-      case _: DecimalType => Some(v =>
-        encodeNumeric(v.asInstanceOf[java.math.BigDecimal]))
-      case _ => None
+      if (n == 0 && len > 0) -1 else n
     }
   }
 
-  /** Encode one tuple (nfields + length-prefixed payloads). */
+  /** The sink's stream over Spark's internal rows. Each row is encoded as
+    * soon as it is pulled and never kept: `toRdd` iterators reuse one
+    * `UnsafeRow`. */
+  private[graft] final class InternalRowStream(rows: Iterator[InternalRow],
+      writers: Array[FieldWriter]) extends TupleStream {
+    protected def nextTuple(out: CopyBuffer): Boolean =
+      rows.hasNext && { writeRow(out, rows.next(), writers); true }
+  }
+
+  // ---- adapters over external Rows, on the same writers ----------------
+
+  /** PG `numeric` binary body (no length prefix) of `d` at its own scale. */
+  private[graft] def encodeNumeric(d: java.math.BigDecimal): Array[Byte] = {
+    val out = new CopyBuffer(32)
+    writeNumeric(out, d)
+    java.util.Arrays.copyOfRange(out.bytes, 4, out.size)
+  }
+
+  /** Payload encoder (no length prefix) for external values of a Spark
+    * type, or None if the type has no PG binary mapping. */
+  private[graft] def fieldEncoder(dt: DataType): Option[Any => Array[Byte]] =
+    fieldWriter(dt).map { w =>
+      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
+      v => {
+        val out = new CopyBuffer(16)
+        w.write(out, new GenericInternalRow(Array(toCatalyst(v))), 0)
+        java.util.Arrays.copyOfRange(out.bytes, 4, out.size)
+      }
+    }
+
+  /** Encode one tuple of an external Row. */
   private[graft] def encodeRow(row: Row, encs: Array[Any => Array[Byte]]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream(64)
-    val out = new DataOutputStream(bos)
+    val out = new CopyBuffer(64)
     out.writeShort(encs.length)
     var i = 0
     while (i < encs.length) {
       if (row.isNullAt(i)) out.writeInt(-1)
-      else {
-        val payload = encs(i)(row.get(i))
-        out.writeInt(payload.length)
-        out.write(payload)
-      }
+      else { val p = encs(i)(row.get(i)); out.writeInt(p.length); out.write(p, 0, p.length) }
       i += 1
     }
-    bos.toByteArray
+    out.toByteArray
   }
 
-  /** Lazy header→rows→trailer stream: COPY consumes while the iterator
-    * produces — no partition-sized buffer. */
+  /** [[TupleStream]] over external Rows. */
   private[graft] final class RowStream(rows: Iterator[Row],
-      encs: Array[Any => Array[Byte]]) extends InputStream {
-    private var cur: Array[Byte] = header
-    private var pos = 0
-    private var trailed = false
-    private def advance(): Boolean = {
-      while (cur != null && pos >= cur.length) {
-        pos = 0
-        cur = if (rows.hasNext) encodeRow(rows.next(), encs)
-        else if (!trailed) { trailed = true; trailer }
-        else null
-      }
-      cur != null
+      encs: Array[Any => Array[Byte]]) extends TupleStream {
+    protected def nextTuple(out: CopyBuffer): Boolean = rows.hasNext && {
+      val t = encodeRow(rows.next(), encs); out.write(t, 0, t.length); true
     }
-    override def read(): Int =
-      if (!advance()) -1 else { val b = cur(pos) & 0xff; pos += 1; b }
-    override def read(b: Array[Byte], off: Int, len: Int): Int =
-      if (!advance()) -1
-      else {
-        val n = math.min(len, cur.length - pos)
-        System.arraycopy(cur, pos, b, off, n)
-        pos += n
-        n
-      }
   }
 }
 
@@ -193,7 +288,9 @@ object PgBinaryCopy {
   *    unknown alias is an error BEFORE any data moves.
   *  - `jdbc:postgresql:` targets load by per-partition binary `COPY FROM
   *    STDIN` over graft's own protocol-v3 client ([[PgWire]]), with no
-  *    driver jar. A column with no PG binary mapping fails loudly: with
+  *    driver jar. The partitions read the plan's `InternalRow`s
+  *    (`queryExecution.toRdd`) and encode them in 64 KiB CopyData
+  *    frames. A column with no PG binary mapping fails loudly: with
   *    no driver jar there is no INSERT path to fall back to, and
   *    silently skipping columns would be worse.
   *  - any other JDBC url loads through Spark's batched-INSERT partition
@@ -251,11 +348,15 @@ object PgCopySink {
     val renamed = df.select(df.columns.toSeq.zip(targets)
       .map { case (c, t) => col(c).as(t) }: _*)
 
-    val load: Iterator[Row] => Long =
-      if (isPostgres(url)) copyLoader(PgWire.parse(url), table, renamed.schema)
-      else insertLoader(url, table, renamed.schema)
     val before = tableCount(url, table)
-    val loaded = renamed.rdd.mapPartitions(rows => Iterator(load(rows))).collect().sum
+    val loaded =
+      if (isPostgres(url)) {
+        val load = copyLoader(PgWire.parse(url), table, renamed.schema)
+        renamed.queryExecution.toRdd.mapPartitions(rows => Iterator(load(rows))).collect().sum
+      } else {
+        val load = insertLoader(url, table, renamed.schema)
+        renamed.rdd.mapPartitions(rows => Iterator(load(rows))).collect().sum
+      }
     val landed = tableCount(url, table) - before
     if (landed != loaded)
       throw new IllegalStateException(
@@ -286,8 +387,8 @@ object PgCopySink {
   /** One partition → one binary COPY on its own connection; returns the
     * server's `COPY n`. Empty partitions open no connection. */
   private def copyLoader(t: PgWire.Target, table: String,
-      schema: StructType): Iterator[Row] => Long = {
-    val encs = schema.fields.map(f => PgBinaryCopy.fieldEncoder(f.dataType).getOrElse(
+      schema: StructType): Iterator[InternalRow] => Long = {
+    val writers = schema.fields.map(f => PgBinaryCopy.fieldWriter(f.dataType).getOrElse(
       throw new IllegalArgumentException(
         s"column '${f.name}': ${f.dataType.simpleString} has no PG binary " +
           "mapping — project it away or load through a jdbc driver")))
@@ -297,7 +398,7 @@ object PgCopySink {
       if (!rows.hasNext) 0L
       else {
         val conn = PgWire.connect(t)
-        try conn.copyIn(copySql, new PgBinaryCopy.RowStream(rows, encs))
+        try conn.copyIn(copySql, new PgBinaryCopy.InternalRowStream(rows, writers))
         finally conn.close()
       }
   }

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.graftParquetShim
 import org.apache.spark.sql.functions.col
 
 /** Parquet ingestion with the reference's field-selection semantics
@@ -15,10 +16,13 @@ object ParquetSource {
 
   /** One multi-path scan per batch (the reference downloads a batch of
     * files then iterates serially; Spark reads the whole batch as one
-    * splittable scan — reference: src/runner.rs:86-108). */
+    * splittable scan — reference: src/runner.rs:86-108). The schema is
+    * the one Spark would infer, read from the first file's footer on
+    * the driver, so reading a batch launches no Spark job of its own. */
   def readBatch(spark: SparkSession, paths: Seq[String]): DataFrame = {
     require(paths.nonEmpty, "empty batch")
-    spark.read.parquet(paths: _*)
+    graftParquetShim.inferSchema(spark, paths).fold(spark.read)(s => spark.read.schema(s))
+      .parquet(paths: _*)
   }
 
   /** Project `desiredFields` in order. Duplicate names get a positional

@@ -150,6 +150,27 @@ class PgCopySpec extends AnyFunSuite {
       tEnc(java.time.Instant.parse("1969-07-20T20:17:40.123456Z"))))
   }
 
+  test("stream framing: every 64 KiB read of a multi-row partition is full but the last") {
+    val df = spark.range(0, 30000, 1, 1).selectExpr("id AS k",
+      "concat('row-', id) AS s", "CAST(id AS DECIMAL(12,2)) / 4 AS num",
+      "DATE_ADD(DATE'1969-12-01', CAST(id % 1000 AS INT)) AS d")
+    val writers = df.schema.fields.map(f => PgBinaryCopy.fieldWriter(f.dataType).get)
+    import PgCopySpec.frames
+    // the sink's own input: the plan's InternalRows, one partition
+    val (sizes, bytes) = df.queryExecution.toRdd.mapPartitions { rows =>
+      Iterator(frames(new PgBinaryCopy.InternalRowStream(rows, writers)))
+    }.collect().head
+    assert(sizes.length > 3, s"want several frames, got $sizes")
+    assert(sizes.init.forall(_ == 65536), sizes)
+    assert(sizes.last > 0 && sizes.last <= 65536)
+    assert(decode(new java.io.ByteArrayInputStream(bytes)).length == 30000)
+    // the Row adapter frames the same bytes the same way
+    val encs = df.schema.fields.map(f => PgBinaryCopy.fieldEncoder(f.dataType).get)
+    val (rowSizes, rowBytes) = frames(new PgBinaryCopy.RowStream(df.collect().iterator, encs))
+    assert(rowSizes == sizes)
+    assert(rowBytes.sameElements(bytes))
+  }
+
   test("INSERT arm: a scan→project write is one Spark job with nothing persisted") {
     val url = "jdbc:derby:memory:graft_onejob;create=true"
     val c = java.sql.DriverManager.getConnection(url)
@@ -309,6 +330,17 @@ class PgCopySpec extends AnyFunSuite {
       .option("dbtable", "pgc_t").load()
     assert(back.count() == 100)
     assert(back.agg(sum("V")).head().getDouble(0) == (0 until 100).map(_ * 1.5).sum)
+  }
+}
+
+object PgCopySpec {
+  /** The sizes of successive 64 KiB reads of `in`, and the bytes read. */
+  def frames(in: java.io.InputStream): (Seq[Int], Array[Byte]) = {
+    val buf = new Array[Byte](65536)
+    val all = new java.io.ByteArrayOutputStream()
+    val sizes = Iterator.continually(in.read(buf, 0, 65536)).takeWhile(_ >= 0)
+      .map { n => all.write(buf, 0, n); n }.toList
+    (sizes, all.toByteArray)
   }
 }
 

@@ -2,7 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.etl._
 import graft.sinks.{PgBinaryCopy, PgCopySink, PgServer, PgWire}
 
@@ -24,7 +27,10 @@ import graft.sinks.{PgBinaryCopy, PgCopySink, PgServer, PgWire}
   *     a wrong-password rejection with the server's SQLSTATE.
   *  4. protocol error discipline: server errors surface as
   *     [[PgWire.PgServerException]] with SQLSTATE and the connection
-  *     stays usable past the sync point.
+  *     stays usable past the sync point; a failing row source ends in
+  *     CopyFail and surfaces its own error.
+  *  5. calendar: old dates and timestamps read back from PG as the same
+  *     text Spark prints for them.
   */
 class PgLiveSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -345,5 +351,56 @@ class PgLiveSpec extends AnyFunSuite {
       assert(e4.sqlState == "57014", e4.getMessage) // query_canceled
       assert(conn.query("SELECT 3")._2.head(0) == "3")
     } finally conn.close()
+  }
+
+  test("InternalRow producer failure mid-COPY: CopyFail, producer's error, connection survives") {
+    val l = live
+    val conn = PgWire.connect(l.target)
+    try {
+      conn.exec("DROP TABLE IF EXISTS graft_rowfail")
+      conn.exec("CREATE TABLE graft_rowfail (k bigint, s text)")
+      val writers = Array(LongType, StringType).map(t => PgBinaryCopy.fieldWriter(t).get)
+      val copySql = "COPY graft_rowfail (k, s) FROM STDIN WITH (FORMAT binary)"
+      // one reused row, as toRdd hands the sink; the source fails after
+      // several 64 KiB frames have gone out
+      def rows(n: Int, failAt: Int): Iterator[InternalRow] = {
+        val row = new GenericInternalRow(2)
+        Iterator.range(0, n).map { i =>
+          if (i == failAt) throw new RuntimeException("partition source exploded")
+          row.setLong(0, i.toLong)
+          row.update(1, UTF8String.fromString(s"row-$i"))
+          row
+        }
+      }
+      val e = intercept[RuntimeException](conn.copyIn(copySql,
+        new PgBinaryCopy.InternalRowStream(rows(50000, 20000), writers)))
+      assert(e.getMessage == "partition source exploded")
+      assert(conn.query("SELECT COUNT(*) FROM graft_rowfail")._2.head(0) == "0")
+      // the same connection still loads
+      assert(conn.copyIn(copySql,
+        new PgBinaryCopy.InternalRowStream(rows(1000, -1), writers)) == 1000)
+      assert(conn.query("SELECT COUNT(*), SUM(k) FROM graft_rowfail")._2.head.toSeq ==
+        Seq("1000", "499500"))
+    } finally conn.close()
+  }
+
+  test("old dates and timestamps: PG's ::text equals Spark's cast to string (UTC)") {
+    val l = live
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    psql(l, "DROP TABLE IF EXISTS graft_calendar")
+    psql(l, "CREATE TABLE graft_calendar (k int, d date, ts timestamp)")
+    val df = spark.sql("""
+      SELECT * FROM VALUES
+        (1, DATE'0001-01-01', TIMESTAMP'0001-01-01 00:00:00'),
+        (2, DATE'1500-03-01', TIMESTAMP'1500-03-01 12:00:00'),
+        (3, DATE'1582-10-04', TIMESTAMP'1582-10-15 00:00:00.000001'),
+        (4, DATE'1855-06-15', TIMESTAMP'1855-06-15 08:30:00.5'),
+        (5, DATE'1969-12-31', TIMESTAMP'1969-12-31 23:59:59.999999') AS t(k, d, ts)""")
+    assert(PgCopySink.write(df, l.url, "graft_calendar") == 5)
+    val want = df.orderBy("k")
+      .selectExpr("concat_ws('|', k, CAST(d AS STRING), CAST(ts AS STRING))")
+      .collect().map(_.getString(0)).toSeq
+    assert(psql(l, "SELECT k || '|' || d::text || '|' || ts::text FROM graft_calendar ORDER BY k")
+      .trim.split('\n').toSeq == want)
   }
 }
