@@ -173,18 +173,18 @@ object Bench {
     // so WARNs can be correlated with WHEN they ran, not just how long.
     val sessionT0 = System.nanoTime()
     val startedAt = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    // Session plan cache (r12 verdict item 4 — "plan-cache reuse
-    // across a session"): the cold run's analyzed/optimized frame is
+    // Session plan cache: the cold run's analyzed/optimized frame is
     // retained and re-EXECUTED by warm/repeat runs, the way a real
     // session re-runs a prepared statement — construction + analysis
-    // (~0.15-0.3 s, FloorProfile's reused-frame lever) is paid once,
-    // not per run. Scope is deliberately narrow and name-based: the
-    // PURE families only (q*/sql_* — frames whose entire computation
-    // is in the plan), so a side-effecting query (store builds,
-    // sink writes) can never serve a warm run that silently skips its
-    // work; and only checkpoint-FREE frames cache — a plan referencing
-    // localCheckpoint blocks cannot re-execute after the sweep
-    // releases them (truncated lineage). Detected per run, not assumed.
+    // is paid once, not per run (q54_transitions 717 → 485 ms with a
+    // reused frame, floor_profile_r13.json). Scope is deliberately
+    // narrow and name-based: the PURE families only (q*/sql_* — frames
+    // whose entire computation is in the plan), so a side-effecting
+    // query (store builds, sink writes) can never serve a warm run
+    // that silently skips its work; and only checkpoint-FREE frames
+    // cache — a plan referencing localCheckpoint blocks cannot
+    // re-execute after the sweep releases them (truncated lineage).
+    // Detected per run, not assumed.
     def cacheable(name: String): Boolean =
       name.matches("q\\d+.*") || name.startsWith("sql_")
     val planCache = scala.collection.mutable.HashMap.empty[String, org.apache.spark.sql.DataFrame]

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -107,18 +108,9 @@ object AnnIndex {
     dir
   }
 
-  /** Shared by the profiling mains too (AppendSweep,
-    * CheckpointProfile) — one recursive delete, not three drifting
-    * copies (review r13). */
-  private[graft] def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles.foreach(deleteRecursively)
-    f.delete(): Unit
-  }
-
   /** Hardlink a directory tree (copy fallback across filesystems) —
-    * O(files), never O(bytes), on one volume. Shared with the
-    * profiling mains (review r13). */
-  private[graft] def linkTree(from: java.io.File, to: java.io.File): Unit = {
+    * O(files), never O(bytes), on one volume. */
+  private def linkTree(from: java.io.File, to: java.io.File): Unit = {
     to.mkdirs()
     from.listFiles.foreach { f =>
       val t = new java.io.File(to, f.getName)
@@ -175,10 +167,10 @@ object AnnIndex {
         }
         .foreach { x =>
           builtMemo.remove(x.getAbsolutePath)
-          deleteRecursively(x)
+          FileUtils.deleteQuietly(x)
         }
     val dirF = new java.io.File(dir)
-    if (dirF.exists()) { builtMemo.remove(dir); deleteRecursively(dirF) }
+    if (dirF.exists()) { builtMemo.remove(dir); FileUtils.deleteQuietly(dirF) }
 
     // (an r10 A/B fanning this scan to core count — the kmeansAssign
     // remedy — measured NEUTRAL here, 3.30 vs 3.22 s best-of in the
@@ -350,7 +342,7 @@ object AnnIndex {
     * next retraining [[build]] prunes it by source path as usual. */
   private def adoptArtifacts(prev: java.io.File, dir: String): Unit = {
     val dirF = new java.io.File(dir)
-    if (dirF.exists()) deleteRecursively(dirF)
+    FileUtils.deleteQuietly(dirF)
     // `deleted/` tombstones travel with the artifacts: an erasure must
     // survive a fingerprint move (source growth) — a GDPR drop that
     // silently resurrected on the next append would be a compliance
@@ -672,14 +664,14 @@ object AnnIndex {
     val n = survivors.count()
     val nFiles = math.max(1L, (n + 1999999L) / 2000000L).toInt
     val staging = s"$dir/codes_compacting"
-    deleteRecursively(new java.io.File(staging))
+    FileUtils.deleteQuietly(new java.io.File(staging))
     survivors.repartition(nFiles).write.mode("overwrite").parquet(staging)
     java.nio.file.Files.deleteIfExists(marker(dir)): Unit
     builtMemo.remove(dir)
-    deleteRecursively(new java.io.File(s"$dir/codes"))
+    FileUtils.deleteQuietly(new java.io.File(s"$dir/codes"))
     java.nio.file.Files.move(java.nio.file.Paths.get(staging),
       java.nio.file.Paths.get(s"$dir/codes")): Unit
-    deleteRecursively(new java.io.File(s"$dir/deleted"))
+    FileUtils.deleteQuietly(new java.io.File(s"$dir/deleted"))
     java.nio.file.Files.writeString(baseMeta(dir), n.toString): Unit
     java.nio.file.Files.deleteIfExists(appendedMeta(dir)): Unit
     java.nio.file.Files.deleteIfExists(deletedMeta(dir)): Unit
@@ -804,32 +796,20 @@ object AnnIndex {
   private def codebookAt(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/codebook")
 
-  /** Per-dir memo of the codebook's subvector length (r13
-    * optimization): every serve paid a one-row head() job — scan +
-    * collect of the 256-row codebook — just to learn a constant.
-    * subLen is fixed per index dir by construction: the fingerprint
-    * pins source content + (M, Ksub), so any rebuild of the same dir
-    * (stats()'s force-rebuild included) retrains the same-dim corpus
-    * into the same-shape codebook, compaction leaves trained
-    * artifacts untouched, and a regenerated source moves the
-    * fingerprint, hence the key. First lookup per process answers all
-    * later serves — ~15 head() jobs per bench session across the
-    * PQ-family queries. */
+  /** Per-process memo of the codebook's subvector length: without it
+    * every serve paid a one-row head() job — scan + collect of the
+    * 256-row codebook — just to learn a constant (~15 jobs per bench
+    * session across the PQ-family queries). Keyed by (dir, codebook
+    * [[graft.SourceKey]]), not dir alone: fingerprinted dirs pin
+    * geometry, but appendAt is also reachable with explicit
+    * non-fingerprinted dirs ([[buildSubset]]) where a same-path
+    * rebuild could change M or dim — the content key makes that
+    * rebuild miss instead of serving a stale subLen into the
+    * subvector slicer. */
   private val subLenMemo =
     new java.util.concurrent.ConcurrentHashMap[(String, Long), Integer]()
-  private def subLenAt(s: SparkSession, dir: String): Int = {
-    // keyed by (dir, codebook file lengths+mtimes), not dir alone
-    // (advice r13): fingerprinted dirs pin geometry, but appendAt is
-    // also reachable with explicit non-fingerprinted dirs (buildSubset,
-    // AppendSweep scratch) where a same-path rebuild could change M or
-    // dim — the content component makes that rebuild miss instead of
-    // serving a stale subLen into the subvector slicer.
-    val cb = new java.io.File(dir, "codebook")
-    val sig = Option(cb.listFiles).getOrElse(Array.empty)
-      .sortBy(_.getName)
-      .foldLeft(17L)((h, f) =>
-        (h * 1000003L + f.getName.hashCode) * 1000003L + f.length * 31L +
-          f.lastModified)
+  private[graft] def subLenAt(s: SparkSession, dir: String): Int = {
+    val sig = graft.SourceKey.of(new java.io.File(dir, "codebook"))
     subLenMemo.computeIfAbsent((dir, sig), _ =>
       Int.box(codebookAt(s, dir).select(size(col("c_sv"))).head().getInt(0)))
   }
@@ -1249,7 +1229,7 @@ object AnnIndex {
     val dir = dirFor(d) + "_incr"
     if (!java.nio.file.Files.exists(marker(dir))) {
       val f = new java.io.File(dir)
-      if (f.exists()) deleteRecursively(f)
+      FileUtils.deleteQuietly(f)
       f.mkdirs()
       buildSubset(s, d, dir, !appendSplitPred)
       appendAt(s, dir, graft.Tables.embeddings(s, d)

@@ -1414,8 +1414,9 @@ object Dedup {
     * dedup finds arbitrary-length spans; fixed-k gram coverage is the
     * bounded-memory distributed approximation (any duplicated span ≥ k
     * words is fully covered by its k-grams; spans < k are below the
-    * noise floor). Stage costs measured in
-    * target/substring_profile.json ([[graft.SubstringProfile]], r9). */
+    * noise floor). Stage costs at sf0.1 (cumulative prefixes, min-of-3):
+    * scan+explode 457 ms, + ≥2-docs window 711 ms, full 1301 ms
+    * (BASELINE.md "dedup_substring decomposition"). */
   def substringCoverage(s: SparkSession, d: String, k: Int = 8): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val docs = documents(s, d)
@@ -1428,10 +1429,9 @@ object Dedup {
     // one shuffle, and the checkpoint (which existed only because two
     // consumers defeated ReuseExchange) disappears.
     val wH = Window.partitionBy(col("h"))
-    // gram identity hash: xxhash64 over PRE-HASHED words (r9 shave —
-    // the SubstringProfile decomposition measured the narrow explode
-    // pass alone at 618 ms of the 1514 ms total, dominated by building
-    // a ~50-char joined string per gram). Each word hashes ONCE
+    // gram identity hash: xxhash64 over PRE-HASHED words — keying by
+    // a ~50-char joined string per gram made the narrow explode pass
+    // alone 618 ms of a 1514 ms total at sf0.1. Each word hashes ONCE
     // (n_words ops), then a gram keys as xxhash64 of its k word-hash
     // longs — 64 fixed bytes mixed per gram, zero string allocation.
     // h is never output, it only keys the ≥2-docs window, so the only

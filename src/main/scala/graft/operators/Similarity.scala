@@ -1378,12 +1378,12 @@ object Similarity {
       .map(r => r.getInt(0) -> r.getSeq[Float](1).toIndexedSeq)
       .sortBy(_._1).toIndexedSeq
     def assignedOf(src: DataFrame) = {
-      // one codegen'd kernel per row (r14, the HyperplaneSigs cure):
-      // the former transform(1..k, i -> sq_diff(emb, element_at(cLit,
-      // i))) + array_min/array_position chain evaluated the lambda
-      // INTERPRETED and unboxed the k×dim literal per row — the
-      // largest residual term of dedup_semantic_banded (SemProf:
-      // assignment 1.9 s of 3.6). CentroidArgmin reproduces the exact
+      // one codegen'd kernel per row: the former transform(1..k, i ->
+      // sq_diff(emb, element_at(cLit, i))) + array_min/array_position
+      // chain evaluated the lambda INTERPRETED and unboxed the k×dim
+      // literal per row — the largest residual term of
+      // dedup_semantic_banded (assignment 1.9 s of 3.6,
+      // OPTIMIZATION_r14.md). CentroidArgmin reproduces the exact
       // fold: SqDiff per centroid in c-order (ragged -> NULL, skipped),
       // first index attaining the compareDoubles minimum — so
       // assignments and cd2 are bit-identical (PropertySpec pins the

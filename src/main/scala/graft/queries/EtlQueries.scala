@@ -1,8 +1,9 @@
 package graft.queries
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{SourceKey, Tables}
 import graft.etl.TypeMapping
 import graft.sources.ParquetSource
 
@@ -249,33 +250,17 @@ object EtlQueries {
         expr(Frags.dsum2("l_extendedprice")).as("sum_price"))
   }
 
-  /** Cache-key component: a digest of the source's recursive file
-    * listing (leaf path, length, mtime) — a regenerated source at the
-    * SAME path then lands in a fresh cache dir instead of being served
-    * a stale rewrite (_SUCCESS only guards against interruption, not
-    * regeneration). Folding length+count in keeps the key honest when
-    * mtime granularity (often 1 s) hides a same-tick regeneration or
-    * the newest change sits in a nested file. */
-  private def mtimeKey(d: String, table: String): Long =
-    graft.SourceKey.of(d, table) // the shared fingerprint (SourceKey)
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete()
-  }
-
   /** Per-(sfDir, source-state, process) scratch dir for queries whose
     * WRITE is part of the operation under test (formatRoundtrip, merge).
     * The pid component means two concurrent invocations (bench and
     * verify on the same machine) can never race on mode("overwrite") of
-    * the same dirs; the mtime key keeps a process's own cache honest
+    * the same dirs; the [[SourceKey]] keeps a process's own cache honest
     * across testdata regeneration. Stale siblings — a different source
     * key (regenerated testdata) or a long-dead process's dir (same key,
     * >3 h old; live processes touch their dirs every invocation) — are
     * swept here so rounds don't accumulate /tmp garbage. */
   private def scratchDir(prefix: String, d: String, table: String): String = {
-    val key = s"${d.replaceAll("[^a-zA-Z0-9]", "_")}_${mtimeKey(d, table)}"
+    val key = s"${d.replaceAll("[^a-zA-Z0-9]", "_")}_${SourceKey.of(d, table)}"
     val tmp = new java.io.File(sys.props("java.io.tmpdir"))
     val dir = new java.io.File(tmp, s"graft_${prefix}_${key}_p${ProcessHandle.current().pid()}")
     // Sweep criterion: STALE mtime AND DEAD owner. mtime
@@ -300,7 +285,7 @@ object EtlQueries {
     Option(tmp.listFiles).getOrElse(Array.empty)
       .filter(f => f.getName.startsWith(s"graft_${prefix}_") && f.getName != dir.getName)
       .filter(f => f.lastModified < cutoff && !ownerAlive(f.getName))
-      .foreach(deleteRecursively)
+      .foreach(FileUtils.deleteQuietly)
     if (dir.exists) dir.setLastModified(System.currentTimeMillis()): Unit
     dir.toString
   }
@@ -1075,7 +1060,7 @@ object EtlQueries {
       // audit). The garbage is unrecoverable by design — rebuild the
       // store from source and sweep again.
       if (!new java.io.File(s"$base/manifests/v1.txt").exists()) {
-        deleteRecursively(new java.io.File(base))
+        FileUtils.deleteQuietly(new java.io.File(base))
         base = ensureTimeTravelVersions(s, d, "vac")
       }
       val m1 = readManifest(base, 1)
@@ -1101,7 +1086,7 @@ object EtlQueries {
         java.nio.file.Files.deleteIfExists(
           java.nio.file.Paths.get(s"$base/manifests/v1.txt"))
         swept.foreach { case (p, ver) =>
-          deleteRecursively(new java.io.File(s"$base/files/$ver/pt=$p"))
+          FileUtils.deleteQuietly(new java.io.File(s"$base/files/$ver/pt=$p"))
         }
         val m2ByPt = m2.toMap
         s.read.parquet(swept.map { case (p, _) =>
@@ -1152,7 +1137,7 @@ object EtlQueries {
       // discipline) — if it fell but the audit never landed, some
       // swept dirs may be gone; rebuild the isolated store from source
       if (!new java.io.File(s"$base/manifests/v1.txt").exists()) {
-        deleteRecursively(new java.io.File(base))
+        FileUtils.deleteQuietly(new java.io.File(base))
         base = ensureTimeTravelVersions(s, d, "vacref")
       }
       val m1 = readManifest(base, 1)
@@ -1206,13 +1191,13 @@ object EtlQueries {
       // CLONE DROP, then phase 2 sweeps for real — reclaim counts are
       // sized BEFORE the delete (≤ 8 dirs), the v1 manifest falls
       // first (the vacuum tombstone ordering)
-      deleteRecursively(new java.io.File(cloneDir))
+      FileUtils.deleteQuietly(new java.io.File(cloneDir))
       val g2 = garbage()
       val counted = if (g2.isEmpty) 0L
         else s.read.parquet(g2.map(pathOf): _*).count()
       java.nio.file.Files.deleteIfExists(
         java.nio.file.Paths.get(s"$base/manifests/v1.txt"))
-      g2.foreach(e => deleteRecursively(new java.io.File(pathOf(e))))
+      g2.foreach(e => FileUtils.deleteQuietly(new java.io.File(pathOf(e))))
       val row2 = phaseRow(2L, g2.size.toLong, counted, None)
       row1.unionByName(row2).orderBy(col("phase"))
         .write.mode("overwrite").parquet(auditPath)
@@ -1429,7 +1414,7 @@ object EtlQueries {
           // overwritten (versionedSink's discipline) so the retry cannot
           // wedge on a rename into an existing dir.
           val dest = new java.io.File(s"$base/files/$name")
-          if (dest.exists()) deleteRecursively(dest)
+          FileUtils.deleteQuietly(dest)
           require(new java.io.File(s"$base/staging/$name")
             .renameTo(dest), "publish rename failed")
           entries = entries :+ (entries.size -> name)
@@ -1491,7 +1476,7 @@ object EtlQueries {
         .write.mode("overwrite").partitionBy("pt").parquet(s"$base/files/base")
       // a crashed prior run in this pid-scoped dir may have left later
       // manifests; the bootstrap owns the store, so reset to a clean v1
-      deleteRecursively(new java.io.File(s"$base/manifests"))
+      FileUtils.deleteQuietly(new java.io.File(s"$base/manifests"))
       require(ManifestCommit.cas(base, 1, (0 to 7).map(p => p -> "base")),
         "v1 bootstrap CAS failed")
 
@@ -1609,7 +1594,7 @@ object EtlQueries {
         .write.mode("overwrite").partitionBy("pt").parquet(s"$base/files/alt")
       // a crashed prior attempt left no audit: the bootstrap owns the
       // store, reset to a clean history
-      deleteRecursively(new java.io.File(s"$base/manifests"))
+      FileUtils.deleteQuietly(new java.io.File(s"$base/manifests"))
       val cur = scala.collection.mutable.Map((0 to 7).map(p => p -> "base"): _*)
       for (k <- 1 to 1100) {
         val p = (k - 1) % 8
@@ -2289,8 +2274,8 @@ object EtlQueries {
     * discipline — estimates are deterministic, not approximately
     * compared). Exact row/null counts ride the same pass.
     *
-    * Adjudicated residual ([[graft.KmvProfile]] decomposition at
-    * sf0.1, min-of-5 one JVM): count-only floor 356 ms; + the 7-column
+    * Residual at sf0.1 (min-of-5, one JVM; BASELINE.md
+    * "etl_stats_approx"): count-only floor 356 ms; + the 7-column
     * decode (raw isNull sums, zero repr/sketch work) 953 ms; + repr
     * expressions 1123 ms; full query 1210 ms. The sketch machinery is
     * therefore ≤ ~260 ms of the total — the rest is the action floor
@@ -2327,12 +2312,12 @@ object EtlQueries {
     // (column × task). The residual over the action floor is the
     // per-value Java digest+TreeSet work a TypedImperativeAggregate
     // pays outside codegen — the price of an oracle-replayable hash.
-    // null counts check the RAW column, not the repr (KmvProfile
-    // finding): every repr is null-preserving (casts, floor·100,
-    // date_format of a non-null date), so the two are equal — but
-    // evaluating the full cast/format chain per row just for isNull
-    // cost 0.62 s of the 1.33 s query even codegen'd (KmvProfile:
-    // count_only 358 ms / +codegen-repr-sums 982 / full 1332)
+    // null counts check the RAW column, not the repr: every repr is
+    // null-preserving (casts, floor·100, date_format of a non-null
+    // date), so the two are equal — but evaluating the full
+    // cast/format chain per row just for isNull cost 0.62 s of the
+    // 1.33 s query even codegen'd (count-only 358 ms, repr-based null
+    // sums 982 ms, full query 1332 ms at sf0.1)
     val rawCols = Seq("l_orderkey", "l_linenumber", "l_quantity",
       "l_extendedprice", "l_returnflag", "l_linestatus", "l_shipdate")
     val aggCols = Seq(count(lit(1)).as("n_rows_all")) ++
@@ -2906,12 +2891,12 @@ object EtlQueries {
     * the condition under which Spark trusts `sortBy` order at read
     * time (per-FILE sort ≠ per-bucket sort when buckets fragment) and
     * elides the SMJ's sort as well as its exchange. Table identity is
-    * (source mtime digest, dir hash, pid): a regenerated source gets a
+    * ([[SourceKey]], dir hash, pid): a regenerated source gets a
     * fresh table, two concurrent processes never race on one path, and
     * a repeat call in the same session reuses the catalog entry. */
   private def bucketedTable(s: SparkSession, d: String, table: String,
       key: String, nBuckets: Int): String = {
-    val name = s"graft_bkt_${table}_${mtimeKey(d, table)}_" +
+    val name = s"graft_bkt_${table}_${SourceKey.of(d, table)}_" +
       s"d${d.hashCode & Int.MaxValue}_p${ProcessHandle.current().pid()}"
     if (!s.catalog.tableExists(name)) {
       val dir = scratchDir(s"bkt$table", d, table)

@@ -49,8 +49,10 @@ object Streams extends Serializable {
     // IS the recovery story — so they live in RAM (/dev/shm) when the
     // host has it: the default temp checkpoint lands on disk, where
     // every micro-batch fsyncs state-store deltas plus offset/commit
-    // logs (measured: the dominant share of the replay floor is
-    // per-batch machinery, graft.StreamFloor). A LIVE deployment sets
+    // logs. An empty replay of stream_interval_left costs as much as
+    // the full sf0.1 one (stream_floor_r12.json: 5.26 vs 5.27 s), so
+    // that per-batch machinery is the replay floor; RAM checkpoints
+    // cut it 5.83 → 4.39 s (BASELINE.md). A LIVE deployment sets
     // a durable checkpointLocation instead — this path is only taken
     // when the caller did not configure one.
     // capacity-gated: containers often mount /dev/shm at 64 MB, where
