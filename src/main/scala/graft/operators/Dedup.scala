@@ -164,18 +164,8 @@ object Dedup {
     * Beyond either cap the shuffle-join / prefix-join paths are the
     * scale-correct shapes. Shared by every strategy dispatch so a
     * tuning change can't leave one path behind. */
-  // Overridable for strategy A/B benchmarking (set to 0 to force the
-  // prefix-join / shuffle paths); defaults are the production caps.
-  // Malformed values fail with a message naming the env var — a bare
-  // .toLong would surface as an opaque ExceptionInInitializerError.
-  private def capEnv(name: String, dflt: Long): Long =
-    sys.env.get(name).map(_.trim).filter(_.nonEmpty) match {
-      case None => dflt
-      case Some(v) => v.toLongOption.getOrElse(
-        throw new IllegalArgumentException(s"$name must be a long, got '$v'"))
-    }
-  private val BitsetUniverseCap = capEnv("GRAFT_BITSET_UNIVERSE_CAP", 16384L)
-  private val BitsetDocCap = capEnv("GRAFT_BITSET_DOC_CAP", 20000L)
+  private val BitsetUniverseCap = 16384L
+  private val BitsetDocCap = 20000L
 
   private def shStats(sh: DataFrame): (Long, Long) = {
     val r = sh.agg(countDistinct(col("sh")).as("u"),

@@ -7,7 +7,6 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.execution.datasources.jdbc.{JdbcOptionsInWrite, JdbcUtils}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.jdbc.JdbcDialects
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
@@ -285,7 +284,10 @@ object PgBinaryCopy {
   *    the live table schema: every dataframe column must land on an
   *    existing db column, via the optional alias map (`parquet_to_db`)
   *    or by bearing the same name; a missing table, missing column or
-  *    unknown alias is an error BEFORE any data moves.
+  *    unknown alias is an error BEFORE any data moves. One driver
+  *    session per write reads the table's columns, resolved by the
+  *    server as the load itself resolves the name, and serves both
+  *    `COUNT(*)`s of the delta check.
   *  - `jdbc:postgresql:` targets load by per-partition binary `COPY FROM
   *    STDIN` over graft's own protocol-v3 client ([[PgWire]]), with no
   *    driver jar. The partitions read the plan's `InternalRow`s
@@ -336,51 +338,61 @@ object PgCopySink {
   def write(df: DataFrame, url: String, table: String,
       aliases: Map[String, Option[String]] = Map.empty,
       sourceFields: Option[Seq[String]] = None): Long = {
-    val dbCols = tableColumns(url, table)
-    if (dbCols.isEmpty)
-      throw new IllegalArgumentException(s"table '$table' does not exist in connected db")
-    val originals = sourceFields.getOrElse(df.columns.toSeq)
-    require(originals.length == df.columns.length,
-      s"sourceFields size ${originals.length} != dataframe width ${df.columns.length}")
-    val targets = resolveColumns(originals, dbCols, aliases)
-    require(targets.distinct.length == targets.length,
-      s"duplicate target column(s): ${targets.diff(targets.distinct).distinct.mkString(", ")}")
-    val renamed = df.select(df.columns.toSeq.zip(targets)
-      .map { case (c, t) => col(c).as(t) }: _*)
+    val target = session(url, table)
+    try {
+      val dbCols = target.columns()
+      if (dbCols.isEmpty)
+        throw new IllegalArgumentException(s"table '$table' does not exist in connected db")
+      val originals = sourceFields.getOrElse(df.columns.toSeq)
+      require(originals.length == df.columns.length,
+        s"sourceFields size ${originals.length} != dataframe width ${df.columns.length}")
+      val targets = resolveColumns(originals, dbCols, aliases)
+      require(targets.distinct.length == targets.length,
+        s"duplicate target column(s): ${targets.diff(targets.distinct).distinct.mkString(", ")}")
+      val schema = StructType(df.schema.fields.zip(targets).map { case (f, t) => f.copy(name = t) })
 
-    val before = tableCount(url, table)
-    val loaded =
-      if (isPostgres(url)) {
-        val load = copyLoader(PgWire.parse(url), table, renamed.schema)
-        renamed.queryExecution.toRdd.mapPartitions(rows => Iterator(load(rows))).collect().sum
-      } else {
-        val load = insertLoader(url, table, renamed.schema)
-        renamed.rdd.mapPartitions(rows => Iterator(load(rows))).collect().sum
-      }
-    val landed = tableCount(url, table) - before
-    if (landed != loaded)
-      throw new IllegalStateException(
-        s"load landed $landed rows for $loaded inputs — a task retry or " +
-          "speculative duplicate re-sent a partition (per-partition loads " +
-          "are at-least-once); de-duplicate the target or reload through " +
-          "a staging table")
-    loaded
+      val before = target.count()
+      val loaded =
+        if (isPostgres(url)) {
+          val load = copyLoader(PgWire.parse(url), table, schema)
+          df.queryExecution.toRdd.mapPartitions(rows => Iterator(load(rows))).collect().sum
+        } else {
+          val load = insertLoader(url, table, schema)
+          df.rdd.mapPartitions(rows => Iterator(load(rows))).collect().sum
+        }
+      val landed = target.count() - before
+      if (landed != loaded)
+        throw new IllegalStateException(
+          s"load landed $landed rows for $loaded inputs — a task retry or " +
+            "speculative duplicate re-sent a partition (per-partition loads " +
+            "are at-least-once); de-duplicate the target or reload through " +
+            "a staging table")
+      loaded
+    } finally target.close()
   }
 
-  /** Resolve the dataframe→db column names through the alias map and
-    * fail fast on anything that doesn't land on a real column. */
+  /** Resolve the dataframe→db column names through the alias map to the
+    * catalog's spelling of each column — an exact match, else the one
+    * case-insensitive match — and fail fast on anything that doesn't
+    * land on exactly one real column. */
   private def resolveColumns(dfCols: Seq[String], dbCols: Seq[String],
       aliases: Map[String, Option[String]]): Seq[String] = {
-    val dbSet = dbCols.toSet
+    def column(name: String): Option[String] =
+      if (dbCols.contains(name)) Some(name)
+      else dbCols.filter(_.equalsIgnoreCase(name)) match {
+        case Seq() => None
+        case Seq(c) => Some(c)
+        case cs => throw new IllegalArgumentException(
+          s"'$name' matches columns ${cs.mkString("'", "' and '", "'")} of the " +
+            "target table only by case; name one of them exactly")
+      }
     dfCols.map { c =>
-      val target = aliases.get(c).flatten.getOrElse(c)
-      if (aliases.get(c).flatten.isDefined && !dbSet.contains(target.toLowerCase))
-        throw new IllegalArgumentException(
-          s"alias '$target' for parquet field '$c' is not a column of the target table")
-      if (!dbSet.contains(target.toLowerCase))
-        throw new IllegalArgumentException(
-          s"parquet field '$c' has no alias and no same-named column in the target table")
-      target
+      aliases.get(c).flatten match {
+        case Some(alias) => column(alias).getOrElse(throw new IllegalArgumentException(
+          s"alias '$alias' for parquet field '$c' is not a column of the target table"))
+        case None => column(c).getOrElse(throw new IllegalArgumentException(
+          s"parquet field '$c' has no alias and no same-named column in the target table"))
+      }
     }
   }
 
@@ -392,7 +404,7 @@ object PgCopySink {
       throw new IllegalArgumentException(
         s"column '${f.name}': ${f.dataType.simpleString} has no PG binary " +
           "mapping — project it away or load through a jdbc driver")))
-    val colList = schema.fieldNames.map(c => s""""$c"""").mkString(", ")
+    val colList = schema.fieldNames.map(c => "\"" + c.replace("\"", "\"\"") + "\"").mkString(", ")
     val copySql = s"COPY $table ($colList) FROM STDIN WITH (FORMAT binary)"
     rows =>
       if (!rows.hasNext) 0L
@@ -404,15 +416,14 @@ object PgCopySink {
   }
 
   /** One partition → Spark's batched INSERTs in one transaction; returns
-    * the rows it bound. The statement names the table's own columns
-    * (Derby and others fold unquoted names to upper case, and the
-    * insert quotes what it is given). */
+    * the rows it bound. `schema` carries the catalog's column names,
+    * which the statement quotes as given (Derby and others fold
+    * unquoted names to upper case). */
   private def insertLoader(url: String, table: String,
       schema: StructType): Iterator[Row] => Long = {
     val opts = new JdbcOptionsInWrite(url, table, Map.empty[String, String])
     val dialect = JdbcDialects.get(url)
-    val insert = JdbcUtils.getInsertStatement(table, schema,
-      jdbcTableSchema(url, table), false, dialect)
+    val insert = JdbcUtils.getInsertStatement(table, schema, None, false, dialect)
     rows => {
       var n = 0L
       JdbcUtils.savePartition(table, rows.map { r => n += 1; r }, schema, insert,
@@ -421,60 +432,50 @@ object PgCopySink {
     }
   }
 
-  /** Lower-cased columns of `table` in ordinal order; empty when the
-    * table does not exist. */
-  private[graft] def tableColumns(url: String, table: String): Seq[String] =
-    if (isPostgres(url)) pgTableColumns(PgWire.parse(url), table)
-    else jdbcTableSchema(url, table).toSeq.flatMap(_.fieldNames.map(_.toLowerCase))
-
-  /** The schema of `SELECT * FROM table WHERE 1=0` — the same name
-    * resolution the INSERT itself gets, so there is no metadata search
-    * pattern to escape. */
-  private def jdbcTableSchema(url: String, table: String): Option[StructType] = {
-    val conn = DriverManager.getConnection(url)
-    try JdbcUtils.getSchemaOption(conn,
-      new JdbcOptionsInWrite(url, table, Map.empty[String, String]))
-    finally conn.close()
+  /** Columns of `table` as its catalog spells them, in ordinal order;
+    * empty when the table does not exist. */
+  private[graft] def tableColumns(url: String, table: String): Seq[String] = {
+    val target = session(url, table)
+    try target.columns() finally target.close()
   }
 
-  /** Columns of a Postgres `table` via the wire client (PG folds
-    * unquoted identifiers to lower case, so the lookup key is the
-    * lower-cased name). information_schema is a plain query: no
-    * metadata API, no search-pattern escaping hazard. */
-  private def pgTableColumns(t: PgWire.Target, table: String): Seq[String] = {
-    // a schema-qualified target ('etl.orders') must be looked up as
-    // (table_schema='etl', table_name='orders') — querying
-    // table_name='etl.orders' in current_schema() finds nothing and
-    // write() would abort on a table COPY itself accepts
-    val (schemaPred, rel) = table.indexOf('.') match {
-      case -1 => ("current_schema()", table)
-      case i =>
-        val s = table.take(i).toLowerCase.replace("'", "''")
-        (s"'$s'", table.drop(i + 1))
-    }
-    val esc = rel.toLowerCase.replace("'", "''")
-    val conn = PgWire.connect(t)
-    try conn.query(
-      "SELECT column_name FROM information_schema.columns " +
-        s"WHERE table_schema = $schemaPred AND table_name = '$esc' " +
-        "ORDER BY ordinal_position")._2.map(_(0).toLowerCase)
-    finally conn.close()
-  }
-
-  /** COUNT(*) of the target table — the before/after delta is the only
+  /** The driver's one connection for a write: it reads the target's
+    * columns and serves the before/after `COUNT(*)`, the only
     * retry-duplication signal visible from the driver. */
-  private def tableCount(url: String, table: String): Long = {
-    val sql = s"SELECT COUNT(*) FROM $table"
+  private trait TargetSession extends AutoCloseable {
+    /** Catalog spelling, ordinal order; empty for no such table. */
+    def columns(): Seq[String]
+    def count(): Long
+  }
+
+  private def session(url: String, table: String): TargetSession = {
+    val countSql = s"SELECT COUNT(*) FROM $table"
     if (isPostgres(url)) {
       val conn = PgWire.connect(PgWire.parse(url))
-      try conn.query(sql)._2.head(0).toLong
-      finally conn.close()
+      new TargetSession {
+        // to_regclass resolves the name as written (quotes, schema,
+        // search_path) the way COPY will, and is NULL for no such table
+        def columns(): Seq[String] = conn.query("SELECT attname FROM pg_attribute " +
+          s"WHERE attrelid = to_regclass('${table.replace("'", "''")}') " +
+          "AND attnum > 0 AND NOT attisdropped ORDER BY attnum")._2.map(_(0))
+        def count(): Long = conn.query(countSql)._2.head(0).toLong
+        def close(): Unit = conn.close()
+      }
     } else {
       val conn = DriverManager.getConnection(url)
-      try {
-        val rs = conn.createStatement().executeQuery(sql)
-        rs.next(); rs.getLong(1)
-      } finally conn.close()
+      new TargetSession {
+        // the schema of `SELECT * FROM table WHERE 1=0`: the same name
+        // resolution the INSERT itself gets
+        def columns(): Seq[String] = JdbcUtils.getSchemaOption(conn,
+          new JdbcOptionsInWrite(url, table, Map.empty[String, String]))
+          .toSeq.flatMap(_.fieldNames)
+        def count(): Long = {
+          val st = conn.createStatement()
+          try { val rs = st.executeQuery(countSql); rs.next(); rs.getLong(1) }
+          finally st.close()
+        }
+        def close(): Unit = conn.close()
+      }
     }
   }
 }

@@ -268,15 +268,43 @@ final class PgWireConn private[sinks] (ch: SocketChannel, t: PgWire.Target)
     new PgServerException(state, s"$sev $state: $msg")
   }
 
-  /** Read to ReadyForQuery, remembering the last CommandComplete tag
-    * and any error (thrown AFTER the sync point so the connection
-    * stays usable). Async/housekeeping tags are skipped. */
-  private def drainToReady(): String = {
+  /** One simple-protocol reply: the last RowDescription's column names,
+    * the DataRows as text (null stays null) and the last CommandComplete
+    * tag. */
+  private final class Reply(val cols: Seq[String], val rows: Seq[Array[String]], val tag: String)
+
+  /** Read to ReadyForQuery. The first error (`first`, else the first
+    * ErrorResponse) is thrown AFTER the sync point so the connection
+    * stays usable; a CopyIn/CopyBoth response is refused; housekeeping
+    * tags are skipped. */
+  private def reply(first: PgServerException = null): Reply = {
+    var cols: Seq[String] = Nil
+    val rows = Seq.newBuilder[Array[String]]
     var tag: String = null
-    var err: PgServerException = null
+    var err = first
     var m = readMsg()
     while (m._1 != 'Z') {
       m._1 match {
+        case 'T' =>
+          val d = new DataInputStream(new java.io.ByteArrayInputStream(m._2))
+          val n = d.readShort()
+          cols = (0 until n).map { _ =>
+            // name is a UTF-8 cstring — collect bytes, decode once
+            // (per-byte toChar would mangle multibyte identifiers)
+            val bos = new ByteArrayOutputStream()
+            var b = d.readByte()
+            while (b != 0) { bos.write(b.toInt); b = d.readByte() }
+            d.skipBytes(18) // table oid, attnum, type oid, typlen, typmod, format
+            new String(bos.toByteArray, UTF_8)
+          }
+        case 'D' =>
+          val d = new DataInputStream(new java.io.ByteArrayInputStream(m._2))
+          val n = d.readShort()
+          rows += Array.tabulate(n) { _ =>
+            val len = d.readInt()
+            if (len == -1) null
+            else { val b = new Array[Byte](len); d.readFully(b); new String(b, UTF_8) }
+          }
         case 'C' =>
           val z = m._2.indexOf(0.toByte)
           tag = new String(m._2, 0, if (z < 0) m._2.length else z, UTF_8)
@@ -287,12 +315,12 @@ final class PgWireConn private[sinks] (ch: SocketChannel, t: PgWire.Target)
           // deadlock — refuse the transfer and keep draining to the
           // sync point (the server answers CopyFail with ErrorResponse)
           send('f', cstr("not a copy entry point")); out.flush()
-        case _ => () // T/D/I/N/S/A/K traffic the caller didn't want
+        case _ => () // I/N/S/A/K
       }
       m = readMsg()
     }
     if (err != null) throw err
-    tag
+    new Reply(cols, rows.result(), tag)
   }
 
   // ---- startup & auth ----------------------------------------------------
@@ -307,7 +335,7 @@ final class PgWireConn private[sinks] (ch: SocketChannel, t: PgWire.Target)
     body.writeTo(out)
     out.flush()
     authLoop()
-    drainToReady() // ParameterStatus / BackendKeyData up to ReadyForQuery
+    reply() // ParameterStatus / BackendKeyData up to ReadyForQuery
   }
 
   private def needPassword(): String = t.password.getOrElse(
@@ -393,7 +421,7 @@ final class PgWireConn private[sinks] (ch: SocketChannel, t: PgWire.Target)
     * tag (e.g. "CREATE TABLE"). */
   def exec(sql: String): String = {
     send('Q', cstr(sql)); out.flush()
-    drainToReady()
+    reply().tag
   }
 
   /** Simple-protocol query: (column names, rows as text — null stays
@@ -401,44 +429,8 @@ final class PgWireConn private[sinks] (ch: SocketChannel, t: PgWire.Target)
     * through COPY, never this. */
   def query(sql: String): (Seq[String], Seq[Array[String]]) = {
     send('Q', cstr(sql)); out.flush()
-    var cols: Seq[String] = Nil
-    val rows = Seq.newBuilder[Array[String]]
-    var err: PgServerException = null
-    var m = readMsg()
-    while (m._1 != 'Z') {
-      m._1 match {
-        case 'T' =>
-          val d = new DataInputStream(new java.io.ByteArrayInputStream(m._2))
-          val n = d.readShort()
-          cols = (0 until n).map { _ =>
-            // name is a UTF-8 cstring — collect bytes, decode once
-            // (per-byte toChar would mangle multibyte identifiers)
-            val bos = new ByteArrayOutputStream()
-            var b = d.readByte()
-            while (b != 0) { bos.write(b.toInt); b = d.readByte() }
-            d.skipBytes(18) // table oid, attnum, type oid, typlen, typmod, format
-            new String(bos.toByteArray, UTF_8)
-          }
-        case 'D' =>
-          val d = new DataInputStream(new java.io.ByteArrayInputStream(m._2))
-          val n = d.readShort()
-          rows += Array.tabulate(n) { _ =>
-            val len = d.readInt()
-            if (len == -1) null
-            else { val b = new Array[Byte](len); d.readFully(b); new String(b, UTF_8) }
-          }
-        case 'E' => if (err == null) err = parseError(m._2)
-        case 'G' | 'W' =>
-          // same refusal as drainToReady: a COPY statement routed
-          // through query() must not leave the server waiting for
-          // CopyData we will never send (mutual-wait deadlock)
-          send('f', cstr("not a copy entry point")); out.flush()
-        case _ => ()
-      }
-      m = readMsg()
-    }
-    if (err != null) throw err
-    (cols, rows.result())
+    val r = reply()
+    (r.cols, r.rows)
   }
 
   /** `COPY … FROM STDIN`: stream `data` to the server in CopyData
@@ -452,10 +444,7 @@ final class PgWireConn private[sinks] (ch: SocketChannel, t: PgWire.Target)
     var m = readMsg()
     while (m._1 != 'G') {
       m._1 match {
-        case 'E' =>
-          val e = parseError(m._2)
-          drainToReady() // swallow tags up to the sync point, keep e
-          throw e
+        case 'E' => reply(parseError(m._2)) // throws it at the sync point
         case 'Z' => throw new IllegalStateException(
           s"server never entered copy-in mode for: $sql")
         case _ => () // N / S
@@ -486,13 +475,13 @@ final class PgWireConn private[sinks] (ch: SocketChannel, t: PgWire.Target)
         try {
           send('f', cstr(s"producer failed: ${producerFailure.getMessage}"))
           out.flush()
-          drainToReady()
+          reply()
         } catch { case _: Throwable => () } // the original error wins
         throw producerFailure
     }
     send('c', Array.emptyByteArray) // CopyDone
     out.flush()
-    val tag = drainToReady()
+    val tag = reply().tag
     require(tag != null && tag.startsWith("COPY "),
       s"expected COPY completion tag, got '$tag'")
     tag.stripPrefix("COPY ").trim.toLong

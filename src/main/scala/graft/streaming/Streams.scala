@@ -1,6 +1,7 @@
 package graft.streaming
 
 import java.sql.Timestamp
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -82,12 +83,7 @@ object Streams extends Serializable {
       // drops this temp view (see freshMemoryTable), which would turn a
       // still-held lazy reference into a table-not-found error mid-use
       s.table(name).localCheckpoint()
-    } finally ckpt.foreach { p =>
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(p.toFile)
-    }
+    } finally ckpt.foreach(p => FileUtils.deleteQuietly(p.toFile))
   }
 
   private def eventStream(s: SparkSession, d: String,
@@ -248,10 +244,7 @@ object Streams extends Serializable {
     } finally {
       // reclaim the temp dir on EVERY path (a failed run must not
       // accumulate /tmp litter across bench/verify rounds)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(hbDir))
+      FileUtils.deleteQuietly(new java.io.File(hbDir))
     }
   }
 
@@ -501,12 +494,7 @@ object Streams extends Serializable {
       // watermark node and starve it (see intervalJoinLeft)
       assertSessionSeparation(out.filter(col("user_id") =!= HbUser), gapSec)
         .orderBy(col("user_id"), col("start"))
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(hbDir))
-    }
+    } finally FileUtils.deleteQuietly(new java.io.File(hbDir))
   }
 
   /** Identical result set to full batch sessionization: every real
@@ -637,12 +625,7 @@ object Streams extends Serializable {
       // (an in-plan filter would push below the watermark node)
       out.filter(col("event_type") =!= HbType)
         .orderBy(col("event_type"), col("window_start"))
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(hbDir))
-    }
+    } finally FileUtils.deleteQuietly(new java.io.File(hbDir))
   }
 
   /** Every closed window flagged against prior-window running stats —

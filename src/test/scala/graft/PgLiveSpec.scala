@@ -21,7 +21,9 @@ import graft.sinks.{PgBinaryCopy, PgCopySink, PgServer, PgWire}
   *     through per-partition `COPY FROM STDIN` over graft's own
   *     protocol-v3 wire client — no pgjdbc anywhere — and the
   *     server-side readback value-compares; `Pipeline.run` loads the
-  *     server from a `jdbc:postgresql:` conn_str.
+  *     server from a `jdbc:postgresql:` conn_str; the server resolves
+  *     the target (quoted names, search_path, column case) on the
+  *     write's one driver session.
   *  3. the auth matrix of the wire client against the live server:
   *     scram-sha-256, md5, and cleartext `password` hba methods, plus
   *     a wrong-password rejection with the server's SQLSTATE.
@@ -179,6 +181,100 @@ class PgLiveSpec extends AnyFunSuite {
     assert(psql(l, "SELECT COUNT(*), SUM(k)::bigint FROM graft_etl.orders_q").trim
       == "100|4950")
     assert(psql(l, "SELECT s FROM graft_etl.orders_q WHERE k = 42").trim == "r-42")
+  }
+
+  test("a quoted mixed-case table loads under the name COPY accepts") {
+    val l = live
+    val conn = PgWire.connect(l.target)
+    try {
+      conn.exec("DROP TABLE IF EXISTS \"LoadTarget\"")
+      conn.exec("CREATE TABLE \"LoadTarget\" (k bigint, s text)")
+      val df = spark.range(0, 50).selectExpr("id AS k", "concat('r-', id) AS s")
+      assert(PgCopySink.write(df, l.url, "\"LoadTarget\"") == 50)
+      assert(conn.query("SELECT COUNT(*), SUM(k) FROM \"LoadTarget\"")._2.head.toSeq ==
+        Seq("50", "1225"))
+    } finally conn.close()
+  }
+
+  test("a table reached through search_path past current_schema() loads") {
+    val l = live
+    val conn = PgWire.connect(l.target)
+    try {
+      // a role of its own, so no other session sees the changed path
+      conn.exec("DROP SCHEMA IF EXISTS graft_sp_a, graft_sp_b CASCADE")
+      conn.exec("DROP ROLE IF EXISTS graft_sp")
+      conn.exec("CREATE ROLE graft_sp LOGIN")
+      conn.exec("CREATE SCHEMA graft_sp_a")
+      conn.exec("CREATE SCHEMA graft_sp_b")
+      conn.exec("CREATE TABLE graft_sp_b.sp_target (k bigint)")
+      conn.exec("GRANT USAGE ON SCHEMA graft_sp_a, graft_sp_b TO graft_sp")
+      conn.exec("GRANT SELECT, INSERT ON graft_sp_b.sp_target TO graft_sp")
+      conn.exec("ALTER ROLE graft_sp SET search_path = graft_sp_a, graft_sp_b")
+      try {
+        val url = s"jdbc:postgresql://localhost:${l.port}/${l.db}?user=graft_sp&socketDir=${l.socketDir}"
+        val c = PgWire.connect(PgWire.parse(url))
+        try assert(c.query("SELECT current_schema()")._2.head(0) == "graft_sp_a")
+        finally c.close()
+        assert(PgCopySink.write(spark.range(0, 30).toDF("k"), url, "sp_target") == 30)
+        assert(conn.query("SELECT COUNT(*), SUM(k) FROM graft_sp_b.sp_target")._2.head.toSeq ==
+          Seq("30", "435"))
+      } finally conn.exec("ALTER ROLE graft_sp RESET search_path")
+    } finally conn.close()
+  }
+
+  test("a field that matches an unquoted column only by case loads into it") {
+    val l = live
+    psql(l, "DROP TABLE IF EXISTS graft_case")
+    psql(l, "CREATE TABLE graft_case (orderkey bigint, note text)")
+    val df = spark.range(0, 40).selectExpr("id AS OrderKey", "'n' AS note")
+    assert(PgCopySink.write(df, l.url, "graft_case") == 40)
+    assert(psql(l, "SELECT COUNT(*), SUM(orderkey)::bigint, COUNT(note) FROM graft_case").trim ==
+      "40|780|40")
+  }
+
+  test("a one-partition write opens two server sessions: the driver's and one COPY") {
+    val l = live
+    val monitor = PgWire.connect(l.target)
+    try {
+      monitor.exec("DROP TABLE IF EXISTS graft_sessions")
+      monitor.exec("CREATE TABLE graft_sessions (k bigint)")
+      // a backend adds its session to pg_stat_database by the time it
+      // leaves pg_stat_activity
+      def sessions(): Long = {
+        var left = 400
+        while (left > 0 && monitor.query("SELECT count(*) FROM pg_stat_activity " +
+            "WHERE backend_type = 'client backend' AND pid <> pg_backend_pid()")._2
+            .head(0) != "0") { Thread.sleep(5); left -= 1 }
+        monitor.query("SELECT sessions FROM pg_stat_database " +
+          "WHERE datname = current_database()")._2.head(0).toLong
+      }
+      val before = sessions()
+      assert(PgCopySink.write(spark.range(0, 100, 1, 1).toDF("k"), l.url, "graft_sessions") == 100)
+      assert(sessions() - before == 2)
+    } finally monitor.close()
+  }
+
+  test("a missing table, an unknown alias or a name matching two columns by case fails before any job") {
+    val l = live
+    val conn = PgWire.connect(l.target)
+    try {
+      conn.exec("DROP TABLE IF EXISTS graft_reject")
+      conn.exec("CREATE TABLE graft_reject (k bigint, \"Amount\" float8, \"AMOUNT\" float8)")
+      val df = spark.range(0, 10).selectExpr("id AS k", "CAST(id AS DOUBLE) AS amount")
+      def rejected(table: String, aliases: Map[String, Option[String]]): String = {
+        val (e, jobs) = org.apache.spark.graft.JobProbe(spark.sparkContext)(
+          intercept[IllegalArgumentException](PgCopySink.write(df, l.url, table, aliases)))
+        assert(jobs.count == 0)
+        e.getMessage
+      }
+      assert(rejected("graft_no_such_table", Map.empty) ==
+        "table 'graft_no_such_table' does not exist in connected db")
+      assert(rejected("graft_reject", Map("amount" -> Some("amt"))) ==
+        "alias 'amt' for parquet field 'amount' is not a column of the target table")
+      val ambiguous = rejected("graft_reject", Map.empty)
+      assert(ambiguous.contains("'Amount'") && ambiguous.contains("'AMOUNT'"), ambiguous)
+      assert(conn.query("SELECT COUNT(*) FROM graft_reject")._2.head(0) == "0")
+    } finally conn.close()
   }
 
   test("TIMESTAMP_NTZ round-trips unshifted into a timestamp column") {
