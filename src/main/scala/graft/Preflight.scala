@@ -113,14 +113,16 @@ object Preflight {
     // columns (long) — preflight must see the same shape the readers do
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     expectations.toSeq.sortBy(_._1).flatMap { case (table, cols) =>
-      val path = s"$dir/$table.parquet"
+      // the frame the queries read: Tables.t's memoized footer, so
+      // Tables.registerViews after this opens no table again
       val loaded =
-        try Right(spark.read.parquet(path).schema)
-        catch { case e: Throwable => Left(s"$table: unreadable at $path (${e.getClass.getSimpleName})") }
+        try Right(Tables.t(spark, dir, table))
+        catch { case e: Throwable =>
+          Left(s"$table: unreadable at $dir/$table.parquet (${e.getClass.getSimpleName})") }
       loaded match {
         case Left(err) => Seq(err)
-        case Right(schema) =>
-          val byName = schema.fields.map(f => f.name -> f.dataType).toMap
+        case Right(frame) =>
+          val byName = frame.schema.fields.map(f => f.name -> f.dataType).toMap
           val typeViolations = cols.flatMap { case (col, ok, expected) =>
             byName.get(col) match {
               case None => Some(s"$table.$col: MISSING (expected $expected)")
@@ -135,7 +137,7 @@ object Preflight {
             if (table == "events" && typeViolations.isEmpty &&
                 byName.get("ts").contains(LongType)) {
               import org.apache.spark.sql.functions.{abs, col, max}
-              Option(spark.read.parquet(path).agg(max(abs(col("ts"))))
+              Option(frame.agg(max(abs(col("ts"))))
                   .head.get(0)).map(_.asInstanceOf[Long]) match {
                 case Some(mx) if mx < MinPlausibleEpochNanos => Seq(
                   s"events.ts: LongType but max |ts| = $mx < 1e16 — these are " +

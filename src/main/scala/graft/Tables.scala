@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.graftParquetShim
+import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
 
 /** Table loader for the driver-generated TPC-H-ish testdata.
   *
@@ -14,41 +17,52 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Per-(session, dir, content) memo of the RESOLVED base-table frames
-    * (r14 optimization, guide §1.2-1/§6 — "shared scan relations"):
-    * every query construction previously paid a fresh
-    * `spark.read.parquet` per table it touches — a driver parquet
-    * footer read for schema inference plus a new file index, ~20-60 ms
-    * each, 1-3 tables per query × 210 queries ≈ 10-20 s of every cold
-    * session. The memo reuses the resolved PLAN (schema + file
-    * listing) only; every action still computes from the parquet
-    * input — no rows, results or intermediates are cached. Keys:
-    * weak session reference (the viewsRegistered precedent — never
-    * pin a stopped session), plus [[SourceKey]] content fingerprint so
-    * a regenerated table (the ScaleUp/amp scratch dirs) misses instead
-    * of serving a stale file listing. */
-  private val frameMemo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[(String, String, Long), DataFrame]]())
+  /** What one driver-side footer read learns about `$dir/$name.parquet`:
+    * the schema `spark.read.parquet` infers (None where only Spark's own
+    * inference applies, see [[graftParquetShim.readFooter]]) and the
+    * table's row count. Valid while the table's [[SourceKey]] and the
+    * session's inference settings stay as they were when it was read. */
+  private[graft] final case class Opened(key: Long, settings: graftParquetShim.Settings,
+      schema: Option[StructType], rows: Option[Long])
 
-  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val perSession = frameMemo.synchronized {
-      var m = frameMemo.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[(String, String, Long), DataFrame]()
-        frameMemo.put(spark, m)
-      }
-      m
-    }
-    perSession.computeIfAbsent((dir, name, SourceKey.of(dir, name)),
-      _ => spark.read.parquet(s"$dir/$name.parquet"))
+  /** One entry per (dir, name), replaced when its key or settings
+    * change, so a regenerated table (the ScaleUp/amp scratch dirs)
+    * re-reads its footer and leaves no stale entry behind. It holds no
+    * DataFrame and so pins no session: [[t]] builds a frame per call
+    * from the memoized schema. An open through `spark.read.parquet`
+    * infers the schema in a one-task Spark job; Preflight plus
+    * registerViews ran 20 of them, and on perfbench's `read_side`
+    * (sf0.1, local[4], 4 cores) the set-up's program share fell from
+    * 3.90 to 1.34 s without them (medians of 10 runs). */
+  private val opened =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), Opened]()
+
+  private def open(spark: SparkSession, dir: String, name: String): Opened = {
+    val key = SourceKey.of(dir, name)
+    val settings = graftParquetShim.settings(spark)
+    opened.compute((dir, name), (_, e) =>
+      if (e != null && e.key == key && e.settings == settings) e
+      else {
+        val footer = graftParquetShim.readFooter(spark, Seq(s"$dir/$name.parquet"))
+        Opened(key, settings, footer.map(_.schema),
+          footer.map(graftParquetShim.rowCount(spark, _)))
+      })
   }
+
+  /** The memo entries under `dir`, by table name, for specs. */
+  private[graft] def openedAt(dir: String): Map[String, Opened] =
+    opened.entrySet.asScala.collect { case e if e.getKey._1 == dir => e.getKey._2 -> e.getValue }.toMap
+
+  def t(spark: SparkSession, dir: String, name: String): DataFrame =
+    open(spark, dir, name).schema.fold(spark.read)(spark.read.schema(_))
+      .parquet(s"$dir/$name.parquet")
 
   /** Register every testdata table as a temp view so the whole surface
     * is reachable from `spark.sql(...)` as well as the DataFrame API.
-    * Memoized per (session, dir): re-registering costs ~10 footer
-    * reads (~0.5 s) and the views are session-global state anyway —
-    * only a DIFFERENT dir (the ScaleUp x1/xR alternation) re-binds. */
+    * Memoized per (session, dir): the views are session-global state
+    * anyway, so only a DIFFERENT dir (the ScaleUp x1/xR alternation)
+    * re-binds. The footers come from the [[open]] memo, so registering
+    * runs no Spark job. */
   private val viewsRegistered = java.util.Collections.synchronizedMap(
     // weak keys: the memo must never pin a stopped session (and its
     // SessionState) for the JVM lifetime — review r12
@@ -111,40 +125,14 @@ object Tables {
   def embeddings(s: SparkSession, d: String): DataFrame = t(s, d, "embeddings")
 
   /** Exact row count of `$dir/$name.parquet` read from the parquet
-    * FOOTERS on the driver — no Spark job at all, so the self-tuning
-    * rules (minhash band rows, embedding bits, the pagerank broadcast
-    * gate) cost file-metadata reads, not a scheduled count() action
-    * (~0.1-0.4 s each at local[32], and a full stage round-trip on a
-    * real cluster). Works for a single file or a directory of part
-    * files. Scale note: footer reads are per-file driver IO — at a
-    * 100k-file table prefer the catalog/statistics path; the tuning
-    * rules only need order-of-magnitude, so even sampling the file
-    * list would do. */
+    * FOOTERS on the driver, from the same memo entry as the table's
+    * schema — no Spark job, so the self-tuning rules (minhash band
+    * rows, embedding bits, the pagerank broadcast gate) cost
+    * file-metadata reads, not a scheduled count() action. Works for a
+    * single file or a directory of part files; a layout the footer
+    * read does not cover (a partitioned directory) counts with Spark.
+    * Scale note: footer reads are per-file driver IO — at a 100k-file
+    * table prefer the catalog/statistics path. */
   def footerRowCount(s: SparkSession, dir: String, name: String): Long =
-    // process-lifetime memo keyed by content fingerprint (r14): the
-    // self-tuning rules (minhash band rows, semantic k, amp factor)
-    // re-derive this constant on every query construction — a footer
-    // open per call. SourceKey in the key makes a regenerated table
-    // (length/mtime change) miss instead of serving a stale count.
-    footerCountMemo.computeIfAbsent((dir, name, SourceKey.of(dir, name)),
-      _ => footerRowCountUncached(s, dir, name))
-
-  private val footerCountMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Long), Long]()
-
-  private def footerRowCountUncached(s: SparkSession, dir: String, name: String): Long = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val conf = s.sessionState.newHadoopConf()
-    val f = new java.io.File(s"$dir/$name.parquet")
-    val files =
-      if (f.isDirectory)
-        f.listFiles.filter(x => x.isFile && x.getName.endsWith(".parquet"))
-      else Array(f)
-    files.map { x =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(x.getAbsolutePath), conf))
-      try r.getRecordCount finally r.close()
-    }.sum
-  }
+    open(s, dir, name).rows.getOrElse(t(s, dir, name).count())
 }

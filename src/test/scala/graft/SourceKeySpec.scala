@@ -7,8 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** [[SourceKey]] and the process-lifetime memos keyed by it: the
-  * base-table frame memo ([[Tables.t]]), the footer row-count memo
-  * ([[Tables.footerRowCount]]) and the PQ codebook's subvector-length
+  * base-table footer memo behind [[Tables.t]] and
+  * [[Tables.footerRowCount]], and the PQ codebook's subvector-length
   * memo (`AnnIndex.subLenAt`). A regenerated source must move the key,
   * so every memo misses instead of serving stale state. */
 class SourceKeySpec extends AnyFunSuite {
@@ -46,13 +46,15 @@ class SourceKeySpec extends AnyFunSuite {
     val d = tmpDir().toString
     val path = s"$d/regen.parquet"
     spark.range(0, 10).write.parquet(path)
-    val first = Tables.t(spark, d, "regen")
-    assert(Tables.t(spark, d, "regen") eq first, "unchanged source must hit the frame memo")
+    Tables.t(spark, d, "regen")
+    val first = Tables.openedAt(d)("regen")
+    Tables.t(spark, d, "regen")
+    assert(Tables.openedAt(d)("regen") eq first, "unchanged source must hit the memo")
     assert(Tables.footerRowCount(spark, d, "regen") == 10L)
 
     spark.range(0, 25).write.mode("overwrite").parquet(path)
     val second = Tables.t(spark, d, "regen")
-    assert(!(second eq first), "a regenerated source must miss the frame memo")
+    assert(!(Tables.openedAt(d)("regen") eq first), "a regenerated source must miss the memo")
     assert(second.count() == 25L)
     assert(Tables.footerRowCount(spark, d, "regen") == 25L)
   }
