@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import graft.sources.ParquetSource
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main (driver-run per round): times every SparkEntry query
@@ -88,7 +87,7 @@ object Bench {
       .map(b => math.max(0L, b.getCollectionTime)).sum / 1e3
     // Warm the JVM / codegen / filesystem once so the first timed query
     // isn't charged for session setup.
-    ParquetSource.readBatch(spark, Seq(s"$sfDir/region.parquet")).count()
+    spark.read.parquet(s"$sfDir/region.parquet").count()
     spark.range(1000000L).selectExpr("sum(id)").collect()
     denseCanary(spark, cpuSec _) // unmeasured warmup of the dense kernel
     val denseCold = denseCanary(spark, cpuSec _)

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.ParquetSource
 
 /** Larger-SF scaling measurement for the dedup-pair + ANN families
   * (SURVEY §6): amplifies the sf0.1 corpus ×R and times the heavy
@@ -205,7 +204,7 @@ object ScaleUp {
       // single-task stages) — real corpora are many-file by nature
       .repartition(64)
       .write.mode("overwrite").parquet(s"$out/documents.parquet")
-    ParquetSource.readBatch(spark, Seq(s"$base/embeddings.parquet"))
+    spark.read.parquet(s"$base/embeddings.parquet")
       .crossJoin(broadcast(reps))
       .select(
         (col("vec_id") + col("rep").cast("long") * 100000000L).as("vec_id"),
@@ -253,7 +252,7 @@ object ScaleUp {
     // the corpus — while the active-user population still grows ×R
     // (span = base user span keeps replica populations disjoint until
     // they wrap at nCust). event_id keeps the plain uniqueness offset.
-    val custRow = ParquetSource.readBatch(spark, Seq(s"$base/customer.parquet"))
+    val custRow = spark.read.parquet(s"$base/customer.parquet")
       .agg(min(col("c_custkey")), max(col("c_custkey")), count(lit(1))).head()
     val (cMin, cMax, nCust) =
       (custRow.getLong(0), custRow.getLong(1), custRow.getLong(2))
@@ -274,7 +273,7 @@ object ScaleUp {
       .repartition(32)
       .write.mode("overwrite").parquet(s"$out/events.parquet")
     Seq("region", "nation", "customer", "supplier", "part").foreach { n =>
-      ParquetSource.readBatch(spark, Seq(s"$base/$n.parquet"))
+      spark.read.parquet(s"$base/$n.parquet")
         .write.mode("overwrite").parquet(s"$out/$n.parquet")
     }
     java.nio.file.Files.writeString(marker, key): Unit

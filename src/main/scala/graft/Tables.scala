@@ -17,23 +17,27 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** What one driver-side footer read learns about `$dir/$name.parquet`:
-    * the schema `spark.read.parquet` infers (None where only Spark's own
-    * inference applies, see [[graftParquetShim.readFooter]]) and the
-    * table's row count. Valid while the table's [[SourceKey]] and the
-    * session's inference settings stay as they were when it was read. */
+  /** What one open of `$dir/$name.parquet` learns: the schema
+    * `spark.read.parquet` infers, read from the footer on the driver
+    * where [[graftParquetShim.inferSchema]] covers the layout (a plain
+    * file), else by Spark's own inference. Valid while the table's
+    * [[SourceKey]] and the session's inference settings stay as they
+    * were. The row count is read from the footers on the first
+    * [[footerRowCount]] and kept with the entry. */
   private[graft] final case class Opened(key: Long, settings: graftParquetShim.Settings,
-      schema: Option[StructType], rows: Option[Long])
+      schema: StructType) {
+    @volatile private[graft] var rows: Option[Long] = None
+  }
 
   /** One entry per (dir, name), replaced when its key or settings
     * change, so a regenerated table (the ScaleUp/amp scratch dirs)
-    * re-reads its footer and leaves no stale entry behind. It holds no
-    * DataFrame and so pins no session: [[t]] builds a frame per call
-    * from the memoized schema. An open through `spark.read.parquet`
-    * infers the schema in a one-task Spark job; Preflight plus
-    * registerViews ran 20 of them, and on perfbench's `read_side`
-    * (sf0.1, local[4], 4 cores) the set-up's program share fell from
-    * 3.90 to 1.34 s without them (medians of 10 runs). */
+    * re-opens and leaves no stale entry behind. It holds no DataFrame
+    * and so pins no session: [[t]] builds a frame per call from the
+    * memoized schema. An open through `spark.read.parquet` infers the
+    * schema in a one-task Spark job; Preflight plus registerViews ran
+    * 20 of them, and on perfbench's `read_side` (sf0.1, local[4],
+    * 4 cores) the set-up's program share fell from 3.90 to 1.34 s
+    * without them (medians of 10 runs). */
   private val opened =
     new java.util.concurrent.ConcurrentHashMap[(String, String), Opened]()
 
@@ -43,9 +47,9 @@ object Tables {
     opened.compute((dir, name), (_, e) =>
       if (e != null && e.key == key && e.settings == settings) e
       else {
-        val footer = graftParquetShim.readFooter(spark, Seq(s"$dir/$name.parquet"))
-        Opened(key, settings, footer.map(_.schema),
-          footer.map(graftParquetShim.rowCount(spark, _)))
+        val path = s"$dir/$name.parquet"
+        Opened(key, settings, graftParquetShim.inferSchema(spark, Seq(path))
+          .getOrElse(spark.read.parquet(path).schema))
       })
   }
 
@@ -54,8 +58,7 @@ object Tables {
     opened.entrySet.asScala.collect { case e if e.getKey._1 == dir => e.getKey._2 -> e.getValue }.toMap
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    open(spark, dir, name).schema.fold(spark.read)(spark.read.schema(_))
-      .parquet(s"$dir/$name.parquet")
+    spark.read.schema(open(spark, dir, name).schema).parquet(s"$dir/$name.parquet")
 
   /** Register every testdata table as a temp view so the whole surface
     * is reachable from `spark.sql(...)` as well as the DataFrame API.
@@ -125,14 +128,39 @@ object Tables {
   def embeddings(s: SparkSession, d: String): DataFrame = t(s, d, "embeddings")
 
   /** Exact row count of `$dir/$name.parquet` read from the parquet
-    * FOOTERS on the driver, from the same memo entry as the table's
-    * schema — no Spark job, so the self-tuning rules (minhash band
-    * rows, embedding bits, the pagerank broadcast gate) cost
-    * file-metadata reads, not a scheduled count() action. Works for a
-    * single file or a directory of part files; a layout the footer
-    * read does not cover (a partitioned directory) counts with Spark.
-    * Scale note: footer reads are per-file driver IO — at a 100k-file
-    * table prefer the catalog/statistics path. */
-  def footerRowCount(s: SparkSession, dir: String, name: String): Long =
-    open(s, dir, name).rows.getOrElse(t(s, dir, name).count())
+    * FOOTERS on the driver — no Spark job at all, so the self-tuning
+    * rules (minhash band rows, embedding bits, the pagerank broadcast
+    * gate) cost file-metadata reads, not a scheduled count() action
+    * (~0.1-0.4 s each at local[32], and a full stage round-trip on a
+    * real cluster). Works for a single file or a directory of part
+    * files. Kept with the table's [[open]] entry, so a regenerated
+    * table (length/mtime change) re-counts instead of serving a stale
+    * count. Scale note: footer reads are per-file driver IO — at a
+    * 100k-file table prefer the catalog/statistics path; the tuning
+    * rules only need order-of-magnitude, so even sampling the file
+    * list would do. */
+  def footerRowCount(s: SparkSession, dir: String, name: String): Long = {
+    val e = open(s, dir, name)
+    e.rows.getOrElse {
+      val n = footerRowCountUncached(s, dir, name)
+      e.rows = Some(n)
+      n
+    }
+  }
+
+  private def footerRowCountUncached(s: SparkSession, dir: String, name: String): Long = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = s.sessionState.newHadoopConf()
+    val f = new java.io.File(s"$dir/$name.parquet")
+    val files =
+      if (f.isDirectory)
+        f.listFiles.filter(x => x.isFile && x.getName.endsWith(".parquet"))
+      else Array(f)
+    files.map { x =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(x.getAbsolutePath), conf))
+      try r.getRecordCount finally r.close()
+    }.sum
+  }
 }

@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import graft.sources.ParquetSource
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -88,7 +87,7 @@ object Verify {
         // read the dumps just written above instead of re-running the
         // full LSH/IVF/PQ pipelines (the probe only needs vec_ids)
         def ids(name: String): Set[Long] =
-          (try ParquetSource.readBatch(spark, Seq(s"$outDir/$name"))
+          (try spark.read.parquet(s"$outDir/$name")
            catch { case _: Throwable => selected(name)(spark, sfDir) })
             .select("vec_id").collect().map(_.getLong(0)).toSet
         val exact =
@@ -122,7 +121,7 @@ object Verify {
         .forall(n => selected.contains(n) && !failed.contains(n))) {
       try {
         def perQ(name: String): Map[Long, Set[Long]] =
-          ParquetSource.readBatch(spark, Seq(s"$outDir/$name"))
+          spark.read.parquet(s"$outDir/$name")
             .select("q_id", "vec_id").collect()
             .groupBy(_.getLong(0))
             .view.mapValues(_.map(_.getLong(1)).toSet).toMap

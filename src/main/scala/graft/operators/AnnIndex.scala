@@ -4,7 +4,6 @@ import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.sources.ParquetSource
 
 /** Persisted IVF-PQ index (SURVEY.md §2.4 `ann_index_build` /
   * `ann_index_query`) — the billion-vector SERVING shape.
@@ -409,8 +408,8 @@ object AnnIndex {
     * appends into its own subset-trained dir. Returns the count of
     * NEWLY landed vectors. */
   private[graft] def appendAt(s: SparkSession, dir: String, batch: DataFrame): Long = {
-    val cents = ParquetSource.readBatch(s, Seq(s"$dir/coarse"))
-    val cb = ParquetSource.readBatch(s, Seq(s"$dir/codebook"))
+    val cents = s.read.parquet(s"$dir/coarse")
+    val cb = s.read.parquet(s"$dir/codebook")
     val subLen = subLenAt(s, dir)
     // Idempotency (advice r8): a retried append — a crash between the
     // non-atomic codes write and the counter update, or a caller
@@ -424,7 +423,7 @@ object AnnIndex {
     // shuffle carries batch-side ids only, never codes or vectors.
     val fresh = graft.Checkpoints.pin(
       batch.select(col("vec_id"), col("embedding"))
-        .join(ParquetSource.readBatch(s, Seq(s"$dir/codes")).select(col("vec_id")),
+        .join(s.read.parquet(s"$dir/codes").select(col("vec_id")),
           Seq("vec_id"), "left_anti"))
     val n = fresh.count()
     if (n == 0) return 0L
@@ -468,10 +467,10 @@ object AnnIndex {
       ids: DataFrame): Long = {
     val tomb = s"$dir/deleted"
     var fresh = ids.select(col("vec_id")).distinct()
-      .join(ParquetSource.readBatch(s, Seq(s"$dir/codes")).select(col("vec_id")),
+      .join(s.read.parquet(s"$dir/codes").select(col("vec_id")),
         Seq("vec_id"), "left_semi")
     if (new java.io.File(tomb).isDirectory)
-      fresh = fresh.join(ParquetSource.readBatch(s, Seq(tomb)), Seq("vec_id"), "left_anti")
+      fresh = fresh.join(s.read.parquet(tomb), Seq("vec_id"), "left_anti")
     val pinned = graft.Checkpoints.pin(fresh)
     val n = pinned.count()
     if (n > 0) {
@@ -793,9 +792,9 @@ object AnnIndex {
   // every reader takes the resolved dir, and the `d`-keyed wrappers
   // above stay the public convenience.
   private def coarseAt(s: SparkSession, dir: String): DataFrame =
-    ParquetSource.readBatch(s, Seq(s"$dir/coarse"))
+    s.read.parquet(s"$dir/coarse")
   private def codebookAt(s: SparkSession, dir: String): DataFrame =
-    ParquetSource.readBatch(s, Seq(s"$dir/codebook"))
+    s.read.parquet(s"$dir/codebook")
 
   /** Per-process memo of the codebook's subvector length: without it
     * every serve paid a one-row head() job — scan + collect of the
@@ -824,9 +823,9 @@ object AnnIndex {
     * serve path); a dir with no deletions skips the join entirely
     * (driver-side existence check, zero plan change). */
   private def codesAt(s: SparkSession, dir: String): DataFrame = {
-    val codes = ParquetSource.readBatch(s, Seq(s"$dir/codes"))
+    val codes = s.read.parquet(s"$dir/codes")
     if (new java.io.File(s"$dir/deleted").isDirectory)
-      codes.join(ParquetSource.readBatch(s, Seq(s"$dir/deleted")), Seq("vec_id"), "left_anti")
+      codes.join(s.read.parquet(s"$dir/deleted"), Seq("vec_id"), "left_anti")
     else codes
   }
 

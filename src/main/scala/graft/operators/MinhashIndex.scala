@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.ParquetSource
 
 /** Persisted minhash band index — the DEDUP twin of [[AnnIndex]]
   * (SURVEY §2.3 `dedup_minhash_index`, r9): near-duplicate detection
@@ -145,7 +144,7 @@ object MinhashIndex {
       val bandIds = bandsTable(s, dir).select(col("doc_id"))
       val seenIds =
         if (new java.io.File(seenPath).exists)
-          ParquetSource.readBatch(s, Seq(seenPath)).select(col("doc_id"))
+          s.read.parquet(seenPath).select(col("doc_id"))
         else bandIds.limit(0)
       bandIds.unionByName(seenIds).distinct()
     }

@@ -303,7 +303,7 @@ object EtlQueries {
         .write.mode("overwrite").partitionBy("l_returnflag")
         .parquet(dir.toString)
     }
-    ParquetSource.readBatch(s, Seq(dir.toString)).filter(col("l_returnflag") === "R")
+    s.read.parquet(dir.toString).filter(col("l_returnflag") === "R")
   }
 
   /** Schema evolution across ingest batches: an early batch lacking a
@@ -437,7 +437,7 @@ object EtlQueries {
     if (!new java.io.File(s"$base/target/_SUCCESS").exists())
       orders.filter(col("o_orderkey") % 7 =!= 6).withColumn("pt", pt)
         .write.mode("overwrite").partitionBy("pt").parquet(s"$base/target")
-    val target = ParquetSource.readBatch(s, Seq(s"$base/target"))
+    val target = s.read.parquet(s"$base/target")
     val changes = orders
       .filter(pt.isin(2, 5) && col("o_orderkey") % 3 === 0)
       .withColumn("op", when(col("o_orderkey") % 2 === 1, lit("D")).otherwise(lit("U")))
@@ -457,10 +457,10 @@ object EtlQueries {
     // with dynamic partitionOverwriteMode replaces exactly the
     // partitions present in the staged data
     replacement.write.mode("overwrite").parquet(s"$base/staging")
-    ParquetSource.readBatch(s, Seq(s"$base/staging"))
+    s.read.parquet(s"$base/staging")
       .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
       .partitionBy("pt").parquet(s"$base/target")
-    ParquetSource.readBatch(s, Seq(s"$base/target"))
+    s.read.parquet(s"$base/target")
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n"),
         expr(Frags.dsum2("o_totalprice")).as("total"),
@@ -502,7 +502,7 @@ object EtlQueries {
   def timeTravel(s: SparkSession, d: String): DataFrame = {
     val base = ensureTimeTravelVersions(s, d)
     def asOf(v: Int): DataFrame =
-      ParquetSource.readBatch(s, readManifest(base, v).map { case (p, ver) => s"$base/files/$ver/pt=$p" })
+      s.read.parquet(readManifest(base, v).map { case (p, ver) => s"$base/files/$ver/pt=$p" }: _*)
     Seq(1, 2).map { v =>
       asOf(v).agg(
         count(lit(1)).as("n"),
@@ -538,7 +538,7 @@ object EtlQueries {
           when(col("op") === "U", lit("X")).otherwise(col("o_orderstatus")))
       val touched = changes.select(pt.as("pt")).distinct()
         .collect().map(_.getInt(0)).toSeq.sorted
-      val v1Touched = ParquetSource.readBatch(s, touched.map(p => s"$base/files/v1/pt=$p"))
+      val v1Touched = s.read.parquet(touched.map(p => s"$base/files/v1/pt=$p"): _*)
       val replacement = v1Touched
         .join(changes.select("o_orderkey"), Seq("o_orderkey"), "left_anti")
         .unionByName(changes.filter(col("op") === "U").drop("op"))
@@ -579,7 +579,7 @@ object EtlQueries {
   def deltaExport(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.types._
     val base = ensureTimeTravelVersions(s, d, "dexp")
-    val schemaJson = ParquetSource.readSchema(s, Seq(s"$base/files/v1")).json
+    val schemaJson = s.read.parquet(s"$base/files/v1").schema.json
     graft.etl.DeltaExport.export(base, "pt", schemaJson)
     lastDeltaExportBase = base
     // replay via the generic JSON reader — the explicit schema keeps
@@ -609,7 +609,7 @@ object EtlQueries {
         .groupBy(_.getString(1)).values.map(_.maxBy(_.getLong(0))).toSeq
         .filterNot(r => lastRemove.get(r.getString(1)).exists(_ >= r.getLong(0)))
         .sortBy(_.getString(1))
-      ParquetSource.readBatch(s, live.map(r => s"$base/${r.getString(1)}").toSeq)
+      s.read.parquet(live.map(r => s"$base/${r.getString(1)}").toSeq: _*)
         .agg(count(lit(1)).as("n"),
           expr(Frags.dsum2("o_totalprice")).as("total"),
           sum(col("o_orderkey")).as("key_sum"),
@@ -923,7 +923,7 @@ object EtlQueries {
   def deltaCheckpoint(s: SparkSession, d: String): DataFrame = {
     val base = ensureAppendStore(s, d)
     lastDeltaCheckpointBase = base
-    val schemaJson = ParquetSource.readSchema(s, Seq(s"$base/files/b0")).json
+    val schemaJson = s.read.parquet(s"$base/files/b0").schema.json
     graft.etl.DeltaExport.exportUnpartitioned(base, schemaJson)
     graft.etl.DeltaCheckpoint.write(base, 9L)
     Seq(5L, 11L).map { dv =>
@@ -1005,7 +1005,7 @@ object EtlQueries {
     // manifest diff: the only partitions the feed must read
     val differing = m1.keys.filter(p => m1(p) != m2(p)).toSeq.sorted
     def slice(m: Map[Int, String]) =
-      ParquetSource.readBatch(s, differing.map(p => s"$base/files/${m(p)}/pt=$p"))
+      s.read.parquet(differing.map(p => s"$base/files/${m(p)}/pt=$p"): _*)
     val v1 = slice(m1).select(col("o_orderkey").as("k1"),
       col("o_orderstatus").as("status_before"), col("o_custkey").as("ck1"),
       col("o_totalprice").as("tp1"), col("o_orderdate").as("dt1"),
@@ -1069,8 +1069,8 @@ object EtlQueries {
       val pt = pmod(col("o_orderkey"), lit(8)).cast("int")
       // materialized BEFORE the delete (the plan is lazy; ≤ 8 rows —
       // bounded by the partition domain)
-      val sweptCounts = ParquetSource.readBatch(s,
-          swept.map { case (p, ver) => s"$base/files/$ver/pt=$p" })
+      val sweptCounts = s.read.parquet(
+          swept.map { case (p, ver) => s"$base/files/$ver/pt=$p" }: _*)
         .groupBy(pt.as("pt")).agg(count(lit(1)).as("rows_swept"))
         .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
       val sweptRows = {
@@ -1089,8 +1089,8 @@ object EtlQueries {
           FileUtils.deleteQuietly(new java.io.File(s"$base/files/$ver/pt=$p"))
         }
         val m2ByPt = m2.toMap
-        ParquetSource.readBatch(s, swept.map { case (p, _) =>
-            s"$base/files/${m2ByPt(p)}/pt=$p" })
+        s.read.parquet(swept.map { case (p, _) =>
+            s"$base/files/${m2ByPt(p)}/pt=$p" }: _*)
           .groupBy(pt.as("pt"))
           .agg(count(lit(1)).as("rows_live"),
             sum(col("o_orderkey")).as("key_sum_live"))
@@ -1099,7 +1099,7 @@ object EtlQueries {
         .orderBy(col("pt"))
         .write.mode("overwrite").parquet(auditPath)
     }
-    ParquetSource.readBatch(s, Seq(auditPath)).orderBy(col("pt"))
+    s.read.parquet(auditPath).orderBy(col("pt"))
   }
 
   /** Vacuum's (isolated) store base, exposed so EtlSpec can assert the
@@ -1170,7 +1170,7 @@ object EtlQueries {
       }
       def phaseRow(phase: Long, sweptParts: Long, reclaimed: Long,
           clone: Option[(Long, Long)]): DataFrame = {
-        val live = ParquetSource.readBatch(s, m2.map(pathOf))
+        val live = s.read.parquet(m2.map(pathOf): _*)
           .agg(count(lit(1)), sum(col("o_orderkey"))).head()
         import s.implicits._
         Seq((phase, sweptParts, reclaimed, clone.map(_._1), clone.map(_._2),
@@ -1183,8 +1183,8 @@ object EtlQueries {
       val g1 = garbage()
       require(g1.isEmpty,
         s"clone-referenced files reported as garbage: $g1")
-      val cloneRead = ParquetSource.readBatch(s,
-          manifestPaths(new java.io.File(s"$cloneDir/manifests/v1.txt")).toSeq)
+      val cloneRead = s.read.parquet(
+          manifestPaths(new java.io.File(s"$cloneDir/manifests/v1.txt")).toSeq: _*)
         .agg(count(lit(1)), sum(col("o_orderkey"))).head()
       val row1 = phaseRow(1L, 0L, 0L,
         Some((cloneRead.getLong(0), cloneRead.getLong(1))))
@@ -1194,7 +1194,7 @@ object EtlQueries {
       FileUtils.deleteQuietly(new java.io.File(cloneDir))
       val g2 = garbage()
       val counted = if (g2.isEmpty) 0L
-        else ParquetSource.readBatch(s, g2.map(pathOf)).count()
+        else s.read.parquet(g2.map(pathOf): _*).count()
       java.nio.file.Files.deleteIfExists(
         java.nio.file.Paths.get(s"$base/manifests/v1.txt"))
       g2.foreach(e => FileUtils.deleteQuietly(new java.io.File(pathOf(e))))
@@ -1202,7 +1202,7 @@ object EtlQueries {
       row1.unionByName(row2).orderBy(col("phase"))
         .write.mode("overwrite").parquet(auditPath)
     }
-    ParquetSource.readBatch(s, Seq(auditPath)).orderBy(col("phase"))
+    s.read.parquet(auditPath).orderBy(col("phase"))
   }
 
   /** vacuumRefs' isolated store base, for EtlSpec's physical audit. */
@@ -1301,7 +1301,7 @@ object EtlQueries {
       // CoW mutation of pt=3 only: data first, manifest (= the commit
       // marker, atomic move inside writeManifest) last
       val owned = s"$cloneBase/files/v2/pt=3"
-      ParquetSource.readBatch(s, Seq(cloneV1.toMap.apply(3)))
+      s.read.parquet(cloneV1.toMap.apply(3))
         .filter(col("o_orderkey") % 5 =!= 0)
         .write.mode("overwrite").parquet(owned)
       writeManifest(cloneBase, 2,
@@ -1311,7 +1311,7 @@ object EtlQueries {
     val cloneV2 = readManifest(cloneBase, 2)
     val shared = cloneV2.count { case (_, path) => path.startsWith(srcBase) }
     def readVia(entries: Seq[(Int, String)]) =
-      ParquetSource.readBatch(s, entries.map(_._2))
+      s.read.parquet(entries.map(_._2): _*)
     val src = readVia(srcV2.map { case (p, ver) =>
       p -> s"$srcBase/files/$ver/pt=$p" })
       .agg(count(lit(1)).as("src_rows"),
@@ -1401,7 +1401,7 @@ object EtlQueries {
       val rows = Seq("dirty" -> true, "clean" -> false).map { case (name, inject) =>
         candidate(inject).write.mode("overwrite").parquet(s"$base/staging/$name")
         // the AUDIT runs on the STAGED files — what would become visible
-        val staged = ParquetSource.readBatch(s, Seq(s"$base/staging/$name"))
+        val staged = s.read.parquet(s"$base/staging/$name")
         val Array(n, viol) = staged.agg(count(lit(1)),
           sum(when(col("o_totalprice").isNull ||
             !col("o_orderstatus").isin("F", "O", "P"), 1L).otherwise(0L)))
@@ -1422,8 +1422,8 @@ object EtlQueries {
           writeManifest(base, version, entries)
         }
         // visible state AFTER the decision, read through the manifest
-        val visible = ParquetSource.readBatch(s,
-          readManifest(base, version).map { case (_, dir) => s"$base/files/$dir" })
+        val visible = s.read.parquet(
+          readManifest(base, version).map { case (_, dir) => s"$base/files/$dir" }: _*)
           .count()
         (name, n, viol, published, visible)
       }
@@ -1432,7 +1432,7 @@ object EtlQueries {
         .orderBy(col("batch"))
         .write.mode("overwrite").parquet(auditPath)
     }
-    ParquetSource.readBatch(s, Seq(auditPath)).orderBy(col("batch"))
+    s.read.parquet(auditPath).orderBy(col("batch"))
   }
 
   /** WAP's (isolated) store base, exposed for EtlSpec (the vacuumBase
@@ -1486,9 +1486,9 @@ object EtlQueries {
       def prep(writer: String, touched: Seq[Int], attempt: Int, readV: Int,
           changesOf: DataFrame => DataFrame): ManifestCommit.Prepared = {
         val man = ManifestCommit.readManifest(base, readV)
-        val snap = ParquetSource.readBatch(s, man.collect {
+        val snap = s.read.parquet(man.collect {
           case (p, dd) if touched.contains(p) => s"$base/files/$dd/pt=$p"
-        })
+        }: _*)
         val changes = changesOf(snap)
         val dataDir = s"$writer$attempt"
         snap.join(changes.select("o_orderkey"), Seq("o_orderkey"), "left_anti")
@@ -1532,16 +1532,16 @@ object EtlQueries {
         val dataDir = res.entries
           .collectFirst { case (_, dd) if dd.startsWith(marker) => dd }.get
         val (n, k, m) =
-          measure(ParquetSource.readBatch(s, Seq(s"$base/files/$dataDir")),
+          measure(s.read.parquet(s"$base/files/$dataDir"),
             col("o_orderstatus") === marker)
         (res.writer, res.firstReadVersion.toLong, res.attempts.toLong,
           res.committedVersion.toLong, res.recomputed, n, k, m)
       }
       val finalV = ManifestCommit.currentVersion(base)
       val (fn, fk, fm) = measure(
-        ParquetSource.readBatch(s, ManifestCommit.readManifest(base, finalV).map {
+        s.read.parquet(ManifestCommit.readManifest(base, finalV).map {
           case (p, dd) => s"$base/files/$dd/pt=$p"
-        }),
+        }: _*),
         col("o_orderstatus").isin("A", "B"))
       import s.implicits._
       Seq(writerRow(aRes, "A"), writerRow(bRes, "B"),
@@ -1551,7 +1551,7 @@ object EtlQueries {
         .orderBy(col("writer"))
         .write.mode("overwrite").parquet(auditPath)
     }
-    ParquetSource.readBatch(s, Seq(auditPath)).orderBy(col("writer"))
+    s.read.parquet(auditPath).orderBy(col("writer"))
   }
 
   /** Concurrent-commit store base, exposed for CommitProtocolSpec. */
@@ -1605,15 +1605,15 @@ object EtlQueries {
       import s.implicits._
       Seq(8, 512, 1024, 1100).map { v =>
         val man = ManifestCommit.readManifest(base, v)
-        val snap = ParquetSource.readBatch(s,
-          man.map { case (p, dd) => s"$base/files/$dd/pt=$p" })
+        val snap = s.read.parquet(
+          man.map { case (p, dd) => s"$base/files/$dd/pt=$p" }: _*)
         val r = snap.agg(count(lit(1)), sum(col("sig"))).collect()(0)
         (v.toLong, r.getLong(0), r.getLong(1),
           ManifestCommit.currentVersionLong(base))
       }.toDF("v", "n_rows", "key_sum", "resolved")
         .orderBy(col("v")).write.mode("overwrite").parquet(auditPath)
     }
-    ParquetSource.readBatch(s, Seq(auditPath)).orderBy(col("v"))
+    s.read.parquet(auditPath).orderBy(col("v"))
   }
 
   /** Manifest-scale store base, exposed for CommitProtocolSpec. */
@@ -1735,7 +1735,7 @@ object EtlQueries {
     val aDirs = entries.filter(_._1 == "A").map(_._3)
     val bAll = entries.filter(_._1 == "B")
     val bDirs = bAll.filter(e => months.contains(e._2)).map(_._3)
-    val evolved = ParquetSource.readBatch(s, (aDirs ++ bDirs).map(p => s"$base/$p"))
+    val evolved = s.read.parquet((aDirs ++ bDirs).map(p => s"$base/$p"): _*)
     evolved
       // the residual predicate (exact dates) applies in-plan to all
       // surviving rows — manifest pruning only DROPPED impossible dirs
@@ -1844,15 +1844,15 @@ object EtlQueries {
     val cents = round(col("o_totalprice") * 100).cast("bigint")
     // the stored view: v1's aggregate (stands in for the persisted
     // matview a warehouse would keep beside the table)
-    val mv1 = ParquetSource.readBatch(s, m1.toSeq.map { case (p, ver) =>
-        s"$base/files/$ver/pt=$p" })
+    val mv1 = s.read.parquet(m1.toSeq.map { case (p, ver) =>
+        s"$base/files/$ver/pt=$p" }: _*)
       .groupBy(col("o_orderstatus").as("status"))
       .agg(count(lit(1)).as("n"), sum(cents).as("cents"))
     // deltas from ONLY the differing partitions, via the same
     // full-outer version diff the change feed runs
     val differing = m1.keys.filter(p => m1(p) != m2(p)).toSeq.sorted
     def slice(m: Map[Int, String]) =
-      ParquetSource.readBatch(s, differing.map(p => s"$base/files/${m(p)}/pt=$p"))
+      s.read.parquet(differing.map(p => s"$base/files/${m(p)}/pt=$p"): _*)
     val v1s = slice(m1).select(col("o_orderkey").as("k1"),
       col("o_orderstatus").as("st1"), cents.as("c1"))
     val v2s = slice(m2).select(col("o_orderkey").as("k2"),
@@ -2016,7 +2016,7 @@ object EtlQueries {
         .repartitionByRange(8, col("ship_date"))
         .sortWithinPartitions(col("ship_date"))
         .write.mode("overwrite").parquet(s"$base/clustered")
-    ParquetSource.readBatch(s, Seq(s"$base/clustered"))
+    s.read.parquet(s"$base/clustered")
       .filter(col("ship_date") >= lit("1995-03-01").cast("date") &&
         col("ship_date") <= lit("1995-03-31").cast("date"))
       .agg(count(lit(1)).as("n_rows"),
@@ -2104,7 +2104,7 @@ object EtlQueries {
     // exactly, and they inline as literals for parquet pushdown
     val lo = pmin + (pmax - pmin) * 2 / 5
     val hi = pmin + (pmax - pmin) * 11 / 20
-    ParquetSource.readBatch(s, Seq(s"$base/zorder"))
+    s.read.parquet(s"$base/zorder")
       .filter(col("ship_date") >= lit("1995-03-01").cast("date") &&
         col("ship_date") <= lit("1995-03-31").cast("date") &&
         col("l_partkey") >= lo && col("l_partkey") <= hi)
@@ -2399,7 +2399,7 @@ object EtlQueries {
         .when(!col("status").isin("O", "F", "P"), lit("bad_status"))
         .otherwise(lit("ok")))
     routed.write.mode("overwrite").partitionBy("reason").parquet(s"$base/routed")
-    ParquetSource.readBatch(s, Seq(s"$base/routed"))
+    s.read.parquet(s"$base/routed")
       .groupBy(col("reason"))
       .agg(count(lit(1)).as("n"),
         expr(Frags.dsum2("COALESCE(price, 0.0)")).as("sum_price"),
@@ -2708,13 +2708,13 @@ object EtlQueries {
     def state(t: DataFrame): DataFrame = t.agg(count(lit(1)).as("n"),
       coalesce(expr("bit_xor(xxhash64(o_orderkey, o_custkey, o_totalprice))"),
         lit(0L)).as("xh"))
-    val pre = state(ParquetSource.readBatch(s, Seq(frag))).head()
+    val pre = state(s.read.parquet(frag)).head()
     val (preN, preH) = (pre.getLong(0), pre.getLong(1))
     val (fb, fa) = graft.sinks.ParquetSink.compact(s, frag,
       targetBytes = Long.MaxValue / 4)
     // the post-state stays LAZY: the gated row is derived from a real
     // scan of the compacted artifact, not from driver-cached numbers
-    state(ParquetSource.readBatch(s, Seq(frag))).select(
+    state(s.read.parquet(frag)).select(
       lit(fb.toLong).as("files_before"),
       lit(fa.toLong).as("files_after"),
       col("n").as("n_rows"),

@@ -1,7 +1,6 @@
 package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.sources.ParquetSource
 
 /** Parquet output for pipeline results (the reference only writes to
   * Postgres; a Spark-native engine also lands curated/deduplicated
@@ -63,7 +62,7 @@ object ParquetSink {
     val staging = new Path(path + "_compacting")
     if (fs.exists(staging))
       require(fs.delete(staging, true), s"cannot clear stale $staging")
-    ParquetSource.readBatch(spark, before.map(_.getPath.toString))
+    spark.read.parquet(before.map(_.getPath.toString): _*)
       .repartition(nOut)
       .write.mode("overwrite").parquet(staging.toString)
     val compacted = fs.listStatus(staging).filter(s =>

@@ -3,7 +3,6 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.graftParquetShim
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.StructType
 
 /** Parquet ingestion with the reference's field-selection semantics
   * (reference: src/parquet_ops.rs:31-55): requested fields are resolved
@@ -18,22 +17,13 @@ object ParquetSource {
   /** One multi-path scan per batch (the reference downloads a batch of
     * files then iterates serially; Spark reads the whole batch as one
     * splittable scan — reference: src/runner.rs:86-108). The schema is
-    * the one Spark would infer, read from one footer on the driver for
-    * plain files and non-partitioned directories, so opening the batch
-    * launches no Spark job of its own. Every option-free parquet read
-    * in graft opens through here, except the testdata tables, which
-    * `graft.Tables` opens from a memo of the same footer read. */
+    * the one Spark would infer, read from the first file's footer on
+    * the driver, so reading a batch launches no Spark job of its own. */
   def readBatch(spark: SparkSession, paths: Seq[String]): DataFrame = {
     require(paths.nonEmpty, "empty batch")
     graftParquetShim.inferSchema(spark, paths).fold(spark.read)(s => spark.read.schema(s))
       .parquet(paths: _*)
   }
-
-  /** The schema `spark.read.parquet(paths)` infers, without building
-    * a frame: one driver-side footer read where the shim covers the
-    * layout, Spark's own inference elsewhere. */
-  def readSchema(spark: SparkSession, paths: Seq[String]): StructType =
-    graftParquetShim.inferSchema(spark, paths).getOrElse(spark.read.parquet(paths: _*).schema)
 
   /** Project `desiredFields` in order. Duplicate names get a positional
     * suffix so downstream sinks see unique columns (the reference keeps

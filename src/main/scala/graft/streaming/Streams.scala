@@ -3,7 +3,6 @@ package graft.streaming
 import java.sql.Timestamp
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import graft.sources.ParquetSource
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -90,7 +89,7 @@ object Streams extends Serializable {
   private def eventStream(s: SparkSession, d: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = ParquetSource.readSchema(s, Seq(s"$d/events.parquet"))
+    val schema = s.read.parquet(s"$d/events.parquet").schema
     // glob form: FileStreamSource requires a directory/glob, not a file
     var reader = s.readStream.schema(schema)
     maxFilesPerTrigger.foreach(n =>
@@ -197,7 +196,7 @@ object Streams extends Serializable {
     // the heartbeat files carry a proper µs TIMESTAMP — read them with
     // their OWN schema (the testdata events file surfaces nanos-longs
     // and is normalized inside eventStream)
-    val hbSchema = ParquetSource.readSchema(s, Seq(hbDir))
+    val hbSchema = s.read.parquet(hbDir).schema
     // sentinels are (negative event_id, type 'heartbeat'): BOTH checks,
     // so a corpus whose genuine rows use the type 'heartbeat' is
     // neither injected into a join side nor silently dropped later
@@ -428,7 +427,7 @@ object Streams extends Serializable {
         .coalesce(1).write.mode("append").parquet(hbDir)
     }
     landHeartbeat(0, 1)
-    val hbSchema = ParquetSource.readSchema(s, Seq(hbDir))
+    val hbSchema = s.read.parquet(hbDir).schema
     val evs = eventStream(s, d, maxFilesPerTrigger)
       .unionByName(s.readStream.schema(hbSchema).parquet(hbDir)
         .select(col("event_id"), col("ts"), col("user_id"),
@@ -574,7 +573,7 @@ object Streams extends Serializable {
         .coalesce(1).write.mode("append").parquet(hbDir)
     }
     landHeartbeat(0, 1)
-    val hbSchema = ParquetSource.readSchema(s, Seq(hbDir))
+    val hbSchema = s.read.parquet(hbDir).schema
     val evs = eventStream(s, d, maxFilesPerTrigger)
       .unionByName(s.readStream.schema(hbSchema).parquet(hbDir)
         .select(col("event_id"), col("ts"), col("user_id"),
@@ -760,7 +759,7 @@ object Streams extends Serializable {
     val src = scala.io.Source.fromFile(
       graft.etl.ManifestCommit.manifestPath(base, v), "UTF-8")
     val rels = try src.getLines().toList finally src.close()
-    ParquetSource.readBatch(s, rels.map(r => s"$base/$r"))
+    s.read.parquet(rels.map(r => s"$base/$r"): _*)
   }
 
   /** Lossless ingestion: the latest snapshot carries exactly the batch
@@ -819,7 +818,7 @@ object Streams extends Serializable {
     * oracle-comparable. The full curation pipeline a training-data
     * ingest runs, as ONE continuous query. */
   def streamCorpus(s: SparkSession, d: String): DataFrame = {
-    val schema = ParquetSource.readSchema(s, Seq(s"$d/documents.parquet"))
+    val schema = s.read.parquet(s"$d/documents.parquet").schema
     val docs = s.readStream.schema(schema).parquet(s"$d/documents.parqu*")
     // Filter placement vs the O(words²) trap (SURVEY §6), measured:
     // ANY filter whose condition must materialize `reasons` directly

@@ -1,35 +1,25 @@
 package org.apache.spark.sql.execution.datasources.parquet
 
 import java.io.IOException
-import scala.jdk.CollectionConverters._
-import scala.util.control.NonFatal
-import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.parquet.format.converter.ParquetMetadataConverter
-import org.apache.parquet.hadoop.{Footer => ParquetFooter, ParquetFileReader, ParquetFileWriter}
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.hadoop.fs.Path
 import org.apache.spark.deploy.SparkHadoopUtil
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
-import org.apache.spark.sql.execution.streaming.sinks.FileStreamSink
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 /** Parquet schema inference on the driver. With schema merging off,
-  * `spark.read.parquet(paths)` lists the paths (`InMemoryFileIndex`)
-  * and takes its schema from one footer (`ParquetUtils.inferSchema`):
-  * `_common_metadata`, else `_metadata`, else the first data file in
-  * path order. It reads that one footer inside a one-task Spark job
+  * `spark.read.parquet(files)` takes its schema from the footer of the
+  * first data file in path order (`ParquetUtils.inferSchema`) but reads
+  * that one footer inside a Spark job
   * (`ParquetFileFormat.mergeSchemasInParallel`). This reads the same
-  * footer through the same converter settings without the job, for
-  * plain files and for non-partitioned directories, which it lists
-  * through Spark's own `InMemoryFileIndex` so that hidden, summary and
-  * subdirectory files count exactly as they do for Spark. It lives in
-  * this package because `ParquetFileFormat.readSchemaFromFooter` is
+  * footer through the same converter settings without the job. It lives
+  * in this package because `readParquetFootersInParallel` (Spark's
+  * footer reader, with its `ignoreCorruptFiles` handling) is
   * `private[parquet]`. */
 object graftParquetShim {
 
-  /** The session settings inference reads: two reads of one footer
-    * under equal settings infer equal schemas. */
+  /** The session settings inference reads: under equal settings, two
+    * inferences over one unchanged footer give equal schemas. */
   final case class Settings(mergeSchema: Boolean, binaryAsString: Boolean,
       int96AsTimestamp: Boolean, inferTimestampNTZ: Boolean, nanosAsLong: Boolean,
       respectUnknownTypeAnnotation: Boolean)
@@ -42,58 +32,27 @@ object graftParquetShim {
       conf.parquetReaderRespectUnknownTypeAnnotation)
   }
 
-  /** One footer read: the schema Spark infers, the file it came from
-    * with that file's row count, and the data files the read covers. */
-  final case class Footer(schema: StructType, file: FileStatus, fileRows: Long,
-      dataFiles: Seq[FileStatus])
-
   /** The schema `spark.read.parquet(paths)` infers, or None where only
-    * Spark's own inference gives the same answer (or the same error). */
-  def inferSchema(spark: SparkSession, paths: Seq[String]): Option[StructType] =
-    readFooter(spark, paths).map(_.schema)
-
-  /** The footer `spark.read.parquet(paths)` infers its schema from,
-    * read on the driver, or None where only Spark's own inference gives
-    * the same answer (or the same error): schema merging on, a glob, a
-    * missing path, a summary or hidden root name, a directory holding a
-    * streaming sink's `_spark_metadata` log, a partitioned directory,
-    * no data file, or an unreadable footer. */
-  def readFooter(spark: SparkSession, paths: Seq[String]): Option[Footer] = {
+    * Spark's own inference gives the same answer (or the same error):
+    * schema merging on, a glob, a directory, a missing path, a summary
+    * or hidden file name, or an unreadable footer under
+    * `ignoreCorruptFiles`. */
+  def inferSchema(spark: SparkSession, paths: Seq[String]): Option[StructType] = {
+    val conf = spark.sessionState.conf
     val s = settings(spark)
-    if (s.mergeSchema || paths.exists(p => SparkHadoopUtil.get.isGlobPath(new Path(p))))
-      return None
+    if (s.mergeSchema ||
+        paths.exists(p => SparkHadoopUtil.get.isGlobPath(new Path(p)))) return None
     val hadoopConf = spark.sessionState.newHadoopConf()
-    val roots =
+    val files =
       try paths.map { p =>
         val path = new Path(p)
         val fs = path.getFileSystem(hadoopConf)
-        (fs.makeQualified(path), fs.getFileStatus(path))
+        (fs.makeQualified(path).toString, fs.getFileStatus(path))
       } catch { case _: IOException => return None }
-    if (roots.exists { case (path, _) => path.getName.startsWith("_") || path.getName.startsWith(".") })
-      return None
-    val leaves: Seq[(String, FileStatus)] =
-      if (roots.forall(_._2.isFile)) roots.map { case (path, st) => (path.toString, st) }
-      else {
-        if (FileStreamSink.hasMetadata(paths, hadoopConf, spark.sessionState.conf)) return None
-        val index = new InMemoryFileIndex(spark, roots.map(_._1), Map.empty, None)
-        if (index.partitionSchema.nonEmpty) return None
-        index.allFiles().map(st => (st.getPath.toString, st))
-      }
-    // ParquetUtils.inferSchema's pick, over leaves sorted by path
-    val sorted = leaves.sortBy(_._1).map(_._2)
-    def named(n: String) = sorted.find(_.getPath.getName == n)
-    val dataFiles = sorted.filterNot { f =>
-      val n = f.getPath.getName
-      n == ParquetFileWriter.PARQUET_COMMON_METADATA_FILE || n == ParquetFileWriter.PARQUET_METADATA_FILE
-    }
-    val file = named(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE)
-      .orElse(named(ParquetFileWriter.PARQUET_METADATA_FILE))
-      .orElse(dataFiles.headOption)
-      .getOrElse(return None)
-    val meta =
-      try ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, hadoopConf),
-        ParquetMetadataConverter.NO_FILTER)
-      catch { case NonFatal(_) => return None }
+    if (files.exists { case (_, st) =>
+        val name = st.getPath.getName
+        !st.isFile || name.startsWith("_") || name.startsWith(".")
+      }) return None
     // the converter mergeSchemasInParallel builds: five settings from
     // the session, the other three at their defaults
     val converter = new ParquetToSparkSchemaConverter(
@@ -105,21 +64,8 @@ object graftParquetShim {
       SQLConf.PARQUET_FIELD_ID_READ_ENABLED.defaultValue.get,
       SQLConf.PARQUET_IGNORE_VARIANT_ANNOTATION.defaultValue.get,
       s.respectUnknownTypeAnnotation)
-    Some(Footer(
-      ParquetFileFormat.readSchemaFromFooter(new ParquetFooter(file.getPath, meta), converter),
-      file, meta.getBlocks.asScala.iterator.map(_.getRowCount).sum, dataFiles))
-  }
-
-  /** Rows across the footer's data files: the footer's own count for
-    * its own file, one more footer read for each other file. */
-  def rowCount(spark: SparkSession, footer: Footer): Long = {
-    val hadoopConf = spark.sessionState.newHadoopConf()
-    footer.dataFiles.iterator.map { f =>
-      if (f eq footer.file) footer.fileRows
-      else {
-        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, hadoopConf))
-        try r.getRecordCount finally r.close()
-      }
-    }.sum
+    val first = files.minBy(_._1)._2
+    ParquetFileFormat.readParquetFootersInParallel(hadoopConf, Seq(first), conf.ignoreCorruptFiles)
+      .headOption.map(ParquetFileFormat.readSchemaFromFooter(_, converter))
   }
 }

@@ -132,48 +132,15 @@ class ParquetSourceSpec extends AnyFunSuite {
     assert(read.count(identity) >= 4, read)
   }
 
-  private lazy val small: DataFrame = typed.select("id", "s", "d12")
-
-  test("readBatch: Spark-written directories read their footer on the driver, no job") {
-    val dir = tmpDir("graft_pq_dirs")
+  test("readBatch: directories, globs, merging and missing paths take Spark's own inference") {
+    val dir = tmpDir("graft_pq_fallback")
+    val small = typed.select("id", "s", "d12")
     small.filter("id < 25").write.parquet(dir.resolve("dir1").toString)
     small.filter("id >= 25").select("id", "s").write.parquet(dir.resolve("dir2").toString)
     val f1 = writeFile(small.filter("id < 10"), dir, "f1.parquet")
-    assert(Files.exists(dir.resolve("dir1/_SUCCESS")))
+    val f2 = writeFile(small.filter("id >= 10").select("id", "s"), dir, "f2.parquet")
     sameAsSpark(Seq(dir.resolve("dir1").toString, dir.resolve("dir2").toString), "id")
     sameAsSpark(Seq(dir.resolve("dir2").toString, f1), "id")
-    // several directories with different schemas, and a directory with a
-    // file: the first data file in path order sets the schema, no job
-    for (paths <- Seq(Seq("dir1", "dir2"), Seq("dir2", "dir1"), Seq("dir2")).map(_.map(d =>
-        dir.resolve(d).toString)) :+ Seq(dir.resolve("dir2").toString, f1))
-      assert(sameAsSpark(paths, "id") == 0, s"readBatch($paths) launched a Spark job")
-  }
-
-  test("readBatch: summary files set a directory's schema as they do for Spark") {
-    val dir = tmpDir("graft_pq_summary")
-    val out = dir.resolve("withmeta")
-    small.write.option("parquet.summary.metadata.level", "ALL").parquet(out.toString)
-    assert(Files.exists(out.resolve("_metadata")) && Files.exists(out.resolve("_common_metadata")))
-    // a data file that sorts first and lacks d12: Spark takes the schema
-    // from _common_metadata, else _metadata, not from this file
-    writeFile(small.filter("id >= 40").select("id", "s"), out, "a.parquet")
-    assert(sameAsSpark(Seq(out.toString), "id") == 0)
-    assert(ParquetSource.readBatch(spark, Seq(out.toString)).columns.toSeq == Seq("id", "s", "d12"))
-    Files.delete(out.resolve("_common_metadata"))
-    assert(sameAsSpark(Seq(out.toString), "id") == 0)
-    Files.delete(out.resolve("_metadata"))
-    assert(sameAsSpark(Seq(out.toString), "id") == 0)
-    assert(ParquetSource.readBatch(spark, Seq(out.toString)).columns.toSeq == Seq("id", "s"))
-  }
-
-  test("readBatch: directories, globs, merging and missing paths take Spark's own inference") {
-    val dir = tmpDir("graft_pq_fallback")
-    small.withColumn("p", col("id") % 3).write.partitionBy("p")
-      .parquet(dir.resolve("parted").toString)
-    val f1 = writeFile(small.filter("id < 10"), dir, "f1.parquet")
-    val f2 = writeFile(small.filter("id >= 10").select("id", "s"), dir, "f2.parquet")
-    // a partitioned directory: Spark infers its schema in a job
-    assert(sameAsSpark(Seq(dir.resolve("parted").toString), "id") >= 1)
     sameAsSpark(Seq(s"$dir/f*.parquet"), "id")
     withConf("spark.sql.parquet.mergeSchema" -> "true") {
       val merged = ParquetSource.readBatch(spark, Seq(f2, f1))

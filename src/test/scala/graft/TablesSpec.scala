@@ -6,10 +6,10 @@ import org.apache.spark.graft.JobProbe
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** [[Tables]] opens each table with one driver-side footer read that
-  * Preflight, `registerViews` and every query share: no Spark job, the
-  * same plan as `spark.read.parquet`, and a memo that neither pins a
-  * session nor keeps superseded entries. */
+/** [[Tables]] opens each table once for Preflight, `registerViews` and
+  * every query: a plain-file table with one driver-side footer read and
+  * no Spark job, with the same plan as `spark.read.parquet`, through a
+  * memo that neither pins a session nor keeps superseded entries. */
 class TablesSpec extends AnyFunSuite {
   import SparkTestSession._
 
@@ -61,8 +61,11 @@ class TablesSpec extends AnyFunSuite {
     val d = Files.createTempDirectory("graft_tables_regen").toString
     for (i <- 1 to 5) {
       spark.range(0, 10L * i).write.mode("overwrite").parquet(s"$d/regen.parquet")
-      assert(Tables.footerRowCount(spark, d, "regen") == 10L * i)
       assert(Tables.t(spark, d, "regen").count() == 10L * i)
+      // opening reads no row counts; the first footerRowCount does
+      assert(Tables.openedAt(d)("regen").rows.isEmpty)
+      assert(Tables.footerRowCount(spark, d, "regen") == 10L * i)
+      assert(Tables.openedAt(d)("regen").rows.contains(10L * i))
     }
     assert(Tables.openedAt(d).keySet == Set("regen"))
   }
