@@ -113,7 +113,7 @@ object Preflight {
     // columns (long) — preflight must see the same shape the readers do
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     expectations.toSeq.sortBy(_._1).flatMap { case (table, cols) =>
-      // the frame the queries read: Tables.t's memoized footer, so
+      // the frame the queries read: Tables.t's memoized schema, so
       // Tables.registerViews after this opens no table again
       val loaded =
         try Right(Tables.t(spark, dir, table))

@@ -36,7 +36,7 @@ object Tables {
     * memoized schema. An open through `spark.read.parquet` infers the
     * schema in a one-task Spark job; Preflight plus registerViews ran
     * 20 of them, and on perfbench's `read_side` (sf0.1, local[4],
-    * 4 cores) the set-up's program share fell from 3.90 to 1.34 s
+    * 4 cores) the set-up's program share fell from 3.30 to 1.21 s
     * without them (medians of 10 runs). */
   private val opened =
     new java.util.concurrent.ConcurrentHashMap[(String, String), Opened]()
