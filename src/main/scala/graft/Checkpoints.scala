@@ -46,15 +46,8 @@ object Checkpoints {
     * release handle covering exactly the RDD blocks this checkpoint
     * added. Call the handle only once a successor (or the final
     * consumer's action) has materialized. */
-  def tracked[T](ds: Dataset[T]): (Dataset[T], () => Unit) = {
-    if (passthrough) return (ds, () => ())
-    val sc = ds.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val cp = ds.localCheckpoint()
-    val added = sc.getPersistentRDDs.keySet -- before
-    (cp, () => added.foreach(id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false))))
-  }
+  def tracked[T](ds: Dataset[T]): (Dataset[T], () => Unit) =
+    if (passthrough) (ds, () => ()) else trackedAlways(ds)
 
   /** [[tracked]] with NO audit passthrough — for iterative loops whose
     * per-round plan references its predecessor more than once (the

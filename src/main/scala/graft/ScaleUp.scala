@@ -167,20 +167,16 @@ object ScaleUp {
     // (physical store build ∝ table, commit count fixed by design)
     "etl_pg_roundtrip", "etl_manifest_scale")
 
-  /** Content key of the base corpus (the AnnIndex.fingerprint idiom):
+  /** Content key of the base corpus ([[SourceKey.of]] of every table):
     * a regenerated base must invalidate the amplified copy, or every
     * ×R timing silently runs cross-corpus. v2: covers every amplified/
     * copied table, not just the text/embedding corpora. v3: events
     * user_id rotation into the customer key space (advice r8) — the
-    * bump regenerates cached x5/x10 dirs built under the old offset. */
+    * bump regenerates cached x5/x10 dirs built under the old offset.
+    * v4: the per-table key walks nested part files, not just the
+    * top-level ones. */
   private def baseKey(base: String): String =
-    "v3:" + Tables.All.map { n =>
-      val f = new java.io.File(s"$base/$n.parquet")
-      def stat(x: java.io.File) = s"${x.getName}:${x.length}:${x.lastModified}"
-      if (f.isDirectory)
-        f.listFiles.filter(_.isFile).sortBy(_.getName).map(stat).mkString("|")
-      else stat(f)
-    }.mkString("||")
+    "v4:" + Tables.All.map(SourceKey.of(base, _)).mkString(":")
 
   private def amplify(spark: SparkSession, base: String, out: String, r: Int): Unit = {
     val marker = java.nio.file.Paths.get(out, "_GRAFT_SCALE_OK")

@@ -1,10 +1,13 @@
 package graft
 
+import org.apache.commons.io.FileUtils
+
 /** Content fingerprint of a parquet source table — the ONE definition
-  * behind every scratch-store / shared-pin cache key. It walks nested
-  * and partitioned layouts, so a regeneration that moves a part file
-  * between subdirectories moves the key and cannot serve stale cached
-  * rows.
+  * behind every derived-artifact key (scratch stores, shared pins,
+  * persisted indexes), plus where a per-process scratch artifact lives
+  * and when it is swept. It walks nested and partitioned layouts, so a
+  * regeneration that moves a part file between subdirectories moves
+  * the key and cannot serve stale cached rows.
   *
   * Folds each file's (path-relative-to-root, length, mtime), SORTED
   * by relative path: File.listFiles order is unspecified, so an
@@ -33,5 +36,59 @@ object SourceKey {
         x = x * 1000003L + f.length
         x * 1000003L + f.lastModified
       } & Long.MaxValue
+  }
+
+  /** Name of a persisted, cross-process artifact dir derived from
+    * `d`'s `table` (an index, an amplified copy): 16 hex chars of MD5
+    * over the canonical source path, [[of]] and `params` (artifact
+    * parameters and format version). The canonical path makes every
+    * spelling of one source (symlink, `..`, trailing slash) share one
+    * dir; [[of]] moves it on any regeneration. */
+  def digest(d: String, table: String, params: String): String = {
+    val src = new java.io.File(d, s"$table.parquet")
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(s"${src.getCanonicalPath}:${of(src)}:$params".getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString.take(16)
+  }
+
+  /** Per-(sfDir, source-state, process) scratch dir for an artifact of
+    * `d`'s `table` whose WRITE is part of the operation under test
+    * (format roundtrips, merges, stream sinks). The pid component
+    * means two concurrent invocations (bench and verify on the same
+    * machine) can never race on mode("overwrite") of the same dirs;
+    * the [[of]] key keeps a process's own cache honest across testdata
+    * regeneration. Stale siblings — a different source key (regenerated
+    * testdata) or a long-dead process's dir (same key, >3 h old; live
+    * processes touch their dirs every invocation) — are swept here so
+    * runs don't accumulate /tmp garbage. */
+  def scratchDir(prefix: String, d: String, table: String): String = {
+    val key = s"${d.replaceAll("[^a-zA-Z0-9]", "_")}_${of(d, table)}"
+    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
+    val dir = new java.io.File(tmp, s"graft_${prefix}_${key}_p${ProcessHandle.current().pid()}")
+    // Sweep criterion: STALE mtime AND DEAD owner. mtime
+    // alone was unsound — a dir's mtime only changes when its direct
+    // children change, so a live process that built its store >3 h ago
+    // and is still lazily READING it (without re-invoking scratchDir)
+    // would lose the store mid-query. The owning pid is embedded in
+    // the dir name precisely so liveness is checkable: a dir whose
+    // owner is still alive is NEVER swept, however old; the 3 h mtime
+    // cutoff then only guards against pid reuse after a reboot. Key
+    // mismatch alone must never delete either — a
+    // different key may be a live process on a different sf dir.
+    val cutoff = System.currentTimeMillis() - 3L * 3600 * 1000
+    def ownerAlive(name: String): Boolean =
+      "_p(\\d+)$".r.findFirstMatchIn(name) match {
+        case Some(m) => scala.util.Try {
+          val oh = ProcessHandle.of(m.group(1).toLong)
+          oh.isPresent && oh.get.isAlive
+        }.getOrElse(false)
+        case None => false // unparseable owner: age alone decides
+      }
+    Option(tmp.listFiles).getOrElse(Array.empty)
+      .filter(f => f.getName.startsWith(s"graft_${prefix}_") && f.getName != dir.getName)
+      .filter(f => f.lastModified < cutoff && !ownerAlive(f.getName))
+      .foreach(FileUtils.deleteQuietly)
+    if (dir.exists) dir.setLastModified(System.currentTimeMillis()): Unit
+    dir.toString
   }
 }

@@ -67,8 +67,10 @@ object Tables {
     * re-binds. The footers come from the [[open]] memo, so registering
     * runs no Spark job. */
   private val viewsRegistered = java.util.Collections.synchronizedMap(
-    // weak keys: the memo must never pin a stopped session (and its
-    // SessionState) for the JVM lifetime — review r12
+    // weak keys, so the memo itself pins no session. They free only a
+    // session that never executed anything: in a test JVM, a session
+    // that ran one job or created one temp view (as registerViews
+    // does) stayed reachable from inside Spark after 50 System.gc()s
     new java.util.WeakHashMap[SparkSession, String]())
 
   def registerViews(s: SparkSession, d: String): Unit =

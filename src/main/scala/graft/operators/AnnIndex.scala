@@ -35,8 +35,8 @@ import org.apache.spark.sql.functions._
   * is (codes-in-probed-cells × 8 bytes) + c point fetches.
   *
   * Staleness safety: the index directory is keyed by a fingerprint of
-  * the source parquet (name/length/mtime of every data file) plus the
-  * index parameters and format version, so a driver-side testdata
+  * the source parquet ([[graft.SourceKey]]: every file of the tree)
+  * plus the index parameters and format version, so a driver-side testdata
   * regeneration can NEVER be served stale — the fingerprint moves and
   * the index rebuilds. [[stats]] (the gated `ann_index_build` query)
   * force-rebuilds unconditionally: it IS the materialization operator,
@@ -65,29 +65,20 @@ object AnnIndex {
     sys.props.getOrElse("graft.annIndexDir",
       new java.io.File("target/ann_index").getAbsolutePath)
 
-  /** Content fingerprint of the source table + index parameters: any
-    * regeneration (length or mtime moves), source path change, or
-    * param/format bump yields a new index directory. */
-  /** CANONICAL source path of `d`'s embeddings table — used both in
-    * the fingerprint key and the _GRAFT_INDEX_SOURCE record, so the
-    * same corpus referenced via different path spellings (symlink,
-    * `..`, trailing slash) keys ONE index and its stale dirs always
-    * prune (advice r7; a raw-string compare never matched the variant
-    * spelling, leaking superseded dirs forever). */
+  /** CANONICAL source path of `d`'s embeddings table — the
+    * _GRAFT_INDEX_SOURCE record, so the same corpus referenced via
+    * different path spellings (symlink, `..`, trailing slash) has one
+    * record and its stale dirs always prune (advice r7; a raw-string
+    * compare never matched the variant spelling, leaking superseded
+    * dirs forever). */
   private def canonicalSource(d: String): String =
     new java.io.File(s"$d/embeddings.parquet").getCanonicalPath
 
-  private[graft] def fingerprint(d: String): String = {
-    val f = new java.io.File(s"$d/embeddings.parquet")
-    def stat(x: java.io.File) = s"${x.getName}:${x.length}:${x.lastModified}"
-    val src =
-      if (f.isDirectory)
-        f.listFiles.filter(_.isFile).sortBy(_.getName).map(stat).mkString("|")
-      else stat(f)
-    val key = s"v$FormatVersion:m=$M:ksub=$Ksub:${canonicalSource(d)}:$src"
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
-  }
+  /** Index dir name: the [[graft.SourceKey.digest]] of the source
+    * table + index parameters, so any regeneration, source path change
+    * or param/format bump yields a new index directory. */
+  private[graft] def fingerprint(d: String): String =
+    graft.SourceKey.digest(d, "embeddings", s"v$FormatVersion:m=$M:ksub=$Ksub")
 
   private[graft] def dirFor(d: String): String = s"$root/${fingerprint(d)}"
   private def marker(dir: String) = java.nio.file.Paths.get(dir, "_GRAFT_INDEX_OK")
@@ -133,12 +124,13 @@ object AnnIndex {
     * half-written) are left alone. Sessions are sequential here
     * (driver + memory note), so the prune can't race a reader. */
   def build(s: SparkSession, d: String): String = {
-    val dir = dirFor(d)
+    val fp = fingerprint(d)
+    val dir = s"$root/$fp"
     val srcPath = canonicalSource(d)
     val rootF = new java.io.File(root)
     if (rootF.isDirectory)
       rootF.listFiles
-        .filter(x => x.isDirectory && x.getName != fingerprint(d) &&
+        .filter(x => x.isDirectory && x.getName != fp &&
           // CURRENT-fingerprint variants (<fp>_forget / <fp>_compact)
           // survive a same-fingerprint force-rebuild (r13): the
           // fingerprint pins source content + params, and training is
@@ -150,7 +142,7 @@ object AnnIndex {
           // previous session's ann_index_build. Variants of SUPERSEDED
           // fingerprints still match the source record below and are
           // pruned as before.
-          !x.getName.startsWith(fingerprint(d) + "_"))
+          !x.getName.startsWith(fp + "_"))
         .filter { x =>
           // a concurrently-removed or unreadable meta file must skip
           // this dir, not fail the whole build (advice r7); records

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -43,30 +44,14 @@ object MinhashIndex {
     sys.props.getOrElse("graft.minhashIndexDir",
       new java.io.File("target/minhash_index").getAbsolutePath)
 
-  /** Content fingerprint of the documents table + banding params. */
+  /** Index dir name: the [[graft.SourceKey.digest]] of the documents
+    * table + banding params. */
   private[graft] def fingerprint(d: String, numHashes: Int,
-      bandRows: Int): String = {
-    val f = new java.io.File(s"$d/documents.parquet")
-    def stat(x: java.io.File) = s"${x.getName}:${x.length}:${x.lastModified}"
-    val src =
-      if (f.isDirectory)
-        f.listFiles.filter(_.isFile).sortBy(_.getName).map(stat).mkString("|")
-      else stat(f)
-    val key = s"v$FormatVersion:nh=$numHashes:r=$bandRows:" +
-      s"${f.getCanonicalPath}:$src"
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
-  }
+      bandRows: Int): String =
+    graft.SourceKey.digest(d, "documents", s"v$FormatVersion:nh=$numHashes:r=$bandRows")
 
   private def marker(dir: String) = java.nio.file.Paths.get(dir, "_GRAFT_MH_OK")
   private val builtMemo = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** ONE recursive delete for the whole object (review r12 — three
-    * local copies were three chances to get null listFiles wrong). */
-  private def rmr(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles).getOrElse(Array.empty).foreach(rmr)
-    f.delete(): Unit
-  }
 
   /** Self-tuned banding geometry for `d`'s corpus — the exact rule
     * dedup_minhash runs (footer count → rows per band, 16 bands). */
@@ -85,8 +70,7 @@ object MinhashIndex {
     val dir = s"$root/${fingerprint(d, nh, r)}"
     if (builtMemo.contains(dir)) return dir
     if (!java.nio.file.Files.exists(marker(dir))) {
-      val dirF = new java.io.File(dir)
-      if (dirF.exists()) rmr(dirF)
+      FileUtils.deleteQuietly(new java.io.File(dir))
       val storedSh = Dedup.shingles(s, d).filter(col("doc_id") % 4 =!= 0)
       Dedup.bandedSigs(storedSh, nh, r)
         // bands rows ≈ nBands per doc — small fixed width; one file
@@ -107,7 +91,7 @@ object MinhashIndex {
     * probes in the same JVM. */
   private[graft] def invalidate(dir: String): Unit = {
     builtMemo.remove(dir)
-    rmr(new java.io.File(dir))
+    FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
   /** Extend the stored band table with an accepted batch's bands —
@@ -139,7 +123,7 @@ object MinhashIndex {
     val stagingRoot = new java.io.File(s"$dir/staging")
     // sweep orphans from crashed attempts (window (a) above): nothing
     // under staging/ has ever been readable, so deletion is safe
-    if (stagingRoot.exists()) rmr(stagingRoot)
+    FileUtils.deleteQuietly(stagingRoot)
     val storedIds = {
       val bandIds = bandsTable(s, dir).select(col("doc_id"))
       val seenIds =

@@ -123,9 +123,9 @@ object Similarity {
     * so a non-default invocation wired into the gated harness cannot
     * silently grade against a mismatched oracle — change the constant
     * and both sides move together. */
-  val AuditQueryId = 0L
-  val AuditK = 10
-  val AuditDims = 16
+  final val AuditQueryId = 0L
+  final val AuditK = 10
+  final val AuditDims = 16
 
   /** [[gradeAgainstExact]] as SQL: expects a `served(vec_id, …)` CTE
     * in scope; appends the exact/ranked CTEs and the grading SELECT.
@@ -1632,15 +1632,11 @@ object Similarity {
   /** ×`r` amplified embeddings corpus in a scratch table (vec_id +
     * o·1e8 per replica o, vectors copied verbatim) — the gated-SF
     * stand-in for a past-cap corpus, built once per source content
-    * (the scratchDir mtime discipline) so repeat invocations read, not
-    * rewrite. */
+    * (its dir is a [[graft.SourceKey.digest]]) so repeat invocations
+    * read, not rewrite. */
   private[graft] def ampEmbeddings(s: SparkSession, d: String, r: Int): String = {
-    val src = new java.io.File(s"$d/embeddings.parquet")
-    val srcKey = graft.SourceKey.of(d, "embeddings") // shared fingerprint
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"${src.getCanonicalPath}:$srcKey:x$r".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(16)
-    val dir = new java.io.File(s"target/graft_amp/$digest")
+    val dir = new java.io.File(
+      s"target/graft_amp/${graft.SourceKey.digest(d, "embeddings", s"x$r")}")
     val table = new java.io.File(dir, "embeddings.parquet")
     if (!new java.io.File(table, "_SUCCESS").isFile)
       graft.Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))

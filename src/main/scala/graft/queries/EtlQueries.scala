@@ -4,6 +4,7 @@ import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{SourceKey, Tables}
+import graft.SourceKey.scratchDir
 import graft.etl.TypeMapping
 import graft.sources.ParquetSource
 
@@ -248,46 +249,6 @@ object EtlQueries {
       .agg(count(lit(1)).as("n_rows"),
         expr("SUM(l_quantity)").as("sum_qty"),
         expr(Frags.dsum2("l_extendedprice")).as("sum_price"))
-  }
-
-  /** Per-(sfDir, source-state, process) scratch dir for queries whose
-    * WRITE is part of the operation under test (formatRoundtrip, merge).
-    * The pid component means two concurrent invocations (bench and
-    * verify on the same machine) can never race on mode("overwrite") of
-    * the same dirs; the [[SourceKey]] keeps a process's own cache honest
-    * across testdata regeneration. Stale siblings — a different source
-    * key (regenerated testdata) or a long-dead process's dir (same key,
-    * >3 h old; live processes touch their dirs every invocation) — are
-    * swept here so rounds don't accumulate /tmp garbage. */
-  private def scratchDir(prefix: String, d: String, table: String): String = {
-    val key = s"${d.replaceAll("[^a-zA-Z0-9]", "_")}_${SourceKey.of(d, table)}"
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-    val dir = new java.io.File(tmp, s"graft_${prefix}_${key}_p${ProcessHandle.current().pid()}")
-    // Sweep criterion: STALE mtime AND DEAD owner. mtime
-    // alone was unsound — a dir's mtime only changes when its direct
-    // children change, so a live process that built its store >3 h ago
-    // and is still lazily READING it (without re-invoking scratchDir)
-    // would lose the store mid-query. The owning pid is embedded in
-    // the dir name precisely so liveness is checkable: a dir whose
-    // owner is still alive is NEVER swept, however old; the 3 h mtime
-    // cutoff then only guards against pid reuse after a reboot. Key
-    // mismatch alone must never delete either — a
-    // different key may be a live process on a different sf dir.
-    val cutoff = System.currentTimeMillis() - 3L * 3600 * 1000
-    def ownerAlive(name: String): Boolean =
-      "_p(\\d+)$".r.findFirstMatchIn(name) match {
-        case Some(m) => scala.util.Try {
-          val oh = ProcessHandle.of(m.group(1).toLong)
-          oh.isPresent && oh.get.isAlive
-        }.getOrElse(false)
-        case None => false // unparseable owner: age alone decides
-      }
-    Option(tmp.listFiles).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith(s"graft_${prefix}_") && f.getName != dir.getName)
-      .filter(f => f.lastModified < cutoff && !ownerAlive(f.getName))
-      .foreach(FileUtils.deleteQuietly)
-    if (dir.exists) dir.setLastModified(System.currentTimeMillis()): Unit
-    dir.toString
   }
 
   /** The pruned scan itself (shared with the plan-shape spec). One

@@ -676,18 +676,11 @@ object Streams extends Serializable {
   def versionedSink(s: SparkSession, d: String,
       maxFilesPerTrigger: Option[Int] = None,
       storeDir: Option[String] = None): DataFrame = {
-    val base = storeDir.getOrElse {
-      // keyed on (path, SOURCE FINGERPRINT, pid) — the scratchDir
-      // discipline: without the content key, regenerating the events
-      // data at the same path within one process leaves stale manifests
-      // whose batch ids match, so every commit skips as
-      // "already committed" and the audit reports the OLD data. The
-      // fingerprint folds each file's (name, length,
-      // mtime), sorted, so a regenerated source lands in a fresh store.
-      val key = d.replaceAll("[^a-zA-Z0-9]", "_")
-      val fp = graft.SourceKey.of(d, "events") // the shared fingerprint
-      s"${sys.props("java.io.tmpdir")}/graft_vsink_${key}_${fp}_p${ProcessHandle.current().pid()}"
-    }
+    // keyed on the events table's content: regenerating the events
+    // data at the same path within one process would otherwise leave
+    // stale manifests whose batch ids match, so every commit skips as
+    // "already committed" and the audit reports the OLD data
+    val base = storeDir.getOrElse(graft.SourceKey.scratchDir("vsink", d, "events"))
     new java.io.File(s"$base/manifests").mkdirs()
     // ONE manifest-naming definition (ManifestCommit)
     def manifestPath(v: Long) =
@@ -788,10 +781,7 @@ object Streams extends Serializable {
     * maxFilesPerTrigger=2 forces a multi-commit history so the replay
     * crosses version boundaries at every SF. */
   def deltaSink(s: SparkSession, d: String): DataFrame = {
-    val key = d.replaceAll("[^a-zA-Z0-9]", "_")
-    val fp = graft.SourceKey.of(d, "events")
-    val base = s"${sys.props("java.io.tmpdir")}/graft_vdsink_${key}_${fp}" +
-      s"_p${ProcessHandle.current().pid()}"
+    val base = graft.SourceKey.scratchDir("vdsink", d, "events")
     versionedSink(s, d, maxFilesPerTrigger = Some(2),
       storeDir = Some(base)).collect(): Unit // bounded: the 1-row audit
     lastDeltaSinkBase = base

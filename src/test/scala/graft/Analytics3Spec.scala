@@ -193,7 +193,7 @@ class Analytics3Spec extends AnyFunSuite {
 
   test("sessionize merges sessions split across micro-batches") {
     import org.apache.spark.sql.functions.unix_micros
-    val dir = java.nio.file.Files.createTempDirectory("sess_split").toString
+    val dir = tempDir("sess_split").toString
     val sub = s"$dir/events.parquet"
     val ev = Tables.events(spark, sf)
     val mid = ev.agg(expr("percentile(CAST(unix_micros(ts) AS DOUBLE), 0.5)"))
@@ -216,7 +216,7 @@ class Analytics3Spec extends AnyFunSuite {
 
   test("stream_anomaly: flags survive a time-split two-batch replay") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_anom_split").toString
+    val dir = tempDir("graft_anom_split").toString
     val sub = s"$dir/events.parquet"
     val ev = Tables.events(spark, sf)
     val mid = ev.agg(expr("percentile(CAST(unix_micros(ts) AS DOUBLE), 0.5)"))
@@ -242,8 +242,8 @@ class Analytics3Spec extends AnyFunSuite {
   test("stream_versioned_sink: two-batch commits stay AS-OF-readable; crash-retry exact") {
     import org.apache.spark.sql.functions._
     val S = graft.streaming.Streams
-    val dir = java.nio.file.Files.createTempDirectory("graft_vsink_split").toString
-    val store = java.nio.file.Files.createTempDirectory("graft_vsink_store").toString
+    val dir = tempDir("graft_vsink_split").toString
+    val store = tempDir("graft_vsink_store").toString
     val sub = s"$dir/events.parquet"
     val ev = Tables.events(spark, sf)
     val mid = ev.agg(expr("percentile(CAST(unix_micros(ts) AS DOUBLE), 0.5)"))
@@ -293,8 +293,8 @@ class Analytics3Spec extends AnyFunSuite {
   test("stream_delta_sink: per-commit delta log, AS-OF mount, idempotent export") {
     import org.apache.spark.sql.functions._
     val S = graft.streaming.Streams
-    val dir = java.nio.file.Files.createTempDirectory("graft_vdsink_split").toString
-    val store = java.nio.file.Files.createTempDirectory("graft_vdsink_store").toString
+    val dir = tempDir("graft_vdsink_split").toString
+    val store = tempDir("graft_vdsink_store").toString
     val sub = s"$dir/events.parquet"
     val ev = Tables.events(spark, sf)
     val mid = ev.agg(expr("percentile(CAST(unix_micros(ts) AS DOUBLE), 0.5)"))

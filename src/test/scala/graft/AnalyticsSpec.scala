@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,6 +18,21 @@ object SparkTestSession {
     s
   }
   val sf: String = "/root/testdata/sf0.001"
+
+  /** A fresh temp dir named `prefix…`, deleted with everything in it
+    * when the test JVM exits. (`FileUtils.forceDeleteOnExit` registers
+    * only the files present when it is called, so on a new, empty dir
+    * it would leave every file a test writes later behind.) */
+  def tempDir(prefix: String): Path = {
+    val dir = Files.createTempDirectory(prefix)
+    tempDirs.add(dir.toFile)
+    dir
+  }
+  private lazy val tempDirs = {
+    val dirs = java.util.concurrent.ConcurrentHashMap.newKeySet[java.io.File]()
+    sys.addShutdownHook(dirs.forEach(d => { FileUtils.deleteQuietly(d); () }))
+    dirs
+  }
 }
 
 class AnalyticsSpec extends AnyFunSuite {
@@ -271,7 +288,7 @@ class AnalyticsSpec extends AnyFunSuite {
     // a lineitem slice where one group's quantity is a CONSTANT
     // fractional value: floor quantisation pushes n·Σx²-(Σx)² a hair
     // negative, the exact case the variance guard exists for
-    val dir = java.nio.file.Files.createTempDirectory("graft_q59").toString
+    val dir = tempDir("graft_q59").toString
     try {
       import spark.implicits._
       Seq(

@@ -87,7 +87,7 @@ class AnnIndexSpec extends AnyFunSuite {
   }
 
   test("fingerprint moves when the source parquet is regenerated") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ann_fp").toFile
+    val tmp = tempDir("graft_ann_fp").toFile
     try {
       val src = new java.io.File(s"$sf/embeddings.parquet")
       val dst = new java.io.File(tmp, "embeddings.parquet")
@@ -112,7 +112,7 @@ class AnnIndexSpec extends AnyFunSuite {
     // memoized it — the next serve read a deleted path (found by the
     // r7 x1-vs-x5 scale sweep). The prune now matches the recorded
     // source path, so only stale dirs of the SAME corpus die.
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ann_mc").toFile
+    val tmp = tempDir("graft_ann_mc").toFile
     try {
       val src = new java.io.File(s"$sf/embeddings.parquet")
       java.nio.file.Files.copy(src.toPath,
@@ -147,7 +147,7 @@ class AnnIndexSpec extends AnyFunSuite {
 
   test("append: batch re-encoding is bit-identical to the full build, serving sees it, staleness fires") {
     import org.apache.spark.sql.functions._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ann_ap").toFile
+    val tmp = tempDir("graft_ann_ap").toFile
     def rmr(f: java.io.File): Unit = {
       Option(f.listFiles).foreach(_.foreach(rmr)); f.delete(); ()
     }
@@ -206,7 +206,7 @@ class AnnIndexSpec extends AnyFunSuite {
     // same-source artifacts (hardlinks, no retraining) and encode only
     // the batch, and serving must then cover the whole grown corpus.
     import org.apache.spark.sql.functions._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ann_grow").toFile
+    val tmp = tempDir("graft_ann_grow").toFile
     def rmr(f: java.io.File): Unit = {
       Option(f.listFiles).foreach(_.foreach(rmr)); f.delete(); ()
     }

@@ -15,7 +15,7 @@ import graft.etl.ManifestCommit.Prepared
 class CommitProtocolSpec extends AnyFunSuite {
 
   private def tmpStore(): String =
-    Files.createTempDirectory("ccspec").toString
+    SparkTestSession.tempDir("ccspec").toString
 
   /** A toy store whose "data" is one text file per partition —
     * content = s"$dir" so reads prove WHICH commit's bytes are
@@ -271,7 +271,7 @@ class CommitProtocolSpec extends AnyFunSuite {
   }
 
   test("two-level layout: paths roll at the GroupSize gate; CAS works across it") {
-    val base = Files.createTempDirectory("graft_mscale_layout").toString
+    val base = SparkTestSession.tempDir("graft_mscale_layout").toString
     val g = ManifestCommit.GroupSize
     assert(ManifestCommit.manifestPath(base, g - 1) ==
       s"$base/manifests/v${g - 1}.txt")
@@ -288,7 +288,7 @@ class CommitProtocolSpec extends AnyFunSuite {
   }
 
   test("resolution at 10^3+ commits: newest-first group scan, bounded listings, crash fallback") {
-    val base = Files.createTempDirectory("graft_mscale_res").toString
+    val base = SparkTestSession.tempDir("graft_mscale_res").toString
     val g = ManifestCommit.GroupSize
     // 10^3+ commits through the REAL protocol (each one a CAS)
     val n = (g + 80).toInt

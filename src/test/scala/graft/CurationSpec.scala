@@ -118,7 +118,7 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("sample_temperature: a capped stratum under-fills the budget, never refills the head") {
-    val dir = java.nio.file.Files.createTempDirectory("temp_cap").toString
+    val dir = tempDir("temp_cap").toString
     import spark.implicits._
     // one 4-doc tail language against a 996-doc head: sqrt smoothing
     // asks the tail for far more than it has, so its quota caps at 4
@@ -170,7 +170,7 @@ class CurationSpec extends AnyFunSuite {
     assert(got.map(_._3).sum == 1000000L, "ppm weights apportion exactly")
     // hard skew: a 20-token language among 20000 tokens gets a √-smoothed
     // target far past 4 epochs — the cap must bind and the shortfall show
-    val dir = java.nio.file.Files.createTempDirectory("epochs_cap").toString
+    val dir = tempDir("epochs_cap").toString
     import spark.implicits._
     val big = (0L until 400L).map(i => (i, ("tok " * 49).trim, "en", "s", 5L))
     val small = Seq((400L, ("tok " * 19).trim, "zz", "s", 5L))

@@ -10,7 +10,7 @@ class EtlSpec extends AnyFunSuite {
   import SparkTestSession._
 
   private def tmpDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+    tempDir(prefix).toString
 
   private def writeFile(dir: String, name: String, content: String): Unit =
     Files.write(Paths.get(dir, name), content.getBytes("UTF-8"))
@@ -42,7 +42,7 @@ class EtlSpec extends AnyFunSuite {
     val schema = slice.schema
     val want = slice.collect().toSet
     assert(want.nonEmpty)
-    val base = Files.createTempDirectory("graft_fmt_spec").toString
+    val base = tempDir("graft_fmt_spec").toString
     slice.write.option("header", "true").csv(s"$base/csv")
     slice.write.json(s"$base/json")
     slice.write.orc(s"$base/orc")

@@ -20,11 +20,10 @@ import graft.sources.ParquetSource
 class ParquetSourceSpec extends AnyFunSuite {
   import SparkTestSession._
 
-  private def tmpDir(prefix: String): JPath = Files.createTempDirectory(prefix)
 
   /** Writes `df` as ONE plain parquet file at `dir/name`. */
   private def writeFile(df: DataFrame, dir: JPath, name: String): String = {
-    val staging = tmpDir("graft_pq_stage").resolve("out")
+    val staging = tempDir("graft_pq_stage").resolve("out")
     df.coalesce(1).write.parquet(staging.toString)
     val part = Files.list(staging).filter(_.getFileName.toString.endsWith(".parquet"))
       .findFirst().get()
@@ -63,7 +62,7 @@ class ParquetSourceSpec extends AnyFunSuite {
     "map('k', cast(id AS int)) AS m")
 
   test("readBatch: Spark-written files, every type, schema of the first file in path order, no job") {
-    val dir = tmpDir("graft_pq_typed")
+    val dir = tempDir("graft_pq_typed")
     val a = writeFile(typed.filter("id < 20"), dir, "b/part-a.parquet")
     val b = writeFile(typed.filter("id >= 20"), dir, "a/part-b.parquet")
     // a third file with another column order and a missing column: the
@@ -76,7 +75,7 @@ class ParquetSourceSpec extends AnyFunSuite {
   }
 
   test("readBatch: non-Spark footers follow the session's parquet settings") {
-    val dir = tmpDir("graft_pq_raw")
+    val dir = tempDir("graft_pq_raw")
     val schema = MessageTypeParser.parseMessageType(
       """message raw {
         |  required int32 id;
@@ -133,7 +132,7 @@ class ParquetSourceSpec extends AnyFunSuite {
   }
 
   test("readBatch: directories, globs, merging and missing paths take Spark's own inference") {
-    val dir = tmpDir("graft_pq_fallback")
+    val dir = tempDir("graft_pq_fallback")
     val small = typed.select("id", "s", "d12")
     small.filter("id < 25").write.parquet(dir.resolve("dir1").toString)
     small.filter("id >= 25").select("id", "s").write.parquet(dir.resolve("dir2").toString)
@@ -154,7 +153,7 @@ class ParquetSourceSpec extends AnyFunSuite {
   }
 
   test("readBatch: plain files over a non-file Hadoop scheme") {
-    val root = tmpDir("graft_pq_mocks3")
+    val root = tempDir("graft_pq_mocks3")
     val hc = spark.sparkContext.hadoopConfiguration
     hc.set("fs.mocks3.impl", classOf[MockS3FileSystem].getName)
     hc.set("fs.mocks3.root", root.toString)

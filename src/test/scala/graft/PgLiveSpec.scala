@@ -91,7 +91,7 @@ class PgLiveSpec extends AnyFunSuite {
         java.time.Instant.parse("2024-02-29T23:59:59.000001Z"),
         new java.math.BigDecimal("0.0000")),
       Row(null, null, null, null, null, null, null, null, null, null, null))
-    val base = java.nio.file.Files.createTempDirectory("pglive_bytes")
+    val base = tempDir("pglive_bytes")
     val bin = s"$base/tuples.bin"
     val out = new java.io.FileOutputStream(bin)
     try {
@@ -313,7 +313,7 @@ class PgLiveSpec extends AnyFunSuite {
   test("Pipeline.run loads live Postgres from a jdbc:postgresql: conn_str") {
     val l = live
     import org.apache.spark.sql.functions.{col, lit, pmod}
-    val base = java.nio.file.Files.createTempDirectory("pglive_pipeline").toString
+    val base = tempDir("pglive_pipeline").toString
     val bucket = s"$base/bucket"
     val li = Tables.lineitem(spark, sf)
       .select("l_orderkey", "l_linenumber", "l_quantity", "l_shipdate")

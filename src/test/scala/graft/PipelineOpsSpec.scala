@@ -32,7 +32,7 @@ class PipelineOpsSpec extends AnyFunSuite {
 
   test("simhashPairs finds planted near-duplicates via banding") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("simhash").toString
+    val tmp = tempDir("simhash").toString
     val words = (1 to 80).map(i => s"w$i")
     val near = words.updated(3, "x")
     val far = (1 to 80).map(i => s"z$i")
@@ -723,7 +723,7 @@ class PipelineOpsSpec extends AnyFunSuite {
   }
 
   test("dedup_cdc: a shifted embedded span is caught at chunk granularity") {
-    val dir = java.nio.file.Files.createTempDirectory("cdc_pair").toString
+    val dir = tempDir("cdc_pair").toString
     import spark.implicits._
     val span = (1 to 200).map(i => s"shared$i").mkString(" ")
     // doc 2 embeds doc 1's whole content behind a different prefix —
@@ -741,7 +741,7 @@ class PipelineOpsSpec extends AnyFunSuite {
   }
 
   test("text_cdc_chunks: shifted shared spans chunk identically (the CDC property)") {
-    val dir = java.nio.file.Files.createTempDirectory("cdc_prop").toString
+    val dir = tempDir("cdc_prop").toString
     import spark.implicits._
     val span = (1 to 200).map(i => s"shared$i").mkString(" ")
     val doc1 = s"alpha beta $span omega"

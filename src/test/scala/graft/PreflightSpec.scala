@@ -16,7 +16,7 @@ class PreflightSpec extends AnyFunSuite {
 
   test("a drifted events.ts type fails naming events.ts") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_preflight").toString
+    val dir = tempDir("graft_preflight").toString
     // re-land events with ts flipped to string — the one drift class
     // Tables.adaptEventTs cannot normalise
     Tables.events(spark, sf)
@@ -33,7 +33,7 @@ class PreflightSpec extends AnyFunSuite {
 
   test("a LongType events.ts whose values are NOT nanos fails loudly") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_preflight_us").toString
+    val dir = tempDir("graft_preflight_us").toString
     // µs-magnitude BIGINTs pass the type check (LongType is adaptable)
     // but adaptEventTs's ÷1000 would silently shift them 1000× early —
     // the magnitude check must catch exactly this
@@ -44,7 +44,7 @@ class PreflightSpec extends AnyFunSuite {
     assert(v.exists(s => s.startsWith("events.ts:") && s.contains("NOT the epoch-nanos")),
       s"µs-magnitude longs must be flagged, got: $v")
     // and genuine nanos-magnitude longs pass
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_preflight_ns").toString
+    val dir2 = tempDir("graft_preflight_ns").toString
     Tables.events(spark, sf)
       .withColumn("ts", unix_micros(col("ts")) * 1000L)
       .limit(10).write.mode("overwrite").parquet(s"$dir2/events.parquet")
@@ -78,7 +78,7 @@ class PreflightSpec extends AnyFunSuite {
   }
 
   test("a missing required column is reported as MISSING by name") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_preflight2").toString
+    val dir = tempDir("graft_preflight2").toString
     Tables.events(spark, sf).drop("user_id")
       .limit(10).write.mode("overwrite").parquet(s"$dir/events.parquet")
     val v = Preflight.violations(spark, dir)

@@ -322,7 +322,7 @@ class PropertySpec extends AnyFunSuite {
     val items = Gen.listOfN(9, Gen.identifier.map(_.take(6))).map(_.distinct)
     check(Prop.forAll(items, Gen.choose(1, 5)) { (its: List[String], batchSize: Int) =>
       (its.nonEmpty) ==> {
-        val d = Files.createTempDirectory("wlprop").toString
+        val d = SparkTestSession.tempDir("wlprop").toString
         Files.write(Paths.get(d, "todo"), its.mkString("\n").getBytes)
         val wl = new WorkLists(d, batchSize)
         var done = Vector.empty[String]

@@ -2,6 +2,7 @@ package graft
 
 import java.io.File
 import java.nio.file.{Files, Path}
+import org.apache.commons.io.FileUtils
 import org.apache.spark.graft.JobProbe
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
@@ -14,7 +15,7 @@ import scala.jdk.CollectionConverters._
 class SourceKeySpec extends AnyFunSuite {
   import SparkTestSession._
 
-  private def tmpDir(): Path = Files.createTempDirectory("graft_srckey")
+  private def tmpDir(): Path = tempDir("graft_srckey")
 
   /** The key's definition, written out independently: a fold over
     * (relative path, length, mtime) of every file, sorted by path. */
@@ -60,16 +61,45 @@ class SourceKeySpec extends AnyFunSuite {
   }
 
   test("moving a part file between subdirectories changes the key") {
-    val root = tmpDir().resolve("moved.parquet")
-    val a = Files.createDirectories(root.resolve("p=a"))
-    val b = Files.createDirectories(root.resolve("p=b"))
-    Files.write(a.resolve("part-0.parquet"), Array.fill[Byte](64)(1))
-    Files.write(b.resolve("part-1.parquet"), Array.fill[Byte](32)(2))
-    val before = SourceKey.of(root.toFile)
-    assert(SourceKey.of(root.toFile) == before, "an unchanged tree must keep its key")
-    // a rename keeps the file's length and mtime: only its path moves
-    Files.move(a.resolve("part-0.parquet"), b.resolve("part-0.parquet"))
-    assert(SourceKey.of(root.toFile) != before)
+    // the plain key, and the index dir names derived from it
+    val keys = Seq[(String, String => Any)](
+      "moved" -> (d => SourceKey.of(d, "moved")),
+      "embeddings" -> (d => operators.AnnIndex.fingerprint(d)),
+      "documents" -> (d => operators.MinhashIndex.fingerprint(d, 64, 4)))
+    for ((table, key) <- keys) {
+      val d = tmpDir()
+      val root = d.resolve(s"$table.parquet")
+      val a = Files.createDirectories(root.resolve("p=a"))
+      val b = Files.createDirectories(root.resolve("p=b"))
+      Files.write(a.resolve("part-0.parquet"), Array.fill[Byte](64)(1))
+      Files.write(b.resolve("part-1.parquet"), Array.fill[Byte](32)(2))
+      val before = key(d.toString)
+      assert(key(d.toString) == before, s"$table: an unchanged tree must keep its key")
+      // a rename keeps the file's length and mtime: only its path moves
+      Files.move(a.resolve("part-0.parquet"), b.resolve("part-0.parquet"))
+      assert(key(d.toString) != before, s"$table: a moved part file must move the key")
+    }
+  }
+
+  test("the versioned stream store is SourceKey's scratch dir, and it sweeps dead stores") {
+    val d = java.nio.file.Paths.get(sf).resolveSibling("sf0.01").toString
+    val tmp = new File(sys.props("java.io.tmpdir"))
+    val child = new ProcessBuilder("true").start()
+    child.waitFor()
+    val planted = new File(tmp, s"graft_vsink_${d.replaceAll("[^a-zA-Z0-9]", "_")}_0_p${child.pid}")
+    assert(planted.mkdir())
+    assert(planted.setLastModified(System.currentTimeMillis() - 4L * 3600 * 1000))
+    def store = new File(SourceKey.scratchDir("vsink", d, "events")) // sweeps too
+    try {
+      val audit = streaming.Streams.versionedSink(spark, d).collect()(0)
+      assert(!planted.exists, "a dead owner's store older than 3 h must be swept")
+      assert(audit.getLong(0) == Tables.footerRowCount(spark, d, "events"))
+      assert(new File(store, "manifests").list.nonEmpty,
+        s"the default store must be $store")
+    } finally {
+      FileUtils.deleteQuietly(planted)
+      FileUtils.deleteQuietly(store)
+    }
   }
 
   test("rebuilding a codebook in the same dir misses the subLenAt memo") {

@@ -31,7 +31,7 @@ class StreamingPipelineSpec extends AnyFunSuite {
     * .parquet object, not a Spark part-file directory). */
   private def land(df: org.apache.spark.sql.DataFrame, landing: String,
       name: String): Unit = {
-    val stage = Files.createTempDirectory("stage").toString
+    val stage = tempDir("stage").toString
     df.coalesce(1).write.mode("overwrite").parquet(s"$stage/d")
     val part = new java.io.File(s"$stage/d").listFiles()
       .filter(_.getName.endsWith(".parquet")).head
@@ -39,8 +39,8 @@ class StreamingPipelineSpec extends AnyFunSuite {
   }
 
   test("streaming pipeline ingests files incrementally, exactly once per file") {
-    val landing = Files.createTempDirectory("landing").toString
-    val ckpt = Files.createTempDirectory("ckpt").toString
+    val landing = tempDir("landing").toString
+    val ckpt = tempDir("ckpt").toString
     val url = derby("streampipe")
     exec(url, "CREATE TABLE stream_t (order_id BIGINT, qty DOUBLE)")
 
@@ -96,7 +96,7 @@ class StreamingPipelineSpec extends AnyFunSuite {
   test("streaming pipeline ingests a mocks3:// landing prefix with mocks3 checkpoint") {
     val hc = spark.sparkContext.hadoopConfiguration
     hc.set("fs.mocks3.impl", classOf[MockS3FileSystem].getName)
-    hc.set("fs.mocks3.root", Files.createTempDirectory("mocks3_stream_root").toString)
+    hc.set("fs.mocks3.root", tempDir("mocks3_stream_root").toString)
     val bucket = s"mocks3://graft-stream-${System.nanoTime()}"
     val url = derby("streampipe_s3")
     exec(url, "CREATE TABLE s3_stream_t (order_id BIGINT, qty DOUBLE)")

@@ -1,7 +1,6 @@
 package graft
 
 import java.lang.ref.WeakReference
-import java.nio.file.Files
 import org.apache.spark.graft.JobProbe
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
@@ -58,7 +57,7 @@ class TablesSpec extends AnyFunSuite {
   }
 
   test("regenerating a table five times leaves one memo entry with the latest footer") {
-    val d = Files.createTempDirectory("graft_tables_regen").toString
+    val d = tempDir("graft_tables_regen").toString
     for (i <- 1 to 5) {
       spark.range(0, 10L * i).write.mode("overwrite").parquet(s"$d/regen.parquet")
       assert(Tables.t(spark, d, "regen").count() == 10L * i)

@@ -16,7 +16,7 @@ class UpsertSpec extends AnyFunSuite {
 
   private def writeOne(df: org.apache.spark.sql.DataFrame, dir: Path,
       name: String, mtimeMs: Long): Unit = {
-    val staging = Files.createTempDirectory("graft_ups_stage")
+    val staging = tempDir("graft_ups_stage")
     df.coalesce(1).write.mode("overwrite").parquet(staging.toString)
     val part = Files.list(staging).filter(_.toString.endsWith(".parquet"))
       .findFirst().get()
@@ -28,7 +28,7 @@ class UpsertSpec extends AnyFunSuite {
 
   test("upsert applies inserts, updates, and ignores out-of-order older changes") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_ups_landing")
+    val dir = tempDir("graft_ups_landing")
     def ts(h: Int): Timestamp = Timestamp.valueOf(f"2024-02-01 $h%02d:00:00")
     def ev(id: Long, t: Timestamp, u: Long, v: Double) =
       (id, t, u, "update", v, "{}")

@@ -16,7 +16,7 @@ class WatermarkSpec extends AnyFunSuite {
   import SparkTestSession._
 
   private def writeOne(df: org.apache.spark.sql.DataFrame, dir: Path, name: String): Unit = {
-    val staging = Files.createTempDirectory("graft_wm_stage")
+    val staging = tempDir("graft_wm_stage")
     df.coalesce(1).write.mode("overwrite").parquet(staging.toString)
     val part = Files.list(staging).filter(_.toString.endsWith(".parquet"))
       .findFirst().get()
@@ -25,7 +25,7 @@ class WatermarkSpec extends AnyFunSuite {
 
   test("append-mode windowed agg drops data later than the watermark and emits windows once") {
     import spark.implicits._
-    val landing = Files.createTempDirectory("graft_wm_landing")
+    val landing = tempDir("graft_wm_landing")
     def ts(day: Int, hour: Int): Timestamp =
       Timestamp.valueOf(f"2024-01-$day%02d $hour%02d:00:00")
     // batch 1: three day-1 events + a day-3 sentinel that advances the
@@ -86,7 +86,7 @@ class WatermarkSpec extends AnyFunSuite {
     }
     // out of order: session opens at 10:10, then a LATER file delivers
     // a 10:00 event — within gap of the open start, the singleton arm
-    val bad = Files.createTempDirectory("graft_sess_ooo")
+    val bad = tempDir("graft_sess_ooo")
     land(bad,
       Seq((7L, ts("2024-02-01 10:10:00"), 1L), (7L, ts("2024-02-01 10:12:00"), 2L)),
       Seq((7L, ts("2024-02-01 10:00:00"), 3L)))
@@ -101,7 +101,7 @@ class WatermarkSpec extends AnyFunSuite {
       s"expected the replay-order assertion, got: $ex")
 
     // control: the same events landed in order merge into one session
-    val good = Files.createTempDirectory("graft_sess_ord")
+    val good = tempDir("graft_sess_ord")
     land(good,
       Seq((7L, ts("2024-02-01 10:00:00"), 3L)),
       Seq((7L, ts("2024-02-01 10:10:00"), 1L), (7L, ts("2024-02-01 10:12:00"), 2L)))
