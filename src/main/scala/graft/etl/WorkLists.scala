@@ -1,6 +1,6 @@
 package graft.etl
 
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 
 /** Restartable file-based work lists with the reference's exact
@@ -44,10 +44,16 @@ final class WorkLists(val workListsDir: String, val batchSize: Int) {
       .filter(l => l.trim.nonEmpty && !l.trim.startsWith("#"))
       .toVector
 
-  private def writeList(p: Path, items: Seq[String]): Unit =
-    Files.write(p, items.map(_ + "\n").mkString.getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,
-      StandardOpenOption.WRITE)
+  /** Replaces `p` whole: the items go to a temp file in the same dir,
+    * which is then renamed over `p`, so a crash leaves either the old
+    * list or the new one, never a truncated file. */
+  private def writeList(p: Path, items: Seq[String]): Unit = {
+    val tmp = Files.createTempFile(p.getParent, s".${p.getFileName}", ".tmp")
+    try {
+      Files.write(tmp, items.map(_ + "\n").mkString.getBytes("UTF-8"))
+      Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    } finally Files.deleteIfExists(tmp)
+  }
 
   /** Remove from wip, append to completed (first), rewrite wip. */
   def markCompleted(item: String): Unit = {

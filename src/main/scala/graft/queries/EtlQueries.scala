@@ -1515,9 +1515,6 @@ object EtlQueries {
     s.read.parquet(auditPath).orderBy(col("writer"))
   }
 
-  /** Concurrent-commit store base, exposed for CommitProtocolSpec. */
-  def concurrentCommitBase(d: String): String = scratchDir("ccommit", d, "orders")
-
   /** `etl_manifest_scale` — version resolution at commit-history
     * scale: 1100 CAS commits drive the store across the
     * [[graft.etl.ManifestCommit.GroupSize]] gate, where the layout
@@ -1576,9 +1573,6 @@ object EtlQueries {
     }
     s.read.parquet(auditPath).orderBy(col("v"))
   }
-
-  /** Manifest-scale store base, exposed for CommitProtocolSpec. */
-  def manifestScaleBase(d: String): String = scratchDir("mscale", d, "orders")
 
   /** Oracle: the parity replay — partition p has been flipped
     * floor((v−1−p)/8)+1 times by version v; odd parity reads the

@@ -3,9 +3,13 @@ package graft.sinks
 import java.io.InputStream
 import java.math.BigInteger
 import java.sql.DriverManager
+import java.util.concurrent.{ArrayBlockingQueue, Callable, ExecutionException, Executors, Future, TimeUnit}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
+import scala.collection.mutable.ArrayBuffer
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.execution.datasources.jdbc.{JdbcOptionsInWrite, JdbcUtils}
 import org.apache.spark.sql.jdbc.JdbcDialects
 import org.apache.spark.sql.types._
@@ -76,6 +80,13 @@ object PgBinaryCopy {
       val n = s.numBytes
       ensure(n); s.writeToMemory(bytes, Platform.BYTE_ARRAY_OFFSET + size); size += n
     }
+    /** Appends `len` bytes read at (`base`, `offset`), Spark's address
+      * of a value inside an `UnsafeRow`. */
+    def writeMemory(base: AnyRef, offset: Long, len: Int): Unit = {
+      ensure(len)
+      Platform.copyMemory(base, offset, bytes, Platform.BYTE_ARRAY_OFFSET + size, len)
+      size += len
+    }
 
     /** Reverses the order of the int16s in [from, until). */
     def reverseShorts(from: Int, until: Int): Unit = {
@@ -106,10 +117,14 @@ object PgBinaryCopy {
       { o.writeInt(4); o.writeInt(java.lang.Float.floatToIntBits(r.getFloat(i))) }
     case DoubleType  => (o, r, i) =>
       { o.writeInt(8); o.writeLong(java.lang.Double.doubleToLongBits(r.getDouble(i))) }
-    case StringType  => (o, r, i) =>
-      { val s = r.getUTF8String(i); o.writeInt(s.numBytes); o.writeUtf8(s) }
-    case BinaryType  => (o, r, i) =>
-      { val b = r.getBinary(i); o.writeInt(b.length); o.write(b, 0, b.length) }
+    case StringType  => (o, r, i) => r match {
+      case u: UnsafeRow => writeVarLen(o, u, i)
+      case _ => val s = r.getUTF8String(i); o.writeInt(s.numBytes); o.writeUtf8(s)
+    }
+    case BinaryType  => (o, r, i) => r match {
+      case u: UnsafeRow => writeVarLen(o, u, i)
+      case _ => val b = r.getBinary(i); o.writeInt(b.length); o.write(b, 0, b.length)
+    }
     case DateType    => (o, r, i) => { o.writeInt(4); o.writeInt(r.getInt(i) - PgEpochDays) }
     // a TIMESTAMP_NTZ is a wall clock counted as if UTC, so it lands
     // unshifted in a PG `timestamp` column
@@ -120,6 +135,17 @@ object PgBinaryCopy {
       (o, r, i) => writeNumeric(o, r.getDecimal(i, p, s))
     case _ => null
   })
+
+  /** A string or binary field of an `UnsafeRow`, copied straight from
+    * the row's memory: its fixed slot holds the value's offset (high 32
+    * bits) and size (low 32 bits), so no `UTF8String` or `byte[]` is
+    * made per value. */
+  private def writeVarLen(out: CopyBuffer, row: UnsafeRow, i: Int): Unit = {
+    val offsetAndSize = row.getLong(i)
+    val n = offsetAndSize.toInt
+    out.writeInt(n)
+    out.writeMemory(row.getBaseObject, row.getBaseOffset + (offsetAndSize >> 32), n)
+  }
 
   /** One tuple: int16 field count, then per field -1 for NULL or the
     * column writer's length and payload. */
@@ -288,9 +314,10 @@ object PgBinaryCopy {
   *    session per write reads the table's columns, resolved by the
   *    server as the load itself resolves the name, and serves both
   *    `COUNT(*)`s of the delta check.
-  *  - `jdbc:postgresql:` targets load by per-partition binary `COPY FROM
-  *    STDIN` over graft's own protocol-v3 client ([[PgWire]]), with no
-  *    driver jar. The partitions read the plan's `InternalRow`s
+  *  - `jdbc:postgresql:` targets load by binary `COPY FROM STDIN` over
+  *    graft's own protocol-v3 client ([[PgWire]]), with no driver jar:
+  *    each partition over one or more COPY streams (see
+  *    `PartitionCopy`), which read the plan's `InternalRow`s
   *    (`queryExecution.toRdd`) and encode them in 64 KiB CopyData
   *    frames. A column with no PG binary mapping fails loudly: with
   *    no driver jar there is no INSERT path to fall back to, and
@@ -319,14 +346,15 @@ object PgCopySink {
     *   error either way (one load cannot set a column twice).
     *
     * Semantics notes (vs the single-socket reference loader):
-    *  - at-least-once per partition: each partition loads in its own
-    *    committed round trip (an autocommitted COPY, or one INSERT
-    *    transaction), so a Spark task retry or speculative duplicate
-    *    re-sends that partition. The returned sum is the EXACT input row
-    *    count, because Spark keeps only the successful attempt's result;
-    *    for the same reason it cannot see a failed attempt's commit. So
-    *    write compares the target table's before/after COUNT(*) delta
-    *    against it and throws if a retry actually double-loaded. The
+    *  - at-least-once per partition: each partition commits on its own
+    *    (its COPY streams' transactions together, once all of its COPYs
+    *    have ended, or one INSERT transaction), so a Spark task retry or
+    *    speculative duplicate re-sends that partition. The returned sum
+    *    is the EXACT input row count, because Spark keeps only the
+    *    successful attempt's result; for the same reason it cannot see
+    *    a failed attempt's commit. So write compares the target table's
+    *    before/after COUNT(*) delta against it and throws if a retry
+    *    actually double-loaded. The
     *    delta check assumes this writer is the table's only concurrent
     *    writer. Exactly-once needs a staging table + rename, which a
     *    caller can layer on top.
@@ -354,7 +382,8 @@ object PgCopySink {
       val before = target.count()
       val loaded =
         if (isPostgres(url)) {
-          val load = copyLoader(PgWire.parse(url), table, schema)
+          val sc = df.sparkSession.sparkContext
+          val load = copyLoader(PgWire.parse(url), table, schema, taskSlots(sc.master, sc.getConf))
           df.queryExecution.toRdd.mapPartitions(rows => Iterator(load(rows))).collect().sum
         } else {
           val load = insertLoader(url, table, schema)
@@ -396,10 +425,11 @@ object PgCopySink {
     }
   }
 
-  /** One partition → one binary COPY on its own connection; returns the
-    * server's `COPY n`. Empty partitions open no connection. */
-  private def copyLoader(t: PgWire.Target, table: String,
-      schema: StructType): Iterator[InternalRow] => Long = {
+  /** One partition → binary COPY over one or more streams, each on its
+    * own connection; returns the sum of the servers' `COPY n`. Empty
+    * partitions open no connection. */
+  private def copyLoader(t: PgWire.Target, table: String, schema: StructType,
+      slots: Int): Iterator[InternalRow] => Long = {
     val writers = schema.fields.map(f => PgBinaryCopy.fieldWriter(f.dataType).getOrElse(
       throw new IllegalArgumentException(
         s"column '${f.name}': ${f.dataType.simpleString} has no PG binary " +
@@ -408,11 +438,202 @@ object PgCopySink {
     val copySql = s"COPY $table ($colList) FROM STDIN WITH (FORMAT binary)"
     rows =>
       if (!rows.hasNext) 0L
-      else {
-        val conn = PgWire.connect(t)
-        try conn.copyIn(copySql, new PgBinaryCopy.InternalRowStream(rows, writers))
-        finally conn.close()
+      else new PartitionCopy(t, copySql, schema, writers, slots).load(rows)
+  }
+
+  /** Task slots of one executor, read on the driver: `local[N]` gives N
+    * (`local[*]` the machine's cores), a cluster `spark.executor.cores`
+    * (1 when unset); either divided by `spark.task.cpus`. */
+  private[sinks] def taskSlots(master: String, conf: SparkConf): Int = {
+    val LocalN = """local\[(\d+|\*)(?:,\s*\d+)?\]""".r
+    val cores = master match {
+      case "local" => 1
+      case LocalN("*") => Runtime.getRuntime.availableProcessors
+      case LocalN(n) => n.toInt
+      case _ => conf.getInt("spark.executor.cores", 1)
+    }
+    math.max(1, cores / conf.getInt("spark.task.cpus", 1))
+  }
+
+  /** Open COPY connections of this JVM, over all partitions loading in it. */
+  private val openCopies = new AtomicInteger()
+
+  /** Bytes of `UnsafeRow`s in one chunk: whole rows, each behind an
+    * 8-byte size. A row larger than this gets a chunk of its own size. */
+  private val ChunkBytes = 1 << 16
+  /** Filled chunks waiting for a stream. */
+  private val QueueChunks = 8
+  /** Row bytes a partition must have produced before it may add a
+    * stream. A new backend costs one connect, startup and `BEGIN`:
+    * 3.1 ms median on a local Postgres 15 (unix socket, trust auth,
+    * 4-core host). One backend ingests about 120 MB/s, so 4 MiB is
+    * about 35 ms of one stream's work, and a partition that stops
+    * short of it never pays for a backend it cannot use. */
+  private val FanOutFloor = 4L << 20
+
+  private final class Chunk(var bytes: Array[Byte]) { var size = 0 }
+  private val Eof = new Chunk(Array.emptyByteArray)
+
+  /** One partition's load. The task thread is the producer: it copies
+    * each row's `UnsafeRow` bytes into tuple-aligned chunks on a bounded
+    * queue. Each stream runs on its own daemon thread and connection:
+    * `BEGIN`, then a binary COPY of the chunks' rows, read back through
+    * one reused `UnsafeRow` and encoded by [[PgBinaryCopy.InternalRowStream]].
+    * The partition starts with one stream and adds one when the queue
+    * is full (the server is the bottleneck), the partition has produced
+    * [[FanOutFloor]] bytes and this JVM holds fewer COPY connections
+    * than its task slots.
+    *
+    * All-or-nothing: the streams `COMMIT` only after every COPY of the
+    * partition has ended. Any failure — a stream's server error, the
+    * producer's, an interrupt — ends every stream's COPY with CopyFail,
+    * closes its connection (which rolls its transaction back) and
+    * rethrows the first error. Chunks are recycled: at most
+    * `QueueChunks` + streams + 1 exist. */
+  private final class PartitionCopy(t: PgWire.Target, copySql: String,
+      schema: StructType, writers: Array[PgBinaryCopy.FieldWriter], slots: Int) {
+    private val queue = new ArrayBlockingQueue[Chunk](QueueChunks)
+    private val free = new ArrayBlockingQueue[Chunk](QueueChunks + slots + 1)
+    private var allocated = 0
+    private var produced = 0L
+    private val failure = new AtomicReference[Throwable]
+    private val streams = ArrayBuffer.empty[Future[(PgWireConn, Long)]]
+    private val pool = Executors.newCachedThreadPool { (r: Runnable) =>
+      val th = new Thread(r, "pgcopy-stream"); th.setDaemon(true); th
+    }
+
+    private def fail(e: Throwable): Unit = { failure.compareAndSet(null, e); () }
+    /** Ends the caller's part of the load once another part has failed;
+      * `load` rethrows the first error, not this one. */
+    private def checkFailed(): Unit =
+      if (failure.get != null) throw new IllegalStateException("partition load aborted")
+
+    def load(rows: Iterator[InternalRow]): Long = try {
+      produce(rows)
+      val copied = streams.map(_.get())
+      copied.foreach(_._1.exec("COMMIT"))
+      copied.map(_._2).sum
+    } catch {
+      case e: Throwable =>
+        fail(e match { case x: ExecutionException => x.getCause; case _ => e })
+        throw failure.get
+    } finally close()
+
+    /** Waits for every stream (interrupting them if this thread is
+      * interrupted), closes the connections of those that finished their
+      * COPY — after `COMMIT`, or instead of it — and releases the
+      * partition's connection reservations. A failed stream has closed
+      * its own connection. */
+    private def close(): Unit = {
+      pool.shutdown()
+      var interrupted = false
+      while (!pool.isTerminated)
+        try pool.awaitTermination(1, TimeUnit.SECONDS)
+        catch { case _: InterruptedException => interrupted = true; pool.shutdownNow() }
+      streams.foreach(f => try f.get()._1.close() catch { case _: ExecutionException => () })
+      openCopies.addAndGet(-streams.size)
+      if (interrupted) Thread.currentThread.interrupt()
+    }
+
+    private def startStream(): Unit =
+      streams += pool.submit(new Callable[(PgWireConn, Long)] {
+        def call(): (PgWireConn, Long) = {
+          var conn: PgWireConn = null
+          try {
+            conn = PgWire.connect(t)
+            conn.exec("BEGIN")
+            (conn, conn.copyIn(copySql, new PgBinaryCopy.InternalRowStream(new ChunkRows, writers)))
+          } catch {
+            case e: Throwable =>
+              fail(e)
+              if (conn != null) conn.close()
+              throw e
+          }
+        }
+      })
+
+    private def produce(rows: Iterator[InternalRow]): Unit = {
+      openCopies.incrementAndGet()
+      startStream()
+      var project: UnsafeProjection = null
+      var chunk = freeChunk()
+      while (rows.hasNext) {
+        val row = rows.next() match {
+          case u: UnsafeRow => u
+          case r =>
+            if (project == null) project = UnsafeProjection.create(schema)
+            project(r)
+        }
+        val n = row.getSizeInBytes
+        if (chunk.size + 8 + n > chunk.bytes.length) {
+          if (chunk.size > 0) { send(chunk); chunk = freeChunk() }
+          if (8 + n > chunk.bytes.length) chunk.bytes = new Array[Byte](8 + n)
+        }
+        val at = Platform.BYTE_ARRAY_OFFSET + chunk.size
+        Platform.putLong(chunk.bytes, at, n)
+        row.writeToMemory(chunk.bytes, at + 8)
+        chunk.size += 8 + n
       }
+      if (chunk.size > 0) send(chunk)
+      streams.foreach(_ => put(Eof))
+    }
+
+    /** Queues a full chunk; on a full queue, first adds a stream if the
+      * partition may. */
+    private def send(c: Chunk): Unit = {
+      produced += c.size
+      if (!queue.offer(c)) {
+        if (produced >= FanOutFloor && reserveConnection()) startStream()
+        put(c)
+      }
+      checkFailed()
+    }
+
+    private def put(c: Chunk): Unit =
+      while (!queue.offer(c, 10, TimeUnit.MILLISECONDS)) checkFailed()
+
+    private def reserveConnection(): Boolean = {
+      val open = openCopies.get
+      open < slots && openCopies.compareAndSet(open, open + 1)
+    }
+
+    private def freeChunk(): Chunk = {
+      var c = free.poll()
+      if (c == null) {
+        if (allocated < QueueChunks + streams.size + 1) {
+          allocated += 1
+          c = new Chunk(new Array[Byte](ChunkBytes))
+        } else while ({ c = free.poll(10, TimeUnit.MILLISECONDS); c == null }) checkFailed()
+      }
+      c.size = 0
+      c
+    }
+
+    /** A stream's rows: the queued chunks' rows, each read through one
+      * reused `UnsafeRow` pointed into the chunk. */
+    private final class ChunkRows extends Iterator[InternalRow] {
+      private val row = new UnsafeRow(schema.length)
+      private var chunk: Chunk = null
+      private var pos = 0
+
+      def hasNext: Boolean = {
+        while (chunk == null || (pos == chunk.size && (chunk ne Eof))) {
+          if (chunk != null) free.offer(chunk)
+          chunk = null
+          while (chunk == null) { checkFailed(); chunk = queue.poll(10, TimeUnit.MILLISECONDS) }
+          pos = 0
+        }
+        chunk ne Eof
+      }
+
+      def next(): InternalRow = {
+        val at = Platform.BYTE_ARRAY_OFFSET + pos
+        val n = Platform.getLong(chunk.bytes, at).toInt
+        row.pointTo(chunk.bytes, at + 8, n)
+        pos += 8 + n
+        row
+      }
+    }
   }
 
   /** One partition → Spark's batched INSERTs in one transaction; returns

@@ -20,8 +20,9 @@ import java.nio.charset.StandardCharsets.UTF_8
   * and TCP are both supported; TLS is not (in-datacenter loaders —
   * fail loudly rather than pretend).
   *
-  * Thread-safety: one connection per caller (each Spark partition
-  * opens its own — connections are cheap next to a partition's COPY).
+  * Thread-safety: a connection serves one thread at a time. Each COPY
+  * stream of a partition opens its own (see [[PgCopySink]]); a new
+  * backend costs a few ms, cheap next to the COPY it carries.
   */
 object PgWire {
 

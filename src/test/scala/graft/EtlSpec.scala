@@ -766,6 +766,27 @@ class EtlSpec extends AnyFunSuite {
     assertThrows[IllegalArgumentException](new WorkLists(d, 1))
   }
 
+  test("worklists: rewrites replace todo and wip by rename and leave no temp file") {
+    val d = tmpDir("wl6")
+    writeFile(d, "todo", "a\nb\nc\n")
+    writeFile(d, "wip", "")
+    def key(name: String): AnyRef = Files.readAttributes(Paths.get(d, name),
+      classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey()
+    val wl = new WorkLists(d, 2)
+    val (todo0, wip0) = (key("todo"), key("wip"))
+    assert(todo0 != null && wip0 != null, "this file system reports no file keys")
+    assert(wl.nextBatch() == Vector("a", "b"))
+    val (todo1, wip1) = (key("todo"), key("wip"))
+    assert(todo1 != todo0 && wip1 != wip0)
+    wl.markCompleted("a")
+    assert(key("wip") != wip1 && key("todo") == todo1)
+    assert(Files.readString(Paths.get(d, "wip")) == "b\n")
+    assert(Files.readString(Paths.get(d, "todo")) == "c\n")
+    import scala.jdk.CollectionConverters._
+    val names = Files.list(Paths.get(d)).iterator().asScala.map(_.getFileName.toString).toSet
+    assert(names == Set("todo", "wip", "completed"), names)
+  }
+
   // ---- ParquetSource ----------------------------------------------------
 
   test("selectFields: order preserved, duplicates suffixed, missing errors") {

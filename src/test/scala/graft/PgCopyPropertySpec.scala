@@ -4,8 +4,9 @@ import java.math.{BigDecimal => JBigDecimal, BigInteger}
 import java.nio.ByteBuffer
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.Prop.propBoolean
@@ -147,6 +148,33 @@ class PgCopyPropertySpec extends AnyFunSuite {
       val reference = refStream(schema, rows)
       (internal.sameElements(reference) :| s"InternalRow != reference for $schema") &&
         (adapter.sameElements(reference) :| s"Row adapter != reference for $schema")
+    })
+  }
+
+  test("InternalRow stream bytes over UnsafeRows pointed into one shared buffer equal the reference's (property)") {
+    check(Prop.forAll(caseGen, Gen.choose(1, 4)) { case ((schema, rows), lead) =>
+      val writers = schema.fields.map(f => PgBinaryCopy.fieldWriter(f.dataType).get)
+      // the rows' bytes back to back behind 8-byte sizes, from a
+      // non-zero offset, read through one reused UnsafeRow as a COPY
+      // stream reads its chunk
+      val unsafe = UnsafeProjection.create(schema)
+      val sizes = rows.map(r => unsafe(new GenericInternalRow(r)).getSizeInBytes)
+      val shared = new Array[Byte](8 * lead + sizes.map(_ + 8).sum)
+      var at = Platform.BYTE_ARRAY_OFFSET + 8L * lead
+      val offsets = rows.map { r =>
+        val u = unsafe(new GenericInternalRow(r))
+        Platform.putLong(shared, at, u.getSizeInBytes)
+        u.writeToMemory(shared, at + 8)
+        val rowAt = at + 8
+        at += 8 + u.getSizeInBytes
+        rowAt
+      }
+      val row = new UnsafeRow(schema.length)
+      val pointed = offsets.iterator.zip(sizes.iterator).map { case (o, n) =>
+        row.pointTo(shared, o, n); row: InternalRow
+      }
+      val bytes = new PgBinaryCopy.InternalRowStream(pointed, writers).readAllBytes()
+      bytes.sameElements(refStream(schema, rows)) :| s"shared-buffer UnsafeRow != reference for $schema"
     })
   }
 

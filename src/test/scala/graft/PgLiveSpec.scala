@@ -33,6 +33,9 @@ import graft.sinks.{PgBinaryCopy, PgCopySink, PgServer, PgWire}
   *     CopyFail and surfaces its own error.
   *  5. calendar: old dates and timestamps read back from PG as the same
   *     text Spark prints for them.
+  *  6. fan-out: a large partition loads over several COPY streams, all
+  *     or nothing, and an executor never holds more COPY connections
+  *     than task slots.
   */
 class PgLiveSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -251,6 +254,108 @@ class PgLiveSpec extends AnyFunSuite {
       val before = sessions()
       assert(PgCopySink.write(spark.range(0, 100, 1, 1).toDF("k"), l.url, "graft_sessions") == 100)
       assert(sessions() - before == 2)
+    } finally monitor.close()
+  }
+
+  /** Server sessions ended so far in this database, read once every
+    * backend but the monitor's has left. */
+  private def sessionsEnded(monitor: graft.sinks.PgWireConn): Long = {
+    var left = 400
+    while (left > 0 && monitor.query("SELECT count(*) FROM pg_stat_activity " +
+        "WHERE backend_type = 'client backend' AND pid <> pg_backend_pid()")._2
+        .head(0) != "0") { Thread.sleep(5); left -= 1 }
+    monitor.query("SELECT sessions FROM pg_stat_database " +
+      "WHERE datname = current_database()")._2.head(0).toLong
+  }
+
+  /** 300k rows of (k, v, s) in one partition: 26 bytes of fixed fields
+    * and 44–63 bytes of text per row, about 23 MiB of PGCOPY. */
+  private val FanOutRows = 300000L
+  private def fanOutFrame(k: String = "id") = spark.range(0, FanOutRows, 1, 1)
+    .selectExpr(s"$k AS k", "id * 3 AS v", "repeat('x', 40 + CAST(id % 20 AS INT)) AS s")
+
+  test("a one-partition write of 23 MiB fans out over more COPY streams and loads exactly") {
+    val l = live
+    val monitor = PgWire.connect(l.target)
+    try {
+      monitor.exec("DROP TABLE IF EXISTS graft_fanout")
+      monitor.exec("CREATE TABLE graft_fanout (k bigint, v bigint, s text)")
+      val before = sessionsEnded(monitor)
+      assert(PgCopySink.write(fanOutFrame(), l.url, "graft_fanout") == FanOutRows)
+      val opened = sessionsEnded(monitor) - before
+      val n = FanOutRows
+      assert(monitor.query("SELECT COUNT(*), SUM(k), SUM(v), SUM(octet_length(s)) " +
+        "FROM graft_fanout")._2.head.toSeq ==
+        Seq(n, n * (n - 1) / 2, 3 * n * (n - 1) / 2, 40 * n + 19 * n / 2).map(_.toString))
+      val pgcopyBytes = 19 + 26 * n + 4 * n + (40 * n + 19 * n / 2) + 2
+      assert(pgcopyBytes >= (16L << 20))
+      assert(opened > 2, s"one partition of $pgcopyBytes bytes opened $opened sessions")
+    } finally monitor.close()
+  }
+
+  test("a late row that fails a CHECK after fan-out fails the write and lands nothing") {
+    val l = live
+    val monitor = PgWire.connect(l.target)
+    try {
+      monitor.exec("DROP TABLE IF EXISTS graft_fanout_check")
+      monitor.exec("CREATE TABLE graft_fanout_check (k bigint, v bigint, s text, " +
+        s"CONSTRAINT graft_late_row CHECK (k <> ${FanOutRows - 100}))")
+      monitor.exec("INSERT INTO graft_fanout_check VALUES (-1, 0, 'kept'), (-2, 0, 'kept')")
+      val before = sessionsEnded(monitor)
+      val e = intercept[org.apache.spark.SparkException](
+        PgCopySink.write(fanOutFrame(), l.url, "graft_fanout_check"))
+      assert(e.getMessage.contains("graft_late_row"), e.getMessage)
+      assert(sessionsEnded(monitor) - before > 2, "the load never fanned out")
+      assert(monitor.query("SELECT COUNT(*) FROM graft_fanout_check")._2.head(0) == "2")
+    } finally monitor.close()
+  }
+
+  test("a producer failure after fan-out surfaces the producer's error and lands nothing") {
+    val l = live
+    val monitor = PgWire.connect(l.target)
+    try {
+      monitor.exec("DROP TABLE IF EXISTS graft_fanout_fail")
+      monitor.exec("CREATE TABLE graft_fanout_fail (k bigint, v bigint, s text)")
+      val before = sessionsEnded(monitor)
+      val df = fanOutFrame(
+        s"IF(id = ${FanOutRows - 100}, CAST(raise_error('producer exploded') AS BIGINT), id)")
+      // Spark rethrows a SparkThrowable raised in a task as itself
+      val e = intercept[Exception](PgCopySink.write(df, l.url, "graft_fanout_fail"))
+      assert(e.getMessage.contains("producer exploded"), e.getMessage)
+      assert(!e.getMessage.contains("aborted"), e.getMessage)
+      assert(sessionsEnded(monitor) - before > 2, "the load never fanned out")
+      assert(monitor.query("SELECT COUNT(*) FROM graft_fanout_fail")._2.head(0) == "0")
+    } finally monitor.close()
+  }
+
+  test("as many non-empty partitions as task slots open one COPY session each") {
+    val l = live
+    val monitor = PgWire.connect(l.target)
+    val slots = 4 // SparkTestSession runs local[4]
+    try {
+      monitor.exec("DROP TABLE IF EXISTS graft_fanout_slots")
+      monitor.exec("CREATE TABLE graft_fanout_slots (p int, k bigint, s text)")
+      // 60k rows of 128 UnsafeRow bytes per partition, each past the
+      // fan-out floor. Every partition reaches its second row only once
+      // all hold a connection, and produces its last row after a pause
+      // that drains its queue, so none finds a sibling's slot freed.
+      val rows = 60000
+      FanOutGate.reset(slots)
+      val rdd = spark.sparkContext.parallelize(0 until slots, slots).mapPartitions { it =>
+        val p = it.next()
+        Iterator.range(0, rows).map { i =>
+          if (i == 1) FanOutGate.await(FanOutGate.start)
+          if (i == rows - 1) { FanOutGate.await(FanOutGate.end); Thread.sleep(300) }
+          Row(p, i.toLong, "y" * 100)
+        }
+      }
+      val df = spark.createDataFrame(rdd, StructType(Seq(StructField("p", IntegerType),
+        StructField("k", LongType), StructField("s", StringType))))
+      val before = sessionsEnded(monitor)
+      assert(PgCopySink.write(df, l.url, "graft_fanout_slots") == slots.toLong * rows)
+      assert(sessionsEnded(monitor) - before == 1 + slots)
+      assert(monitor.query("SELECT COUNT(DISTINCT p), SUM(k) FROM graft_fanout_slots")._2.head.toSeq ==
+        Seq(slots.toString, (slots.toLong * rows * (rows - 1) / 2).toString))
     } finally monitor.close()
   }
 
@@ -498,5 +603,18 @@ class PgLiveSpec extends AnyFunSuite {
       .collect().map(_.getString(0)).toSeq
     assert(psql(l, "SELECT k || '|' || d::text || '|' || ts::text FROM graft_calendar ORDER BY k")
       .trim.split('\n').toSeq == want)
+  }
+}
+
+/** Barriers the partitions of PgLiveSpec's task-slot spec meet at; the
+  * tasks run in the spec's JVM under `local[4]`. */
+object FanOutGate {
+  @volatile var start, end: java.util.concurrent.CyclicBarrier = _
+  def reset(parties: Int): Unit = {
+    start = new java.util.concurrent.CyclicBarrier(parties)
+    end = new java.util.concurrent.CyclicBarrier(parties)
+  }
+  def await(b: java.util.concurrent.CyclicBarrier): Unit = {
+    b.await(60, java.util.concurrent.TimeUnit.SECONDS); ()
   }
 }
