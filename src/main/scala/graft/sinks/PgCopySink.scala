@@ -347,9 +347,12 @@ object PgCopySink {
     *
     * Semantics notes (vs the single-socket reference loader):
     *  - at-least-once per partition: each partition commits on its own
-    *    (its COPY streams' transactions together, once all of its COPYs
-    *    have ended, or one INSERT transaction), so a Spark task retry or
-    *    speculative duplicate re-sends that partition. The returned sum
+    *    (one INSERT transaction, or its COPY streams' transactions once
+    *    all of its COPYs have ended), so a Spark task retry or
+    *    speculative duplicate re-sends that partition. A partition's
+    *    streams commit in sequence, so a failure during `COMMIT` (a
+    *    dropped connection, a crashed backend) can land part of it; the
+    *    retry then re-sends all of it. The returned sum
     *    is the EXACT input row count, because Spark keeps only the
     *    successful attempt's result; for the same reason it cannot see
     *    a failed attempt's commit. So write compares the target table's
@@ -383,7 +386,8 @@ object PgCopySink {
       val loaded =
         if (isPostgres(url)) {
           val sc = df.sparkSession.sparkContext
-          val load = copyLoader(PgWire.parse(url), table, schema, taskSlots(sc.master, sc.getConf))
+          val slots = if (target.rowsMayWait()) 1 else taskSlots(sc.master, sc.getConf)
+          val load = copyLoader(PgWire.parse(url), table, schema, slots)
           df.queryExecution.toRdd.mapPartitions(rows => Iterator(load(rows))).collect().sum
         } else {
           val load = insertLoader(url, table, schema)
@@ -442,14 +446,19 @@ object PgCopySink {
   }
 
   /** Task slots of one executor, read on the driver: `local[N]` gives N
-    * (`local[*]` the machine's cores), a cluster `spark.executor.cores`
-    * (1 when unset); either divided by `spark.task.cpus`. */
+    * (`local[*]` the machine's cores), `local-cluster[n,c,m]` c, any
+    * other master `spark.executor.cores`; each divided by
+    * `spark.task.cpus`. With `spark.executor.cores` unset (a standalone
+    * executor then takes all of its worker's cores) this reads 1 slot,
+    * so partitions load over one stream each. */
   private[sinks] def taskSlots(master: String, conf: SparkConf): Int = {
     val LocalN = """local\[(\d+|\*)(?:,\s*\d+)?\]""".r
+    val LocalCluster = """local-cluster\[\s*\d+\s*,\s*(\d+)\s*,\s*\d+\s*\]""".r
     val cores = master match {
       case "local" => 1
       case LocalN("*") => Runtime.getRuntime.availableProcessors
       case LocalN(n) => n.toInt
+      case LocalCluster(c) => c.toInt
       case _ => conf.getInt("spark.executor.cores", 1)
     }
     math.max(1, cores / conf.getInt("spark.task.cpus", 1))
@@ -484,12 +493,17 @@ object PgCopySink {
     * [[FanOutFloor]] bytes and this JVM holds fewer COPY connections
     * than its task slots.
     *
-    * All-or-nothing: the streams `COMMIT` only after every COPY of the
-    * partition has ended. Any failure — a stream's server error, the
+    * The streams `COMMIT` only after every COPY of the partition has
+    * ended. Any failure before then — a stream's server error, the
     * producer's, an interrupt — ends every stream's COPY with CopyFail,
     * closes its connection (which rolls its transaction back) and
-    * rethrows the first error. Chunks are recycled: at most
-    * `QueueChunks` + streams + 1 exist. */
+    * rethrows the first error. The `COMMIT`s themselves run one after
+    * another, so one failing there leaves the streams before it
+    * committed. Streams are separate transactions, so a row of one
+    * that waits on another's uncommitted row (a unique or exclusion
+    * index, a trigger) would wait on a `COMMIT` that never comes: the
+    * write gives such targets `slots` = 1, one stream per partition.
+    * Chunks are recycled: at most `QueueChunks` + streams + 1 exist. */
   private final class PartitionCopy(t: PgWire.Target, copySql: String,
       schema: StructType, writers: Array[PgBinaryCopy.FieldWriter], slots: Int) {
     private val queue = new ArrayBlockingQueue[Chunk](QueueChunks)
@@ -666,6 +680,11 @@ object PgCopySink {
   private trait TargetSession extends AutoCloseable {
     /** Catalog spelling, ordinal order; empty for no such table. */
     def columns(): Seq[String]
+    /** Whether a loaded row may wait on another transaction's
+      * uncommitted row: the table, or a table under it, has a unique or
+      * exclusion index (primary keys and deferrable constraints
+      * included) or a user trigger. */
+    def rowsMayWait(): Boolean
     def count(): Long
   }
 
@@ -676,9 +695,17 @@ object PgCopySink {
       new TargetSession {
         // to_regclass resolves the name as written (quotes, schema,
         // search_path) the way COPY will, and is NULL for no such table
+        private val regclass = s"to_regclass('${table.replace("'", "''")}')"
         def columns(): Seq[String] = conn.query("SELECT attname FROM pg_attribute " +
-          s"WHERE attrelid = to_regclass('${table.replace("'", "''")}') " +
+          s"WHERE attrelid = $regclass " +
           "AND attnum > 0 AND NOT attisdropped ORDER BY attnum")._2.map(_(0))
+        def rowsMayWait(): Boolean = conn.query(
+          s"WITH RECURSIVE t(r) AS (SELECT $regclass::oid " +
+            "UNION SELECT inhrelid FROM pg_inherits JOIN t ON inhparent = r) " +
+            "SELECT EXISTS (SELECT 1 FROM pg_index JOIN t ON indrelid = r " +
+            "WHERE indisunique OR indisexclusion) " +
+            "OR EXISTS (SELECT 1 FROM pg_trigger JOIN t ON tgrelid = r WHERE NOT tgisinternal)")
+          ._2.head(0) == "t"
         def count(): Long = conn.query(countSql)._2.head(0).toLong
         def close(): Unit = conn.close()
       }
@@ -690,6 +717,8 @@ object PgCopySink {
         def columns(): Seq[String] = JdbcUtils.getSchemaOption(conn,
           new JdbcOptionsInWrite(url, table, Map.empty[String, String]))
           .toSeq.flatMap(_.fieldNames)
+        // the INSERT arm loads each partition in one transaction
+        def rowsMayWait(): Boolean = true
         def count(): Long = {
           val st = conn.createStatement()
           try { val rs = st.executeQuery(countSql); rs.next(); rs.getLong(1) }

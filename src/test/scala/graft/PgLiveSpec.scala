@@ -328,6 +328,51 @@ class PgLiveSpec extends AnyFunSuite {
     } finally monitor.close()
   }
 
+  test("a primary-key target keeps one COPY stream: a late duplicate key fails at once") {
+    val l = live
+    val monitor = PgWire.connect(l.target)
+    try {
+      monitor.exec("DROP TABLE IF EXISTS graft_fanout_pk")
+      monitor.exec("CREATE TABLE graft_fanout_pk (k bigint PRIMARY KEY, v bigint, s text)")
+      val before = sessionsEnded(monitor)
+      val started = System.nanoTime
+      // row 5's key again near the end: two streams would each hold one
+      // copy, the later waiting on the earlier's COMMIT
+      val e = intercept[org.apache.spark.SparkException](PgCopySink.write(
+        fanOutFrame(s"IF(id = ${FanOutRows - 100}, 5, id)"), l.url, "graft_fanout_pk"))
+      val seconds = (System.nanoTime - started) / 1e9
+      assert(e.getMessage.contains("duplicate key value violates unique constraint"), e.getMessage)
+      assert(seconds < 30, s"the duplicate key failed the write after $seconds s")
+      assert(sessionsEnded(monitor) - before == 2)
+      assert(monitor.query("SELECT COUNT(*) FROM graft_fanout_pk")._2.head(0) == "0")
+    } finally monitor.close()
+  }
+
+  test("a unique index on a partition, a deferrable unique constraint or a trigger keeps one stream") {
+    val l = live
+    val monitor = PgWire.connect(l.target)
+    try {
+      monitor.exec("DROP TABLE IF EXISTS graft_fanout_parted, graft_fanout_deferred, graft_fanout_trig")
+      monitor.exec("CREATE TABLE graft_fanout_parted (k bigint, v bigint, s text) PARTITION BY RANGE (k)")
+      monitor.exec("CREATE TABLE graft_fanout_parted_all PARTITION OF graft_fanout_parted " +
+        "FOR VALUES FROM (MINVALUE) TO (MAXVALUE)")
+      monitor.exec("CREATE UNIQUE INDEX ON graft_fanout_parted_all (k)")
+      monitor.exec("CREATE TABLE graft_fanout_deferred (k bigint, v bigint, s text, " +
+        "UNIQUE (k) DEFERRABLE INITIALLY DEFERRED)")
+      monitor.exec("CREATE TABLE graft_fanout_trig (k bigint, v bigint, s text)")
+      monitor.exec("CREATE OR REPLACE FUNCTION graft_fanout_keep() RETURNS trigger " +
+        "LANGUAGE plpgsql AS $$BEGIN RETURN NEW; END$$")
+      monitor.exec("CREATE TRIGGER graft_fanout_keep BEFORE INSERT ON graft_fanout_trig " +
+        "FOR EACH ROW EXECUTE FUNCTION graft_fanout_keep()")
+      for (table <- Seq("graft_fanout_parted", "graft_fanout_deferred", "graft_fanout_trig")) {
+        val before = sessionsEnded(monitor)
+        assert(PgCopySink.write(fanOutFrame(), l.url, table) == FanOutRows)
+        assert(sessionsEnded(monitor) - before == 2, table)
+        assert(monitor.query(s"SELECT COUNT(*) FROM $table")._2.head(0) == FanOutRows.toString)
+      }
+    } finally monitor.close()
+  }
+
   test("as many non-empty partitions as task slots open one COPY session each") {
     val l = live
     val monitor = PgWire.connect(l.target)
