@@ -4,8 +4,8 @@ import org.apache.commons.io.FileUtils
 
 /** Content fingerprint of a parquet source table — the ONE definition
   * behind every derived-artifact key (scratch stores, shared pins,
-  * persisted indexes), plus where a per-process scratch artifact lives
-  * and when it is swept. It walks nested and partitioned layouts, so a
+  * persisted indexes), plus where a per-process scratch artifact or a
+  * persisted cross-process artifact lives and when it is pruned. It walks nested and partitioned layouts, so a
   * regeneration that moves a part file between subdirectories moves
   * the key and cannot serve stale cached rows.
   *
@@ -49,6 +49,66 @@ object SourceKey {
     java.security.MessageDigest.getInstance("MD5")
       .digest(s"${src.getCanonicalPath}:${of(src)}:$params".getBytes("UTF-8"))
       .map("%02x".format(_)).mkString.take(16)
+  }
+
+  /** The one source record of an artifact dir: the canonical path of
+    * the table it was derived from. */
+  private val Record = "_GRAFT_INDEX_SOURCE"
+  private def sourcePath(d: String, table: String): String =
+    new java.io.File(d, s"$table.parquet").getCanonicalPath
+
+  private def recordedSource(dir: java.io.File): Option[String] =
+    scala.util.Try(java.nio.file.Files.readString(new java.io.File(dir, Record).toPath)).toOption
+
+  /** True if artifact dir `dir` records `d`'s `table` as its source. */
+  def recordsSource(dir: java.io.File, d: String, table: String): Boolean =
+    recordedSource(dir).contains(sourcePath(d, table))
+
+  /** Absolute `target/<kind>/<digest>` of a persisted, cross-process
+    * artifact of `kind` over `d`'s `table`. A dir written before dirs
+    * carried records gets its record here, on first use, so the
+    * 3 h prune of record-less dirs never removes a dir that is read. */
+  def artifactDir(kind: String, d: String, table: String, params: String): String = {
+    val dir = new java.io.File(s"target/$kind", digest(d, table, params)).getAbsoluteFile
+    if (dir.isDirectory && recordedSource(dir).isEmpty)
+      java.nio.file.Files.writeString(new java.io.File(dir, Record).toPath, sourcePath(d, table)): Unit
+    dir.getPath
+  }
+
+  /** (Re)build the [[artifactDir]] `dir` of `d`'s `table`: empty it,
+    * write its source record before any artifact, run `write`, then
+    * prune its siblings. Returns the pruned dirs, which in-process
+    * memos must drop. A sibling is pruned when
+    *  - its record names the same source under another digest
+    *    (superseded), at once;
+    *  - its recorded source no longer exists (orphaned), or it has no
+    *    record (written before records), once untouched for 3 h, the
+    *    [[scratchDir]] rule, so a prune cannot race a live reader;
+    *  - it is a variant `<digest>_<name>` of a dir pruned here, or of
+    *    an absent dir and untouched for 3 h. Variants of a kept digest,
+    *    the current one included, are kept. */
+  def buildArtifact(dir: String, d: String, table: String)(write: => Unit): Seq[String] = {
+    val cur = new java.io.File(dir)
+    val src = sourcePath(d, table)
+    FileUtils.deleteQuietly(cur)
+    cur.mkdirs()
+    java.nio.file.Files.writeString(new java.io.File(cur, Record).toPath, src): Unit
+    write
+    val cutoff = System.currentTimeMillis() - 3L * 3600 * 1000
+    val siblings = Option(cur.getParentFile.listFiles).getOrElse(Array.empty[java.io.File])
+      .filter(x => x.isDirectory && x.getName != cur.getName)
+    val (variants, mains) = siblings.partition(_.getName.contains('_'))
+    val doomed = mains.filter(x => recordedSource(x) match {
+      case Some(r) => r == src || !new java.io.File(r).exists && x.lastModified < cutoff
+      case None => x.lastModified < cutoff
+    }).map(_.getName).toSet
+    val kept = mains.map(_.getName).toSet -- doomed + cur.getName
+    val gone = mains.filter(x => doomed(x.getName)) ++ variants.filter { x =>
+      val base = x.getName.takeWhile(_ != '_')
+      doomed(base) || !kept(base) && x.lastModified < cutoff
+    }
+    gone.foreach(FileUtils.deleteQuietly)
+    gone.map(_.getPath).toSeq
   }
 
   /** Per-(sfDir, source-state, process) scratch dir for an artifact of

@@ -95,8 +95,4 @@ case class SimHash64(child: Expression) extends UnaryExpression {
 object HashFunctions {
   def fnv64(c: Column): Column = shim.toColumn(Fnv64(shim.toExpression(c)))
   def simhash64(c: Column): Column = shim.toColumn(SimHash64(shim.toExpression(c)))
-
-  /** Hamming distance between two 64-bit fingerprints. */
-  def hamming64(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.bit_count(a.bitwiseXOR(b))
 }

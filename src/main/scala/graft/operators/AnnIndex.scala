@@ -38,9 +38,11 @@ import org.apache.spark.sql.functions._
   * the source parquet ([[graft.SourceKey]]: every file of the tree)
   * plus the index parameters and format version, so a driver-side testdata
   * regeneration can NEVER be served stale — the fingerprint moves and
-  * the index rebuilds. [[stats]] (the gated `ann_index_build` query)
-  * force-rebuilds unconditionally: it IS the materialization operator,
-  * and its timing must measure the build, not a cache hit.
+  * the index rebuilds. The dir's record and pruning are
+  * [[graft.SourceKey.buildArtifact]]'s. [[stats]] (the gated
+  * `ann_index_build` query) force-rebuilds unconditionally: it IS the
+  * materialization operator, and its timing must measure the build,
+  * not a cache hit.
   *
   * Determinism: every stored artifact is bit-deterministic (seeded
   * sample, floor-quantised DECIMAL-summed Lloyd means, FLOAT rounding
@@ -60,27 +62,17 @@ object AnnIndex {
     * rationale behind the value). */
   val Nprobe: Int = Similarity.Nprobe
   private val FormatVersion = 1
-
-  private def root: String =
-    sys.props.getOrElse("graft.annIndexDir",
-      new java.io.File("target/ann_index").getAbsolutePath)
-
-  /** CANONICAL source path of `d`'s embeddings table — the
-    * _GRAFT_INDEX_SOURCE record, so the same corpus referenced via
-    * different path spellings (symlink, `..`, trailing slash) has one
-    * record and its stale dirs always prune (advice r7; a raw-string
-    * compare never matched the variant spelling, leaking superseded
-    * dirs forever). */
-  private def canonicalSource(d: String): String =
-    new java.io.File(s"$d/embeddings.parquet").getCanonicalPath
+  private val Params = s"v$FormatVersion:m=$M:ksub=$Ksub"
 
   /** Index dir name: the [[graft.SourceKey.digest]] of the source
     * table + index parameters, so any regeneration, source path change
     * or param/format bump yields a new index directory. */
   private[graft] def fingerprint(d: String): String =
-    graft.SourceKey.digest(d, "embeddings", s"v$FormatVersion:m=$M:ksub=$Ksub")
+    graft.SourceKey.digest(d, "embeddings", Params)
 
-  private[graft] def dirFor(d: String): String = s"$root/${fingerprint(d)}"
+  /** `target/ann_index/<fingerprint>`, the index dir of `d`'s corpus. */
+  private[graft] def dirFor(d: String): String =
+    graft.SourceKey.artifactDir("ann_index", d, "embeddings", Params)
   private def marker(dir: String) = java.nio.file.Paths.get(dir, "_GRAFT_INDEX_OK")
 
   /** In-session memo of completed builds: after the first ensure() the
@@ -114,101 +106,53 @@ object AnnIndex {
     }
   }
 
-  /** Force (re)build the index for `d`'s corpus. Prunes superseded
-    * fingerprint dirs of the SAME source corpus (older regenerations)
-    * — and only those: each index dir records its source path, and a
-    * prune keyed on fingerprint alone deleted every OTHER corpus's
-    * live index while its dir stayed memoized in builtMemo (found by
-    * the r7 multi-corpus scale sweep: serving x1 after building x5
-    * read a deleted path). Dirs without a source record (foreign or
-    * half-written) are left alone. Sessions are sequential here
-    * (driver + memory note), so the prune can't race a reader. */
+  /** Force (re)build the index for `d`'s corpus. The dir's lifecycle
+    * (source record, pruning superseded and orphaned siblings) is
+    * [[graft.SourceKey.buildArtifact]]'s; every dir it prunes leaves
+    * [[builtMemo]], so no serve reads a deleted path. */
   def build(s: SparkSession, d: String): String = {
-    val fp = fingerprint(d)
-    val dir = s"$root/$fp"
-    val srcPath = canonicalSource(d)
-    val rootF = new java.io.File(root)
-    if (rootF.isDirectory)
-      rootF.listFiles
-        .filter(x => x.isDirectory && x.getName != fp &&
-          // CURRENT-fingerprint variants (<fp>_forget / <fp>_compact)
-          // survive a same-fingerprint force-rebuild (r13): the
-          // fingerprint pins source content + params, and training is
-          // deterministic, so the rebuild writes bit-identical
-          // artifacts — the variants' adopted hardlinks and derived
-          // tombstones stay exactly valid. Pruning them (the pre-r13
-          // behavior) made every bench session's ann_forget /
-          // ann_index_compact re-prepare from scratch after the
-          // previous session's ann_index_build. Variants of SUPERSEDED
-          // fingerprints still match the source record below and are
-          // pruned as before.
-          !x.getName.startsWith(fp + "_"))
-        .filter { x =>
-          // a concurrently-removed or unreadable meta file must skip
-          // this dir, not fail the whole build (advice r7); records
-          // written before canonicalization still match via their own
-          // canonical form
-          val meta = new java.io.File(x, "_GRAFT_INDEX_SOURCE")
-          try meta.isFile && {
-            val rec = new String(
-              java.nio.file.Files.readAllBytes(meta.toPath), "UTF-8")
-            rec == srcPath ||
-              (try new java.io.File(rec).getCanonicalPath == srcPath
-               catch { case _: java.io.IOException => false })
-          } catch { case _: java.io.IOException => false }
-        }
-        .foreach { x =>
-          builtMemo.remove(x.getAbsolutePath)
-          FileUtils.deleteQuietly(x)
-        }
-    val dirF = new java.io.File(dir)
-    if (dirF.exists()) { builtMemo.remove(dir); FileUtils.deleteQuietly(dirF) }
+    val dir = dirFor(d)
+    builtMemo.remove(dir)
+    graft.SourceKey.buildArtifact(dir, d, "embeddings")(writeIndex(s, d, dir))
+      .foreach(builtMemo.remove)
+    builtMemo.add(dir)
+    dir
+  }
 
-    // (an r10 A/B fanning this scan to core count — the kmeansAssign
-    // remedy — measured NEUTRAL here, 3.30 vs 3.22 s best-of in the
-    // same window: build's cost is its training shuffles and three
-    // artifact writes, not the narrow encode, so the extra vector
-    // exchange buys nothing and the simpler plan stays)
-    val e = Similarity.normalizedEmb(s, d)
+  private def writeIndex(s: SparkSession, d: String, dir: String): Unit = {
+    // the base (trained-on) count is the footer count, so staleness
+    // is a meta-file read, never a count() job
+    trainInto(s, d, dir, Similarity.normalizedEmb(s, d))
+    java.nio.file.Files.writeString(baseMeta(dir),
+      graft.Tables.footerRowCount(s, d, "embeddings").toString): Unit
+    java.nio.file.Files.createFile(marker(dir)): Unit
+  }
+
+  /** Train coarse centroids and the PQ codebook on the normalized
+    * vectors `e` and write the three artifacts of `d`'s index into
+    * `dir`: the core [[build]] and [[buildSubset]] share. */
+  private def trainInto(s: SparkSession, d: String, dir: String, e: DataFrame): Unit = {
     val dim = e.select(size(col("embedding"))).head().getInt(0)
     require(dim % M == 0, s"dim $dim not divisible into $M subspaces")
     val subLen = dim / M
     val cents0 = e.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
     val cb = Similarity.pqCodebook(e, M, subLen, Ksub, lloydIters = 1)
+    // fanning this scan out to core count measured neutral: the cost
+    // is the training shuffles and the three writes, not the encode
     val codes = encodeVectors(e, cents0, cb, subLen)
-    // Artifact file layout is SIZE-AWARE (r8): coarse (n/50 rows) and
-    // codebook (m×ksub = 256 rows) are driver-tiny — one file each,
-    // not 32 near-empty task outputs whose footers every serve pays
-    // to list. codes is one 24-byte-ish row per vector: ~2M rows
-    // (~50 MB) per file keeps a billion-vector table at ~500
-    // well-sized files while a small corpus writes one.
+    // File counts follow the row count: about 2M rows per file, so a
+    // billion-vector codes table writes about 500 files and a small
+    // corpus one. coarse is n/50 rows, so it scales the same way; the
+    // codebook is m×ksub = 256 rows and always one file.
     val nVecs = graft.Tables.footerRowCount(s, d, "embeddings")
     def filesFor(rows: Long): Int =
       math.max(1L, (rows + 1999999L) / 2000000L).toInt
-    // coarse is n/50 rows — it SCALES with the corpus (20M rows at a
-    // billion vectors), so it gets the same ~2M-rows-per-file sizing
-    // as codes, not an unconditional single file (review finding r8);
-    // the codebook alone is truly fixed-size (m×ksub = 256 rows).
     cents0.repartition(filesFor(nVecs / 50)).write
       .mode("overwrite").parquet(s"$dir/coarse")
     cb.coalesce(1).write.mode("overwrite").parquet(s"$dir/codebook")
     codes.repartition(filesFor(nVecs)).write
       .mode("overwrite").parquet(s"$dir/codes")
-    // base (trained-on) count recorded at build time so staleness is a
-    // pure meta-file read — never a count() job (review finding r8)
-    java.nio.file.Files.writeString(baseMeta(dir), nVecs.toString): Unit
-    // srcPath is already canonical (canonicalSource) — read-side
-    // compares canonical-to-canonical
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(dir, "_GRAFT_INDEX_SOURCE"),
-      srcPath.getBytes("UTF-8")): Unit
-    // a full build retrains from the current source: the appended-
-    // fraction staleness counter starts over
-    java.nio.file.Files.deleteIfExists(appendedMeta(dir)): Unit
-    java.nio.file.Files.createFile(marker(dir))
-    builtMemo.add(dir)
-    dir
   }
 
   /** Encode normalized vectors against GIVEN coarse centroids and PQ
@@ -221,10 +165,10 @@ object AnnIndex {
   private def encodeVectors(e: DataFrame, cents: DataFrame, cb: DataFrame,
       subLen: Int): DataFrame = {
     // argmin via min_by over a (cd2, key) struct instead of a
-    // row_number window (r13 optimization, guide §2.3 "aggregate
-    // before you shuffle"): the window SORT-shuffled the full
-    // n×(cells) assignment table (n²/50 rows at corpus scale — the
-    // dominant exchange of every offline build/append); min_by is a
+    // row_number window (OPTIMIZATION_r13.md item 4): the window
+    // SORT-shuffled the full n×(cells) assignment table (n²/50 rows at
+    // corpus scale — the dominant exchange of every offline
+    // build/append); min_by is a
     // hash aggregate with MAP-SIDE partials, so the exchange carries
     // one row per vector. Selection identical by construction: the
     // struct's lexicographic minimum is exactly the window's
@@ -281,16 +225,16 @@ object AnnIndex {
 
   /** True once (appended + deleted)/base exceeds [[StaleFraction]] —
     * the signal to schedule a retraining [[build]] (which resets both
-    * counters). Deletes count toward drift just like appends (r9 —
-    * the VERDICT erasure composition): tombstoned cells keep paying
-    * scan cost for rows that can never serve, and the trained
+    * counters). Deletes count toward drift just like appends:
+    * tombstoned cells keep paying scan cost for rows that can never
+    * serve, and the trained
     * centroids/codebook drift from the SURVIVING distribution exactly
     * as they do when new vectors arrive. The pipeline decides WHEN;
     * serving from a stale index stays correct (codes are exact
     * nearest-code under the stored codebook, tombstones are exact),
     * it is the approximation quality that decays. Pure meta-file
     * reads — the base count is recorded at build time, so no count()
-    * job (review finding r8). */
+    * job. */
   def isStale(s: SparkSession, d: String): Boolean = isStaleAt(dirFor(d))
 
   private[graft] def isStaleAt(dir: String): Boolean = {
@@ -301,27 +245,18 @@ object AnnIndex {
     }
   }
 
-  /** The newest COMPLETE index dir recorded for `d`'s canonical source
-    * path, other than the current-fingerprint dir — the adoption base
-    * when the source table has grown since the last build. */
+  /** The newest COMPLETE index dir recorded for `d`'s source, other
+    * than the current-fingerprint dir: the adoption base when the
+    * source table has grown since the last build. Variants
+    * (`<fingerprint>_<name>`) are never a base: carrying an erasure
+    * variant's tombstones into the main line would erase vectors
+    * nobody asked to forget. */
   private def priorDirFor(d: String): Option[java.io.File] = {
-    val src = canonicalSource(d)
-    val cur = fingerprint(d)
-    val rootF = new java.io.File(root)
-    if (!rootF.isDirectory) return None
-    rootF.listFiles
-      .filter(x => x.isDirectory && x.getName != cur &&
+    val cur = new java.io.File(dirFor(d))
+    Option(cur.getParentFile.listFiles).getOrElse(Array.empty[java.io.File])
+      .filter(x => x.getName != cur.getName && !x.getName.contains('_') &&
         new java.io.File(x, "_GRAFT_INDEX_OK").isFile &&
-        // erasure variants (ann_forget scratch indexes) are never an
-        // adoption base: carrying their tombstones into the main line
-        // would silently erase vectors nobody asked to forget (r9)
-        !new java.io.File(x, "_GRAFT_INDEX_VARIANT").isFile)
-      .filter { x =>
-        val meta = new java.io.File(x, "_GRAFT_INDEX_SOURCE")
-        try meta.isFile && new String(
-          java.nio.file.Files.readAllBytes(meta.toPath), "UTF-8") == src
-        catch { case _: java.io.IOException => false }
-      }
+        graft.SourceKey.recordsSource(x, d, "embeddings"))
       .sortBy(-_.lastModified)
       .headOption
   }
@@ -330,15 +265,13 @@ object AnnIndex {
     * without retraining: HARDLINK every artifact file (copy fallback
     * across filesystems — O(files), never O(bytes), on one volume),
     * carry the base/appended counters, and write the marker LAST so a
-    * killed adoption reads as absent. The prior dir stays intact; the
-    * next retraining [[build]] prunes it by source path as usual. */
+    * killed adoption reads as absent. `dir` must be new or empty. */
   private def adoptArtifacts(prev: java.io.File, dir: String): Unit = {
     val dirF = new java.io.File(dir)
-    FileUtils.deleteQuietly(dirF)
     // `deleted/` tombstones travel with the artifacts: an erasure must
     // survive a fingerprint move (source growth) — a GDPR drop that
     // silently resurrected on the next append would be a compliance
-    // bug, not a cache quirk (r9)
+    // bug, not a cache quirk
     Seq("coarse", "codebook", "codes", "deleted")
       .filter(sub => new java.io.File(prev, sub).isDirectory)
       .foreach(sub =>
@@ -350,11 +283,6 @@ object AnnIndex {
         java.nio.file.Files.copy(f.toPath,
           new java.io.File(dirF, m).toPath): Unit
     }
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(dir, "_GRAFT_INDEX_SOURCE"),
-      new String(java.nio.file.Files.readAllBytes(
-        new java.io.File(prev, "_GRAFT_INDEX_SOURCE").toPath), "UTF-8")
-        .getBytes("UTF-8")): Unit
     java.nio.file.Files.createFile(marker(dir)): Unit
   }
 
@@ -363,11 +291,10 @@ object AnnIndex {
     * build-path expression) against the STORED centroids and codebook
     * into their cells, landed as additional code files. Nothing is
     * retrained, so appending N vectors costs O(N · (cells + m·ksub))
-    * — the per-corpus-version force-rebuild (the r7 2.5× weak entry)
-    * becomes amortized cost: rebuilds happen only when the appended
-    * fraction passes [[StaleFraction]].
+    * instead of a per-corpus-version rebuild: rebuilds happen only
+    * when the appended fraction passes [[StaleFraction]].
     *
-    * The PRODUCTION shape (review finding r8): new vectors land in the
+    * The PRODUCTION shape: new vectors land in the
     * source table (so the exact-rerank id-lookups can see them), which
     * MOVES the content fingerprint — append therefore ADOPTS the prior
     * same-source index's artifacts into the new fingerprint dir
@@ -381,12 +308,16 @@ object AnnIndex {
     *
     * Idempotent: re-submitting a batch (retry after a crash mid-append,
     * or an at-least-once upstream) never lands duplicate code rows —
-    * the batch anti-joins the stored vec_ids first (advice r8). */
+    * the batch anti-joins the stored vec_ids first. */
   def append(s: SparkSession, d: String, batch: DataFrame): String = {
     val dir = dirFor(d)
     if (!java.nio.file.Files.exists(marker(dir))) {
       priorDirFor(d) match {
-        case Some(prev) => adoptArtifacts(prev, dir)
+        // the adoption is a build of `dir`: the prior dir is pruned
+        // as superseded once its artifacts are linked
+        case Some(prev) =>
+          graft.SourceKey.buildArtifact(dir, d, "embeddings")(adoptArtifacts(prev, dir))
+            .foreach(builtMemo.remove)
         case None => return build(s, d) // fresh build = batch included
       }
     }
@@ -403,7 +334,7 @@ object AnnIndex {
     val cents = s.read.parquet(s"$dir/coarse")
     val cb = s.read.parquet(s"$dir/codebook")
     val subLen = subLenAt(s, dir)
-    // Idempotency (advice r8): a retried append — a crash between the
+    // Idempotency: a retried append — a crash between the
     // non-atomic codes write and the counter update, or a caller
     // re-submitting a batch that already landed — must not duplicate
     // (vec_id, codes) rows: duplicated candidates would occupy multiple
@@ -421,7 +352,7 @@ object AnnIndex {
     if (n == 0) return 0L
     val e = Similarity.normalizeVecs(fresh)
     // batch-sized file count — an append must not litter codes/ with
-    // shuffle.partitions near-empty files per call (review finding r8)
+    // shuffle.partitions near-empty files per call
     val nFiles = math.max(1L, (n + 1999999L) / 2000000L).toInt
     encodeVectors(e, cents, cb, subLen).repartition(nFiles)
       .write.mode("append").parquet(s"$dir/codes")
@@ -434,7 +365,7 @@ object AnnIndex {
   }
 
   /** Right-to-erasure eviction — the derived-artifact leg of the
-    * etl_forget cascade (r9): tombstone `ids` in the stored index so
+    * etl_forget cascade: tombstone `ids` in the stored index so
     * every serving entry point (pq / ivfpq / rerank / batch k-NN join
     * — all read codes through [[codesAt]]) provably excludes them,
     * effective immediately and surviving fingerprint moves
@@ -480,22 +411,21 @@ object AnnIndex {
 
   /** A scratch COPY of `d`'s index under `<fingerprint>_<name>`,
     * recreated fresh per call (hardlink adoption — O(files), no
-    * retraining, no byte copies on one volume) and marked
-    * `_GRAFT_INDEX_VARIANT` so [[priorDirFor]] never adopts it into
-    * the main line. The isolation layer for [[forgetAudit]]: the gated
-    * erasure audit must not mutate the shared index the other gated
-    * queries serve from. build()'s source-keyed prune removes variants
-    * alongside their superseded mainline dirs. */
+    * retraining, no byte copies on one volume), which [[priorDirFor]]
+    * never adopts into the main line. The isolation layer for
+    * [[forgetAudit]]: the gated erasure audit must not mutate the
+    * shared index the other gated queries serve from. A variant lives
+    * and is pruned with its fingerprint dir
+    * ([[graft.SourceKey.buildArtifact]]). */
   private[graft] def variant(s: SparkSession, d: String, name: String): String = {
     val main = ensure(s, d)
     val vdir = s"${main}_$name"
+    FileUtils.deleteQuietly(new java.io.File(vdir))
     adoptArtifacts(new java.io.File(main), vdir)
-    java.nio.file.Files.createFile(
-      java.nio.file.Paths.get(vdir, "_GRAFT_INDEX_VARIANT")): Unit
     vdir
   }
 
-  /** MEMOIZED variant preparation (r10, verdict item 3): the audit
+  /** MEMOIZED variant preparation: the audit
     * variants' mutation sequences are DETERMINISTIC given the source
     * fingerprint (forget: residue derived from the stored index's
     * top-1; compact: a fixed residue class), so rebuilding the scratch
@@ -506,19 +436,16 @@ object AnnIndex {
     * computed during prep (erased/surviving counts) replay without
     * re-mutating. Crash-safe the marker way: READY is written LAST, a
     * kill mid-prep reads as "variant absent" and the next call
-    * re-adopts fresh (adoptArtifacts deletes partial state first). A
-    * source regeneration moves the fingerprint, hence the variant key
-    * — stale variants are pruned by build()'s source-keyed prune. */
+    * re-adopts fresh (partial state is deleted first). A source
+    * regeneration moves the fingerprint, hence the variant key; a
+    * stale variant is pruned with its fingerprint dir. */
   private[graft] def preparedVariant(s: SparkSession, d: String, name: String)(
       prep: String => String): (String, String) = {
-    val main = ensure(s, d)
-    val vdir = s"${main}_$name"
+    val vdir = s"${ensure(s, d)}_$name"
     val ready = java.nio.file.Paths.get(vdir, "_GRAFT_VARIANT_READY")
     if (java.nio.file.Files.exists(ready))
       return (vdir, java.nio.file.Files.readString(ready))
-    adoptArtifacts(new java.io.File(main), vdir)
-    java.nio.file.Files.createFile(
-      java.nio.file.Paths.get(vdir, "_GRAFT_INDEX_VARIANT")): Unit
+    variant(s, d, name)
     val meta = prep(vdir)
     // tmp + ATOMIC_MOVE (the writeManifest discipline): the marker's
     // EXISTENCE is the commit gate, so a torn write would wedge every
@@ -530,7 +457,7 @@ object AnnIndex {
     (vdir, meta)
   }
 
-  /** `ann_forget` — the erasure audit (VERDICT r8 #3): compose
+  /** `ann_forget` — the erasure audit: compose
     * etl_forget's right-to-erasure semantics with the persisted ANN
     * index. The erasure set is a 10% bulk GDPR drop chosen to
     * PROVABLY displace served results: every vec_id sharing the
@@ -686,7 +613,7 @@ object AnnIndex {
   def compactAudit(s: SparkSession, d: String, queryId: Long = Similarity.AuditQueryId): DataFrame = {
     // memoized: the tombstone + rewrite sequence is deterministic per
     // fingerprint; the audit counters computed during prep replay from
-    // the READY marker on later invocations (verdict r9 item 3)
+    // the READY marker on later invocations
     val (vdir, meta) = preparedVariant(s, d, "compact") { vd =>
       val erased = deleteAt(s, vd, graft.Tables.embeddings(s, d)
         .select(col("vec_id")).filter(col("vec_id") % 10 === 3))
@@ -753,7 +680,7 @@ object AnnIndex {
   def recallAudit(s: SparkSession, d: String,
       queryId: Long = Similarity.AuditQueryId,
       k: Int = Similarity.AuditK): DataFrame =
-    // BOTH legs honor k (review finding): the exact truth, the served
+    // BOTH legs honor k: the exact truth, the served
     // set, and the recall_at denominator must describe the same depth
     Similarity.gradeAgainstExact(
       Similarity.bruteForce(s, d, queryId, k),
@@ -780,7 +707,7 @@ object AnnIndex {
     codesAt(s, ensure(s, d))
 
   // dir-addressed artifact readers: the serving stages are shared
-  // between the MAIN fingerprint dir and erasure variants (r9), so
+  // between the MAIN fingerprint dir and erasure variants, so
   // every reader takes the resolved dir, and the `d`-keyed wrappers
   // above stay the public convenience.
   private def coarseAt(s: SparkSession, dir: String): DataFrame =
@@ -863,7 +790,7 @@ object AnnIndex {
       k: Int = 10): DataFrame =
     ivfpqQueryAt(s, d, ensure(s, d), queryId, k)
 
-  /** `idFilter` (r9): an optional (vec_id) frame intersected with the
+  /** `idFilter`: an optional (vec_id) frame intersected with the
     * probed-cell candidates BEFORE the ADC ranking — the filtered-
     * search serving shape (FAISS IDSelector): every one of the top-k
     * slots is spent on a predicate-matching vector, instead of
@@ -915,7 +842,7 @@ object AnnIndex {
       ivfpqQueryAt(s, d, dir, queryId, k = c).select(col("vec_id")))
 
   /** `ann_index_filtered` — metadata-filtered search SERVED from the
-    * persisted index (r9): `ann_filtered`'s predicate (label % 2 = 0)
+    * persisted index: `ann_filtered`'s predicate (label % 2 = 0)
     * answered by the production path instead of an exact corpus scan —
     * the single hottest vector-DB feature (every RAG query carries a
     * tenant/source/date predicate). The predicate restricts the
@@ -970,9 +897,9 @@ object AnnIndex {
   /** `ann_index_knn_join` — batch k-NN join SERVED from the persisted
     * IVF-PQ index: the query-SET counterpart of [[ivfpqRerankQuery]],
     * and the entry point every embedding-join/RAG pipeline actually
-    * hits (N queries at once, not one). Until r9 the only batch path
-    * was `ann_topk_join`'s block-partitioned brute-force — O(N·corpus)
-    * exact distances; this plan serves the same answer shape from the
+    * hits (N queries at once, not one). `ann_topk_join`'s
+    * block-partitioned brute force costs O(N·corpus) exact
+    * distances; this plan serves the same answer shape from the
     * stored artifacts at O(N·(cells + m·ksub)) table math plus codes
     * in probed cells only.
     *
@@ -1150,8 +1077,7 @@ object AnnIndex {
     // en/cents0 + the full codebook-training chain are the SHARED
     // fragments (Similarity.PqTrainCtes): one definition with the
     // pq/ivfpq oracles, so a constant or quantisation change cannot
-    // silently desynchronize this oracle from theirs (review finding
-    // r7 — previously a verbatim copy with a hardcoded subLen)
+    // silently desynchronize this oracle from theirs
     s"WITH $PqEnCte,\n$PqCents0Cte,\n" +
     s"""assigned AS (
        |  SELECT vec_id, c_id AS cell FROM (
@@ -1195,23 +1121,8 @@ object AnnIndex {
   private[graft] def buildSubset(s: SparkSession, d: String, dir: String,
       basePred: org.apache.spark.sql.Column): Unit = {
     val e = Similarity.normalizedEmb(s, d).filter(basePred)
-    val dim = e.select(size(col("embedding"))).head().getInt(0)
-    require(dim % M == 0, s"dim $dim not divisible into $M subspaces")
-    val subLen = dim / M
-    val cents0 = e.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
-    val cb = Similarity.pqCodebook(e, M, subLen, Ksub, lloydIters = 1)
-    val codes = encodeVectors(e, cents0, cb, subLen)
-    val nVecs = graft.Tables.footerRowCount(s, d, "embeddings") // sizing only
-    def filesFor(rows: Long): Int =
-      math.max(1L, (rows + 1999999L) / 2000000L).toInt
-    cents0.repartition(filesFor(nVecs / 50)).write
-      .mode("overwrite").parquet(s"$dir/coarse")
-    cb.coalesce(1).write.mode("overwrite").parquet(s"$dir/codebook")
-    codes.repartition(filesFor(nVecs)).write
-      .mode("overwrite").parquet(s"$dir/codes")
-    java.nio.file.Files.writeString(baseMeta(dir),
-      e.count().toString): Unit
+    trainInto(s, d, dir, e)
+    java.nio.file.Files.writeString(baseMeta(dir), e.count().toString): Unit
   }
 
   /** Build-base + append-batch, memoized per process: the incremental
@@ -1232,7 +1143,7 @@ object AnnIndex {
   }
 
   /** `ann_index_append_build` — incremental index maintenance GATED
-    * end-to-end (r12 verdict item 3): `ann_index_build` retrains and
+    * end-to-end: `ann_index_build` retrains and
     * re-encodes the whole corpus (the ×100 sweep's linear-by-contract
     * entry); here the corpus arrives in two installments — a base
     * build trains coarse centroids + PQ codebook and encodes ~90%,

@@ -598,77 +598,6 @@ object Dedup {
     labels
   }
 
-  /** Connected components via alternating large-star / small-star
-    * contractions (Kiveris et al., "Connected Components in MapReduce
-    * and Beyond") — same contract as [[connectedComponents]], but
-    * rounds are O(log n) in the worst case instead of O(diameter), so
-    * adversarially long chains converge in a handful of passes. Each
-    * round is two groupBy+join passes over the (shrinking) edge list.
-    *
-    *  - large-star(u): every neighbor v > u re-attaches to
-    *    m = min(Γ(u) ∪ u)
-    *  - small-star(u): every neighbor v ≤ u re-attaches to m
-    *
-    * The fixpoint is a forest of stars: every node adjacent to its
-    * component's minimum; labels read off as min(neighbor ∪ self).
-    */
-  def connectedComponentsLogStar(pairs: DataFrame): DataFrame = {
-    val Array(cu, cv) = pairs.columns
-    def canon(e: DataFrame): DataFrame =
-      e.select(least(col("u"), col("v")).as("u"),
-        greatest(col("u"), col("v")).as("v"))
-        .filter(col("u") =!= col("v")).distinct()
-    val nodes = graft.Checkpoints.pin(
-      pairs.select(col(cu).as("node"))
-        .union(pairs.select(col(cv).as("node"))).distinct())
-    var (edges, releasePrev) = graft.Checkpoints.tracked(
-      canon(pairs.select(col(cu).as("u"), col(cv).as("v"))))
-    var done = edges.isEmpty
-    var rounds = 0
-    while (!done && rounds < 50) {
-      def star(e: DataFrame, large: Boolean): DataFrame = {
-        val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
-        val mins = sym.groupBy(col("u")).agg(min(col("v")).as("mn"))
-          .select(col("u"), least(col("u"), col("mn")).as("m"))
-        val joined = sym.join(mins, "u")
-        val moved =
-          if (large) joined.filter(col("v") > col("u"))
-            .select(col("v").as("u"), col("m").as("v"))
-          else
-            // small-star re-attaches u's ≤-neighbors AND u ITSELF to m
-            // (without the self pair, a node's only link to the min —
-            // e.g. the single edge (1,5) — would vanish as the (m,m)
-            // self-loop)
-            joined.filter(col("v") <= col("u"))
-              .select(col("v").as("u"), col("m").as("v"))
-              .union(mins.select(col("u"), col("m").as("v")))
-        canon(moved)
-      }
-      val (next, rel) = graft.Checkpoints.tracked(
-        star(star(edges, large = true), large = false))
-      // convergence check still reads the OLD edge set: release it
-      // only after both excepts have executed
-      done = next.except(edges).isEmpty && edges.except(next).isEmpty
-      releasePrev()
-      edges = next
-      releasePrev = rel
-      rounds += 1
-    }
-    // the label read-off below is only valid at a star-forest fixpoint
-    // — a capped-out non-converged edge set must fail loudly, not
-    // return silently split components
-    if (!done)
-      throw new IllegalStateException(
-        s"logStar did not converge within $rounds rounds")
-    // star fixpoint: label = min(adjacent ∪ self)
-    val sym = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
-    val lbl = sym.groupBy(col("u")).agg(min(col("v")).as("mn"))
-      .select(col("u").as("node"), least(col("u"), col("mn")).as("label"))
-    nodes.join(lbl, Seq("node"), "left")
-      .select(col("node"), coalesce(col("label"), col("node")).as("label"))
-  }
-
-  /** Oracle: transitive closure by recursive CTE, min reachable label. */
   /** The recursive component-closure CTE chain, shared by
     * [[clustersSql]] and [[dedupCorpusNearSql]] (one definition — the
     * ShPairsCte discipline). */
@@ -967,8 +896,7 @@ object Dedup {
     * dense-bitset all-pairs strategy (exact by enumeration); past the
     * bitset caps, minhash-banded candidates (self-tuned rows per band)
     * feed the exact confirm — the scale path the ×5 sweep mandated:
-    * the PPJoin prefix join ([[prefixPairsAbove]], kept for A/B) is
-    * defeated by adversarial tiny-vocab corpora (every prefix shingle
+    * a PPJoin prefix join is defeated by adversarial tiny-vocab corpora (every prefix shingle
     * hot → tens of millions of candidates, killed at 13 min at ×5 —
     * SURVEY §6), while banded candidates shuffle only signatures and
     * id pairs regardless of vocabulary shape. Confirmed values are
@@ -1024,49 +952,6 @@ object Dedup {
       }
       confirmed
     }
-  }
-
-  /** PPJoin-style prefix-filtered exact similarity join — the scale
-    * path past the bitset caps: two sets with Jaccard ≥ t MUST share an
-    * element within their (|S| - ⌈t·|S|⌉ + 1)-element prefixes under
-    * ANY global shingle order, so ordering by ascending document
-    * frequency (rarest first) and equi-joining ONLY prefix shingles
-    * prunes the candidate space to near-misses; a length filter
-    * (t·|B| ≤ |A|) removes size-incompatible pairs before the exact
-    * confirm. Identical output to filtering the all-pairs join at t.
-    */
-  private[graft] def prefixPairsAbove(s: SparkSession, d: String, t: Double): DataFrame =
-    prefixPairsAboveSh(shingles(s, d), t)
-
-  private def prefixPairsAboveSh(sh: DataFrame, t: Double): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val freq = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("df"), col("sh"))
-    val szW = Window.partitionBy(col("doc_id"))
-    // ceil(t·sz) computed with an epsilon: double rounding can push
-    // t·sz a hair ABOVE the exact rational (e.g. t=0.07, sz=100 →
-    // 7.000000000000001, ceil 8 not 7), which would shorten the prefix
-    // / tighten the length filter and silently DROP boundary pairs.
-    // The epsilon can only lengthen a prefix (extra candidates), and
-    // the exact confirm + threshold filter restores precision.
-    def ceilT(sz: org.apache.spark.sql.Column) =
-      ceil(lit(t) * sz - lit(1e-9))
-    val prefix = sh.join(freq, "sh")
-      .withColumn("pos", row_number().over(w))
-      .withColumn("sz", count(lit(1)).over(szW))
-      .filter(col("pos") <= col("sz") - ceilT(col("sz")) + 1)
-      .select(col("doc_id"), col("sh"), col("sz"))
-    val cands = prefix.as("x")
-      .join(prefix.as("y"),
-        col("x.sh") === col("y.sh") &&
-          col("x.doc_id") < col("y.doc_id") &&
-          // length filter: Jaccard ≥ t needs t·max(|A|,|B|) ≤ min(|A|,|B|)
-          col("x.sz") >= ceilT(col("y.sz")) &&
-          col("y.sz") >= ceilT(col("x.sz")))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .distinct()
-      .transform(df => graft.Checkpoints.pin(df))
-    exactConfirm(cands, sh).filter(col("jaccard") >= t)
   }
 
   /** SimHash fingerprints with 4×16-bit blocking bands (relies on the
@@ -1157,28 +1042,6 @@ object Dedup {
        |  CAST((((ufp // 281474976710656) % 65536) * 281474976710656)
        |    - $signFix AS BIGINT) AS band3
        |FROM fp ORDER BY doc_id""".stripMargin
-  }
-
-  /** SimHash near-dup pairs: block on any equal 16-bit band, confirm
-    * with full Hamming distance <= maxHamming. */
-  def simhashPairs(s: SparkSession, d: String, maxHamming: Int = 16): DataFrame = {
-    val fp = documents(s, d)
-      .select(col("doc_id"), simhash64(words(col("text"))).as("simhash"))
-    val banded = fp.select(col("doc_id"), col("simhash"),
-      posexplode(transform(sequence(lit(0), lit(3)),
-        b => call_function("shiftright", col("simhash"), b * 16)
-          .bitwiseAND(lit(0xffffL)))))
-      .withColumnsRenamed(Map("pos" -> "band", "col" -> "band_key"))
-    banded.as("x")
-      .join(banded.as("y"),
-        col("x.band") === col("y.band") &&
-          col("x.band_key") === col("y.band_key") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        hamming64(col("x.simhash"), col("y.simhash")).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-      .orderBy(col("hamming"), col("doc_a"), col("doc_b"))
   }
 
   /** splitmix64-derived deterministic hyperplanes — full avalanche, so

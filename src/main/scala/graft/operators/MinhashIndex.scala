@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persisted minhash band index — the DEDUP twin of [[AnnIndex]]
-  * (SURVEY §2.3 `dedup_minhash_index`, r9): near-duplicate detection
+  * (SURVEY §2.3 `dedup_minhash_index`): near-duplicate detection
   * of an ARRIVING batch against a stored corpus without recomputing
   * the corpus's signatures per ingest.
   *
@@ -19,13 +19,14 @@ import org.apache.spark.sql.functions._
   * across the dedup family). Nothing corpus-sized is recomputed; the
   * band join shuffles (band, band_key, doc_id) triples only.
   *
-  * Keying follows the AnnIndex discipline: the index dir is named by
-  * a fingerprint of the source parquet + banding params + format
-  * version, the completion marker is written LAST, and a testdata
-  * regeneration re-keys (never serves stale). [[append]] extends the
-  * stored table with a new batch's bands (idempotent — anti-joined on
-  * doc_id), which is what an accepting ingest does after the near-dup
-  * gate passes.
+  * Keying follows the AnnIndex discipline: the index dir is the
+  * [[graft.SourceKey.artifactDir]] of the source parquet + banding
+  * params + format version, built and pruned by
+  * [[graft.SourceKey.buildArtifact]], the completion marker is written
+  * LAST, and a testdata regeneration re-keys (never serves stale).
+  * [[append]] extends the stored table with a new batch's bands
+  * (idempotent — anti-joined on doc_id), which is what an accepting
+  * ingest does after the near-dup gate passes.
   *
   * The gated query ([[incrementalNearDups]]) splits the corpus
   * deterministically — doc_id ≡ 0 mod 4 is "the arriving batch", the
@@ -39,16 +40,14 @@ import org.apache.spark.sql.functions._
   */
 object MinhashIndex {
   private val FormatVersion = 1
-
-  private def root: String =
-    sys.props.getOrElse("graft.minhashIndexDir",
-      new java.io.File("target/minhash_index").getAbsolutePath)
+  private def params(numHashes: Int, bandRows: Int) =
+    s"v$FormatVersion:nh=$numHashes:r=$bandRows"
 
   /** Index dir name: the [[graft.SourceKey.digest]] of the documents
     * table + banding params. */
   private[graft] def fingerprint(d: String, numHashes: Int,
       bandRows: Int): String =
-    graft.SourceKey.digest(d, "documents", s"v$FormatVersion:nh=$numHashes:r=$bandRows")
+    graft.SourceKey.digest(d, "documents", params(numHashes, bandRows))
 
   private def marker(dir: String) = java.nio.file.Paths.get(dir, "_GRAFT_MH_OK")
   private val builtMemo = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
@@ -67,20 +66,20 @@ object MinhashIndex {
     * per corpus version ([[builtMemo]] + marker). */
   def ensure(s: SparkSession, d: String): String = {
     val (nh, r) = geometry(s, d)
-    val dir = s"$root/${fingerprint(d, nh, r)}"
+    val dir = graft.SourceKey.artifactDir("minhash_index", d, "documents", params(nh, r))
     if (builtMemo.contains(dir)) return dir
-    if (!java.nio.file.Files.exists(marker(dir))) {
-      FileUtils.deleteQuietly(new java.io.File(dir))
-      val storedSh = Dedup.shingles(s, d).filter(col("doc_id") % 4 =!= 0)
-      Dedup.bandedSigs(storedSh, nh, r)
-        // bands rows ≈ nBands per doc — small fixed width; one file
-        // per ~2M rows, the AnnIndex artifact-sizing rule
-        .repartition(math.max(1L,
-          (graft.Tables.footerRowCount(s, d, "documents") * (nh / r) + 1999999L)
-            / 2000000L).toInt)
-        .write.mode("overwrite").parquet(s"$dir/bands")
-      java.nio.file.Files.createFile(marker(dir))
-    }
+    if (!java.nio.file.Files.exists(marker(dir)))
+      graft.SourceKey.buildArtifact(dir, d, "documents") {
+        val storedSh = Dedup.shingles(s, d).filter(col("doc_id") % 4 =!= 0)
+        Dedup.bandedSigs(storedSh, nh, r)
+          // bands rows ≈ nBands per doc — small fixed width; one file
+          // per ~2M rows, the AnnIndex artifact-sizing rule
+          .repartition(math.max(1L,
+            (graft.Tables.footerRowCount(s, d, "documents") * (nh / r) + 1999999L)
+              / 2000000L).toInt)
+          .write.mode("overwrite").parquet(s"$dir/bands")
+        java.nio.file.Files.createFile(marker(dir)): Unit
+      }.foreach(builtMemo.remove)
     builtMemo.add(dir)
     dir
   }
@@ -104,19 +103,19 @@ object MinhashIndex {
     val (nh, r) = geometry(s, d)
     val dir = ensure(s, d)
     // Idempotence keys on bands ∪ seen; DURABILITY orders bands FIRST,
-    // published atomically (review r12 — the r11 seen-first ordering
-    // could crash between the two writes and permanently leave docs
-    // "seen" but unindexed, silently losing near-dup recall with no
-    // repair path). The protocol: stage the batch's band rows under
-    // staging/, publish them with ONE atomic directory rename into
-    // bands/batch-<uuid>/, THEN append `seen`. Every crash window now
+    // published atomically: a seen-first ordering could crash between
+    // the two writes and permanently leave docs "seen" but unindexed,
+    // silently losing near-dup recall with no repair path. The
+    // protocol: stage the batch's band rows under staging/, publish
+    // them with ONE atomic directory rename into bands/batch-<uuid>/,
+    // THEN append `seen`. Every crash window now
     // heals on retry: (a) crash before the rename → the docs are in
     // neither table, the retry reprocesses them fully and the orphan
     // staging dir is swept below; (b) crash after the rename, before
     // `seen` → shingled docs are in bands, so the anti-join excludes
     // them (no duplicate band rows), and the shingle-less remainder —
     // which never lands a band row and is exactly why `seen` exists
-    // (review r11) — is retried into `seen` with an empty band batch.
+    // — is retried into `seen` with an empty band batch.
     // Single writer assumed (an ingest), as the seen append already
     // requires.
     val seenPath = s"$dir/seen"
@@ -169,14 +168,14 @@ object MinhashIndex {
       threshold: Double = 0.5): DataFrame = {
     val (nh, r) = geometry(s, d)
     val dir = ensure(s, d)
-    // NOT pinned: an r13 ABBA measured eager materialization of the
-    // shingle table a REGRESSION here (2.42/2.64 -> 4.06/2.96 s, CPU
-    // doubled) — the probe's %4 batch filter stops pushing to the
-    // documents scan once the plan reads checkpointed blocks
+    // NOT pinned: eager materialization of the shingle table measured
+    // a regression here (2.42/2.64 -> 4.06/2.96 s, CPU doubled;
+    // OPTIMIZATION_r13.md) — the probe's %4 batch filter stops pushing
+    // to the documents scan once the plan reads checkpointed blocks
     val shAll = Dedup.shingles(s, d)
     val batchBands = Dedup.bandedSigs(
       shAll.filter(col("doc_id") % 4 === 0), nh, r)
-    // structural guard, not an assumption (review r11): a dir mutated
+    // structural guard, not an assumption: a dir mutated
     // by append() may carry batch-split rows; restricting the stored
     // side to the stored slice keeps the probe's exactly-one-side-in-
     // batch contract (the oracle's CASE split) whatever the dir holds

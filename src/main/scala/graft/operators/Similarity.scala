@@ -738,10 +738,6 @@ object Similarity {
       (for (p <- 0 until nPlanes; r <- p + 1 until nPlanes)
         yield (1 << p) | (1 << r))
 
-  /** Alias of [[dotSqlOf]] kept for the LSH oracle's callers — ONE
-    * definition of the fold (review r11: this was a verbatim copy). */
-  private[operators] def dotOf(a: String, b: String): String = dotSqlOf(a, b)
-
   /** The LSH plan as DuckDB SQL: the deterministic hyperplanes are
     * embedded as exact double literals (Double.toString round-trips),
     * so bucket signs — and hence the candidate set, the cosines and
@@ -751,7 +747,7 @@ object Similarity {
     def planeList(p: Int): String =
       plane(p, dim).map(_.toString).mkString("[", ", ", "]")
     val bucketExpr = (0 until nPlanes).map { p =>
-      s"(CASE WHEN ${dotOf("embedding", planeList(p))} >= 0 THEN ${1 << p} ELSE 0 END)"
+      s"(CASE WHEN ${dotSqlOf("embedding", planeList(p))} >= 0 THEN ${1 << p} ELSE 0 END)"
     }.mkString("\n  + ")
     val masks = probeMasks(nPlanes).mkString("[", ", ", "]")
     s"""WITH b AS (SELECT vec_id, embedding, $bucketExpr AS bucket FROM embeddings),
@@ -1140,7 +1136,7 @@ object Similarity {
     s"""en AS (
        |  SELECT vec_id,
        |    list_transform(embedding, x -> CAST(CAST(x AS DOUBLE)
-       |      / SQRT(GREATEST(${dotOf("embedding", "embedding")}, 1e-30)) AS FLOAT)) AS embedding
+       |      / SQRT(GREATEST(${dotSqlOf("embedding", "embedding")}, 1e-30)) AS FLOAT)) AS embedding
        |  FROM embeddings)""".stripMargin
 
   private[operators] val PqCents0Cte: String =
@@ -1632,21 +1628,22 @@ object Similarity {
   /** ×`r` amplified embeddings corpus in a scratch table (vec_id +
     * o·1e8 per replica o, vectors copied verbatim) — the gated-SF
     * stand-in for a past-cap corpus, built once per source content
-    * (its dir is a [[graft.SourceKey.digest]]) so repeat invocations
-    * read, not rewrite. */
+    * (its dir is a [[graft.SourceKey.artifactDir]]) so repeat
+    * invocations read, not rewrite. */
   private[graft] def ampEmbeddings(s: SparkSession, d: String, r: Int): String = {
-    val dir = new java.io.File(
-      s"target/graft_amp/${graft.SourceKey.digest(d, "embeddings", s"x$r")}")
-    val table = new java.io.File(dir, "embeddings.parquet")
+    val dir = graft.SourceKey.artifactDir("graft_amp", d, "embeddings", s"x$r")
+    val table = s"$dir/embeddings.parquet"
     if (!new java.io.File(table, "_SUCCESS").isFile)
-      graft.Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-        .select(explode(sequence(lit(0L), lit(r - 1L))).as("o"),
-          col("vec_id"), col("embedding"))
-        .select((col("vec_id") + col("o") * 100000000L).as("vec_id"),
-          col("embedding"))
-        .coalesce(4)
-        .write.mode("overwrite").parquet(table.getAbsolutePath)
-    dir.getAbsolutePath
+      graft.SourceKey.buildArtifact(dir, d, "embeddings") {
+        graft.Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
+          .select(explode(sequence(lit(0L), lit(r - 1L))).as("o"),
+            col("vec_id"), col("embedding"))
+          .select((col("vec_id") + col("o") * 100000000L).as("vec_id"),
+            col("embedding"))
+          .coalesce(4)
+          .write.mode("overwrite").parquet(table)
+      }: Unit
+    dir
   }
 
   /** `dedup_semantic_banded` — the past-cap PRODUCTION path of

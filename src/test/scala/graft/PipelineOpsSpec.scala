@@ -30,20 +30,6 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(ham > 0 && ham <= 24, s"hamming=$ham should be small for near-dup")
   }
 
-  test("simhashPairs finds planted near-duplicates via banding") {
-    import spark.implicits._
-    val tmp = tempDir("simhash").toString
-    val words = (1 to 80).map(i => s"w$i")
-    val near = words.updated(3, "x")
-    val far = (1 to 80).map(i => s"z$i")
-    Seq((1L, words.mkString(" ")), (2L, near.mkString(" ")), (3L, far.mkString(" ")))
-      .toDF("doc_id", "text").write.mode("overwrite")
-      .parquet(s"$tmp/documents.parquet")
-    val pairs = Dedup.simhashPairs(spark, tmp, maxHamming = 16).collect()
-    assert(pairs.exists(r => r.getLong(0) == 1L && r.getLong(1) == 2L))
-    assert(!pairs.exists(r => r.getLong(1) == 3L || r.getLong(0) == 3L))
-  }
-
   test("minhash LSH recovers the highest-jaccard pairs that brute force finds") {
     val brute = Dedup.ngramJaccard(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))

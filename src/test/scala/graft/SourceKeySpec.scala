@@ -11,7 +11,10 @@ import scala.jdk.CollectionConverters._
   * base-table footer memo behind [[Tables.t]] and
   * [[Tables.footerRowCount]], and the PQ codebook's subvector-length
   * memo (`AnnIndex.subLenAt`). A regenerated source must move the key,
-  * so every memo misses instead of serving stale state. */
+  * so every memo misses instead of serving stale state. Also the
+  * lifecycle of the persisted artifact dirs named by the key: one dir
+  * per (kind, source), orphans and record-less dirs pruned once 3 h
+  * old, variants kept with their digest. */
 class SourceKeySpec extends AnyFunSuite {
   import SparkTestSession._
 
@@ -115,5 +118,86 @@ class SourceKeySpec extends AnyFunSuite {
 
     writeCodebook(8)
     assert(operators.AnnIndex.subLenAt(spark, dir) == 8)
+  }
+
+  private val hours4 = 4L * 3600 * 1000
+
+  /** A temp corpus holding copies of sf's `tables`. */
+  private def corpus(tables: String*): String = {
+    val d = tmpDir()
+    tables.foreach(t => Files.copy(new File(s"$sf/$t.parquet").toPath, d.resolve(s"$t.parquet")))
+    d.toString
+  }
+
+  private def backdate(dir: String, byMs: Long): Unit =
+    assert(new File(dir).setLastModified(System.currentTimeMillis() - byMs))
+
+  test("regenerating a source three times leaves one artifact dir per kind") {
+    val d = corpus("embeddings", "documents")
+    def kinds: Seq[(String, String)] = Seq(
+      "embeddings" -> operators.AnnIndex.build(spark, d),
+      "documents" -> operators.MinhashIndex.ensure(spark, d),
+      "embeddings" -> operators.Similarity.ampEmbeddings(spark, d, 2))
+    for (round <- 1 to 3) {
+      for (t <- Seq("embeddings", "documents")) {
+        val f = new File(d, s"$t.parquet")
+        assert(f.setLastModified(f.lastModified + 60000)) // a regeneration
+      }
+      for ((table, dir) <- kinds) {
+        val same = new File(dir).getParentFile.listFiles
+          .filter(x => x.isDirectory && SourceKey.recordsSource(x, d, table))
+        assert(same.map(_.getPath).toSeq == Seq(dir),
+          s"round $round: one dir per (kind, source), found ${same.mkString(", ")}")
+      }
+    }
+  }
+
+  test("an orphaned artifact dir untouched for 3 h is pruned by the next build") {
+    val gone = corpus("embeddings")
+    val orphan = operators.Similarity.ampEmbeddings(spark, gone, 2)
+    FileUtils.deleteDirectory(new File(gone))
+    backdate(orphan, hours4)
+    operators.Similarity.ampEmbeddings(spark, corpus("embeddings"), 2)
+    assert(!new File(orphan).exists, "an orphan older than 3 h must be pruned")
+  }
+
+  test("an orphaned artifact dir touched a minute ago survives the prune") {
+    val gone = corpus("embeddings")
+    val orphan = operators.Similarity.ampEmbeddings(spark, gone, 2)
+    FileUtils.deleteDirectory(new File(gone))
+    backdate(orphan, 60000)
+    val old = corpus("embeddings")
+    val aged = operators.Similarity.ampEmbeddings(spark, old, 2)
+    FileUtils.deleteDirectory(new File(old))
+    backdate(aged, hours4)
+    operators.Similarity.ampEmbeddings(spark, corpus("embeddings"), 2)
+    assert(new File(orphan).isDirectory, "an orphan touched within 3 h may be live")
+    assert(!new File(aged).exists, "the same prune removes the orphan older than 3 h")
+    FileUtils.deleteQuietly(new File(orphan))
+  }
+
+  test("an artifact dir with no source record is pruned once untouched for 3 h") {
+    val amp = new File(SourceKey.artifactDir("graft_amp", sf, "embeddings", "x2")).getParentFile
+    val planted = new File(amp, "00000000deadbeef")
+    assert(new File(planted, "embeddings.parquet").mkdirs())
+    backdate(planted.getPath, hours4)
+    operators.Similarity.ampEmbeddings(spark, corpus("embeddings"), 2)
+    assert(!planted.exists, "a record-less dir older than 3 h must be pruned")
+  }
+
+  test("a variant of the current digest survives a same-digest rebuild; an orphan's goes with it") {
+    val d = corpus("embeddings")
+    val gone = corpus("embeddings")
+    val orphan = operators.AnnIndex.build(spark, gone)
+    val orphanForget = operators.AnnIndex.variant(spark, gone, "forget")
+    FileUtils.deleteDirectory(new File(gone))
+    Seq(orphan, orphanForget).foreach(backdate(_, hours4))
+    operators.AnnIndex.build(spark, d)
+    val forget = operators.AnnIndex.variant(spark, d, "forget")
+    assert(operators.AnnIndex.build(spark, d) + "_forget" == forget)
+    assert(new File(forget, "_GRAFT_INDEX_OK").isFile,
+      "a variant of the current digest must survive its rebuild")
+    assert(!new File(orphan).exists && !new File(orphanForget).exists,
+      "an orphan older than 3 h is pruned with its variants")
   }
 }
